@@ -71,7 +71,7 @@ def fingerprint(plan: str) -> dict:
         "windows": n(r"^\(\d+\) Window"),
         "sorts": n(r"^\(\d+\) Sort"),
         "take_ordered": n(r"TakeOrderedAndProject"),
-        "in_memory_scans": n(r"Scan In-memory"),
+        "in_memory_scans": n(r"^\(\d+\) InMemoryTableScan"),
     }
 
 

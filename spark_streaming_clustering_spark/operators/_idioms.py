@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from ._session_cache import session_cached
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in")
 
@@ -58,23 +59,16 @@ MINHASH_AB = [
 N_BANDS, ROWS_PER_BAND = 8, 2  # 8 bands x 2 rows over the 16-component signature
 
 
-# Signature relation cache: (applicationId, sf_dir) -> persisted DF.
 # The shingle-explode + md5 + 16-min pipeline feeds SEVEN keys
 # (minhash-lsh, -capped, incremental, connected-components, keep-best,
 # pretrain-e2e funnel, plus in-key reuse) — the shared_tf lesson
 # (_text.py): persist ONCE per session, never per call.
-_SIG_CACHE: dict = {}
-
-
+@session_cached
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No distinct on shingles: MIN is duplicate-insensitive, so deduping
     # first would only add a full shuffle of the exploded shingle rows.
     # The md5 is hoisted into a pre-aggregate projection — inside the
     # agg each of the 16 min() expressions would recompute it per row.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _SIG_CACHE.get(key)
-    if sig is not None:
-        return sig
     from ._text import _shingles
 
     sh = _shingles(spark, sf_dir).select("doc_id", _hash28(F.col("sh")).alias("h"))
@@ -82,16 +76,4 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % P_MINHASH).alias(f"m{i}")
         for i, (a, b) in enumerate(MINHASH_AB)
     ]
-    sig = sh.groupBy("doc_id").agg(*aggs).persist()
-    _SIG_CACHE[key] = sig
-    return sig
-
-
-def clear_sig_cache() -> None:
-    """Unpersist and drop all shared signature relations."""
-    for sig in _SIG_CACHE.values():
-        try:
-            sig.unpersist()
-        except Exception:
-            pass
-    _SIG_CACHE.clear()
+    return sh.groupBy("doc_id").agg(*aggs)

@@ -12,24 +12,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from ._session_cache import session_cached
 
 
-_SIMHASH_CACHE: dict = {}
-
-
+@session_cached
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document from token hashes (with multiplicity),
-    persisted once per (SparkContext, sf_dir): THREE sibling bench keys
-    consume the identical signature relation (``dedup_simhash``,
-    ``dedup_simhash_hamming``, and ``dedup_mis_max_retention`` via the
-    Hamming pair graph), each paying the corpus explode + md5 + 32
-    conditional sums again without the cache — the ``_vopt_pref``
-    shared-relation rule (r13-opt; same lifetime contract as
-    ``_idioms._signatures``, cleared by ``clear_simhash_cache``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIMHASH_CACHE.get(key)
-    if hit is not None:
-        return hit
+    session-cached: THREE sibling bench keys consume the identical
+    signature relation (``dedup_simhash``, ``dedup_simhash_hamming``,
+    and ``dedup_mis_max_retention`` via the Hamming pair graph), each
+    paying the corpus explode + md5 + 32 conditional sums again without
+    the cache — the ``_vopt_pref`` shared-relation rule (r13-opt)."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
@@ -44,19 +37,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash = sum(
         F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(0) for b in range(32)
     )
-    sig = sums.select("doc_id", simhash.cast("bigint").alias("simhash")).persist()
-    _SIMHASH_CACHE[key] = sig
-    return sig
-
-
-def clear_simhash_cache() -> None:
-    """Unpersist and drop all shared SimHash signature relations."""
-    for sig in _SIMHASH_CACHE.values():
-        try:
-            sig.unpersist()
-        except Exception:
-            pass
-    _SIMHASH_CACHE.clear()
+    return sums.select("doc_id", simhash.cast("bigint").alias("simhash"))
 
 
 def simhash_oracle() -> str:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from ._session_cache import session_cached
 
 _DK_SHINGLES = """
   SELECT doc_id, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS pos,
@@ -21,45 +22,21 @@ _DK_SHINGLES = """
 """
 
 
-_TF_CACHE: dict = {}
-
-
+@session_cached
 def shared_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, term, tf) term frequencies over ``documents``, persisted
-    ONCE per (SparkContext, sf_dir) and shared by every consumer
-    (tf_idf_topk, bm25_topk): tf feeds both the df re-aggregate and the
-    join-back in each query, and the two queries are usually run in the
-    same session, so a per-call ``persist()`` double-caches an identical
-    subtree (CacheManager "already cached" warning) and leaks one
-    relation per invocation into executor storage.
-
-    Lifetime contract: the cached relation lives until
-    ``clear_tf_cache()`` (or session stop).  At 100 TB the analogous
-    decision is writing tf to a table once and reading it from both
-    queries; MEMORY_AND_DISK is the session-scale analogue.
+    """(doc_id, term, tf) term frequencies over ``documents``, shared by
+    every consumer (tf_idf_topk, bm25_topk): tf feeds both the df
+    re-aggregate and the join-back in each query, and the two queries
+    are usually run in the same session, so a per-call ``persist()``
+    double-caches an identical subtree and leaks one relation per
+    invocation into executor storage.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tf = _TF_CACHE.get(key)
-    if tf is not None:
-        return tf
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.explode(F.regexp_extract_all("text", F.lit("[a-z]+"), 0)).alias("term"),
     )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")).persist()
-    _TF_CACHE[key] = tf
-    return tf
-
-
-def clear_tf_cache() -> None:
-    """Unpersist and drop all shared tf relations (test/bench hygiene)."""
-    for tf in _TF_CACHE.values():
-        try:
-            tf.unpersist()
-        except Exception:
-            pass
-    _TF_CACHE.clear()
+    return toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def _shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:

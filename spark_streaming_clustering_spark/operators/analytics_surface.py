@@ -52,6 +52,7 @@ from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
 from .registry import register, register_plan_proxy
+from ._session_cache import session_cached
 
 # ==========================================================================
 # sessionize_events
@@ -873,23 +874,16 @@ PR_SCALE = 1_000_000  # rank unit: 1.0 == 1e6 micro-rank
 PR_TOPK = 20
 
 
-_TRADE_CACHE: dict = {}
-
-
+@session_cached
 def _trade_edges(spark: SparkSession, sf_dir: str):
-    """Symmetric customer-supplier trade edges + out-degrees, persisted
-    once per (SparkContext, sf_dir): the unrolled PageRank references
-    the edge list in EVERY iteration, and without a persist the
-    orders ⋈ lineitem ⋈ distinct subtree replans per reference (72
-    parquet scans in the 4-iteration plan before this cache) — at
-    100 TB, re-deriving the graph per iteration is the difference
-    between an iterative algorithm and a re-scan storm.  Same
-    lifetime contract as ``_copurchase_edges`` / ``_text.shared_tf``.
+    """Symmetric customer-supplier trade edges + out-degrees, both
+    session-cached: the unrolled PageRank references the edge list in
+    EVERY iteration, and without a persist the orders ⋈ lineitem ⋈
+    distinct subtree replans per reference (72 parquet scans in the
+    4-iteration plan before this cache) — at 100 TB, re-deriving the
+    graph per iteration is the difference between an iterative
+    algorithm and a re-scan storm.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TRADE_CACHE.get(key)
-    if hit is not None:
-        return hit
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -900,14 +894,11 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
         )
         .distinct()
     )
-    edges = (
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-        .persist()
+    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    _TRADE_CACHE[key] = (edges, deg)
-    return edges, deg
+    # persisted in tuple order, so deg's cached plan reads cached edges
+    return edges, edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 
 
 def pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,32 +1000,22 @@ register("pagerank_trade", pagerank_trade, _pagerank_oracle())
 # pagerank_trade is bipartite and hence triangle-free by construction).
 
 
-_EDGE_CACHE: dict = {}
-
-
+@session_cached
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct canonical (a < b) part co-purchase edges, persisted once
-    per (SparkContext, sf_dir) and shared by both graph keys — the
-    triangle query references the edge list three times and BFS twice,
-    so a per-call persist would leak one cached relation per invocation
-    (same lifetime contract as ``_text.shared_tf``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    e = _EDGE_CACHE.get(key)
-    if e is not None:
-        return e
+    """Distinct canonical (a < b) part co-purchase edges, session-cached
+    and shared by both graph keys — the triangle query references the
+    edge list three times and BFS twice, so a per-call persist would
+    leak one cached relation per invocation."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     x, y = li.alias("x"), li.alias("y")
-    e = (
+    return (
         x.join(y, "l_orderkey")
         .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
         .select(
             F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
         )
         .distinct()
-        .persist()
     )
-    _EDGE_CACHE[key] = e
-    return e
 
 
 _DK_COPURCHASE = """

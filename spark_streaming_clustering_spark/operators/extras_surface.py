@@ -111,6 +111,7 @@ from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
 from .registry import register, register_plan_proxy
+from ._session_cache import session_cached
 
 
 # --------------------------------------------------------------------------
@@ -1338,49 +1339,25 @@ register(
 
 _PPJ_TNUM, _PPJ_TDEN = 1, 2  # Jaccard threshold tau = TNUM/TDEN = 1/2
 
-# Ranked-token relation cache: (applicationId, sf_dir) -> persisted DF.
 # The shingle-distinct + df-join + per-doc windows subtree is consumed
 # FOUR times inside one ppjoin call (both prefix sides, both
 # verification sides); without the shared_tf/_signatures session-cache
 # pattern the static plan re-derives it per consumer (8 corpus scans).
-_PPJ_TOK_CACHE: dict = {}
-
-
+@session_cached
 def _ppj_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh, pos, n): each doc's distinct 3-shingles ordered
     rarest-first by (global document frequency, shingle) — a total
     order, so the per-doc prefix is well-defined without materializing
-    a global rank; both windows are PARTITIONED BY doc_id.  Persisted
-    once per (session, sf_dir), the shared_tf lesson (_text.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tok = _PPJ_TOK_CACHE.get(key)
-    if tok is not None:
-        return tok
+    a global rank; both windows are PARTITIONED BY doc_id."""
     sh = _shingles(spark, sf_dir).select("doc_id", "sh").distinct()
     dfr = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     w_doc = Window.partitionBy("doc_id")
-    tok = (
-        sh.join(dfr, "sh")
-        .select(
-            "doc_id",
-            "sh",
-            F.row_number().over(w_doc.orderBy("df", "sh")).alias("pos"),
-            F.count(F.lit(1)).over(w_doc).alias("n"),
-        )
-        .persist()
+    return sh.join(dfr, "sh").select(
+        "doc_id",
+        "sh",
+        F.row_number().over(w_doc.orderBy("df", "sh")).alias("pos"),
+        F.count(F.lit(1)).over(w_doc).alias("n"),
     )
-    _PPJ_TOK_CACHE[key] = tok
-    return tok
-
-
-def clear_ppj_cache() -> None:
-    """Unpersist and drop all shared ranked-token relations."""
-    for tok in _PPJ_TOK_CACHE.values():
-        try:
-            tok.unpersist()
-        except Exception:
-            pass
-    _PPJ_TOK_CACHE.clear()
 
 
 def ppjoin_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2374,22 +2351,15 @@ _VOPT_B = 4  # histogram buckets; the DP unrolls B-1 = 3 join levels
 _VOPT_CELL = 100_000  # cents per value cell ($1000) — bounds the domain M
 _VOPT_PACK = 1_000_000  # argmin pack modulus: M << 1e6 by construction
 
-# Prefix-sum relation cache: (applicationId, sf_dir) -> persisted DF.
 # The DP consumes the M-row (i, v, p, pp, e1) relation on BOTH sides of
 # every unrolled level plus the backtrack joins; without the session
 # cache the static plan re-derives the orders scan per consumer
 # (measured: 43 scans — the _ppj_tok lesson, 5th shared relation).
-_VOPT_PREF_CACHE: dict = {}
-
-
+@session_cached
 def _vopt_pref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(i, v, p, pp, e1): $1000-cell frequencies with 1-indexed rank,
     prefix sums P = cum f and PP = cum f^2 in DECIMAL(38,0), and the
     closed-form one-bucket cost e1(i) = SSE(0..i] in micros."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pref = _VOPT_PREF_CACHE.get(key)
-    if pref is not None:
-        return pref
     g = (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -2403,35 +2373,17 @@ def _vopt_pref(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_ord = Window.orderBy("v")
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pref = (
-        g.select(
-            F.row_number().over(w_ord).cast("bigint").alias("i"),
-            "v",
-            F.sum("f").over(w_cum).cast("decimal(38,0)").alias("p"),
-            F.sum(F.col("f").cast("decimal(38,0)") * F.col("f"))
-            .over(w_cum)
-            .alias("pp"),
-        )
-        .withColumn(
-            "e1",
-            F.expr(
-                "CAST(pp * 1000000 - (p * p * 1000000) div i AS DECIMAL(38,0))"
-            ),
-        )
-        .persist()
+    return g.select(
+        F.row_number().over(w_ord).cast("bigint").alias("i"),
+        "v",
+        F.sum("f").over(w_cum).cast("decimal(38,0)").alias("p"),
+        F.sum(F.col("f").cast("decimal(38,0)") * F.col("f"))
+        .over(w_cum)
+        .alias("pp"),
+    ).withColumn(
+        "e1",
+        F.expr("CAST(pp * 1000000 - (p * p * 1000000) div i AS DECIMAL(38,0))"),
     )
-    _VOPT_PREF_CACHE[key] = pref
-    return pref
-
-
-def clear_vopt_cache() -> None:
-    """Unpersist and drop all shared V-optimal prefix relations."""
-    for pref in _VOPT_PREF_CACHE.values():
-        try:
-            pref.unpersist()
-        except Exception:
-            pass
-    _VOPT_PREF_CACHE.clear()
 
 
 def v_optimal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2677,25 +2629,12 @@ _MRK_CHANGED = 1009  # vintage B: orderkeys % 1009 == 0 get +1 cent
 _MRK_DELETED = 997  # vintage B: orderkeys % 997 == 0 are absent
 _MRK_RANGE = 4_000  # orderkeys per leaf range cell
 
-# Leaf checksum relation cache: (applicationId, sf_dir, vintage) ->
-# persisted DF.  Each vintage's leaves feed the range diff, the Merkle
-# fold AND the semi-join's re-derivation of the fold; uncached, the
-# static plan re-scans orders per consumer (measured 6 scans — the
-# protocol's whole point is ONE scan per replica).  Bounded:
-# #partitions x #ranges rows.
-_MRK_LEAF_CACHE: dict = {}
-
-
-def clear_merkle_cache() -> None:
-    """Unpersist and drop all shared Merkle leaf relations."""
-    for df in _MRK_LEAF_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _MRK_LEAF_CACHE.clear()
-
-
+# Each vintage's leaves feed the range diff, the Merkle fold AND the
+# semi-join's re-derivation of the fold; uncached, the static plan
+# re-scans orders per consumer (measured 6 scans — the protocol's
+# whole point is ONE scan per replica).  Bounded: #partitions x
+# #ranges rows.
+@session_cached
 def _merkle_leaves(spark: SparkSession, sf_dir: str, vintage_b: bool) -> DataFrame:
     """Leaf checksum relation of one ``orders`` vintage at the
     (partition = order year, range = orderkey div {rng}) grain:
@@ -2704,12 +2643,8 @@ def _merkle_leaves(spark: SparkSession, sf_dir: str, vintage_b: bool) -> DataFra
     o_orderkey % {chg} == 0, rows deleted where o_orderkey % {del_} ==
     0 — applied in the INTEGER cents domain (a float price nudge would
     quantize engine-divergently).  Same canonicalization + md5-prefix28
-    row hash as ``table_content_checksum``.  Persisted once per
-    (session, sf_dir, vintage) — one scan per replica."""
-    key = (spark.sparkContext.applicationId, sf_dir, vintage_b)
-    cached = _MRK_LEAF_CACHE.get(key)
-    if cached is not None:
-        return cached
+    row hash as ``table_content_checksum``.  Session-cached per
+    vintage — one scan per replica."""
     o = load_table(spark, sf_dir, "orders")
     cents = F.expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)")
     if vintage_b:
@@ -2738,7 +2673,7 @@ def _merkle_leaves(spark: SparkSession, sf_dir: str, vintage_b: bool) -> DataFra
         16,
         10,
     ).cast("bigint")
-    leaves = (
+    return (
         o.select(
             F.year("o_orderdate").cast("string").alias("pk"),
             F.expr(f"o_orderkey div {_MRK_RANGE}").cast("bigint").alias(
@@ -2752,10 +2687,7 @@ def _merkle_leaves(spark: SparkSession, sf_dir: str, vintage_b: bool) -> DataFra
             F.sum("h").cast("bigint").alias("hsum"),
             F.expr("bit_xor(h)").cast("bigint").alias("hxor"),
         )
-        .persist()
     )
-    _MRK_LEAF_CACHE[key] = leaves
-    return leaves
 
 
 _merkle_leaves.__doc__ = _merkle_leaves.__doc__.format(
@@ -3370,69 +3302,36 @@ register("zone_map_skip_stats", zone_map_skip_stats, _zms_oracle())
 # (theil_sen + mann_kendall: 5 static consumers), the daily
 # events-revenue series (acf + runs test + ewma: 5), the order x
 # brand basket presence (assoc_rules: 4), and the per-user event
-# count relation (misra_gries: 6).  All cleared in test_plan_drift's
-# _clear_shared_caches.
-_STATS_REL_CACHE: dict = {}
-
-
-def clear_stats_rel_caches() -> None:
-    """Unpersist and drop the shared month/day/basket relations."""
-    for df in _STATS_REL_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _STATS_REL_CACHE.clear()
-
-
-def _cached_rel(spark: SparkSession, sf_dir: str, name: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _STATS_REL_CACHE.get(key)
-    if cached is None:
-        cached = build().persist()
-        _STATS_REL_CACHE[key] = cached
-    return cached
-
-
+# count relation (misra_gries: 6).
+@session_cached
 def _month_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(x, y): month index -> order revenue cents, persisted once."""
-    return _cached_rel(
-        spark,
-        sf_dir,
-        "month_rev",
-        lambda: (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                F.expr("year(o_orderdate) * 12 + month(o_orderdate)")
-                .cast("bigint")
-                .alias("x"),
-                F.expr(
-                    "cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-                ).alias("cents"),
-            )
-            .groupBy("x")
-            .agg(F.sum("cents").cast("bigint").alias("y"))
-        ),
+    """(x, y): month index -> order revenue cents."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            F.expr("year(o_orderdate) * 12 + month(o_orderdate)")
+            .cast("bigint")
+            .alias("x"),
+            F.expr("cast(floor(o_totalprice * 100 + 0.5) as bigint)").alias(
+                "cents"
+            ),
+        )
+        .groupBy("x")
+        .agg(F.sum("cents").cast("bigint").alias("y"))
     )
 
 
+@session_cached
 def _day_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(d, y): date -> events value cents sum, persisted once."""
-    return _cached_rel(
-        spark,
-        sf_dir,
-        "day_rev",
-        lambda: (
-            load_table(spark, sf_dir, "events")
-            .groupBy(F.to_date("ts").alias("d"))
-            .agg(
-                F.sum(
-                    F.expr("cast(floor(value * 100 + 0.5) as bigint)")
-                )
-                .cast("bigint")
-                .alias("y")
-            )
-        ),
+    """(d, y): date -> events value cents sum."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.to_date("ts").alias("d"))
+        .agg(
+            F.sum(F.expr("cast(floor(value * 100 + 0.5) as bigint)"))
+            .cast("bigint")
+            .alias("y")
+        )
     )
 
 
@@ -3527,30 +3426,13 @@ register(
 )
 
 
-# Isotonic prefix relation cache: (applicationId, sf_dir) -> persisted
-# DF.  The M-row (i, v, w, s, cw, cs) relation feeds the window-average
+# The M-row (i, v, w, s, cw, cs) relation feeds the window-average
 # join's BOTH sides plus the final join-back; uncached, the static plan
 # scans events three times (the _vopt_pref lesson, 7th shared relation).
-_ISO_PREF_CACHE: dict = {}
-
-
-def clear_iso_cache() -> None:
-    """Unpersist and drop all shared isotonic prefix relations."""
-    for df in _ISO_PREF_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _ISO_PREF_CACHE.clear()
-
-
+@session_cached
 def _iso_pref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(i, v, w, s, cw, cs): dollar-cell label/weight counts with
     1-indexed rank and DECIMAL(38,0) cumulative sums."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ISO_PREF_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "events").select(
         F.expr("cast(floor(value * 100 + 0.5) as bigint) div 100").alias("v"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
@@ -3560,7 +3442,7 @@ def _iso_pref(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("bigint").alias("s"),
     )
     w_ord = Window.orderBy("v")
-    pref = g.select(
+    return g.select(
         F.row_number().over(w_ord).cast("bigint").alias("i"),
         "v",
         "w",
@@ -3573,9 +3455,7 @@ def _iso_pref(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("decimal(38,0)")
         .alias("cs"),
-    ).persist()
-    _ISO_PREF_CACHE[key] = pref
-    return pref
+    )
 
 
 def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3944,32 +3824,16 @@ _KMV_D = 268_435_456  # hash domain 2^28 (the house md5-prefix28)
 _KMV_NUM = (_KMV_K - 1) * _KMV_D
 
 
-# Distinct (event_type, user, hash) relation cache: (applicationId,
-# sf_dir) -> persisted DF.  Both grains consume it twice each (the
-# hash-rank side and the exact-NDV side); uncached, the static plan
-# scans events four times (8th shared relation, the _vopt_pref rule:
-# a relation a key's own plan consumes >2x must session-cache).
-_KMV_D_CACHE: dict = {}
-
-
-def clear_kmv_cache() -> None:
-    """Unpersist and drop all shared KMV distinct relations."""
-    for df in _KMV_D_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _KMV_D_CACHE.clear()
-
-
+# Distinct (event_type, user, hash) relation: both grains consume it
+# twice each (the hash-rank side and the exact-NDV side); uncached,
+# the static plan scans events four times (8th shared relation, the
+# _vopt_pref rule: a relation a key's own plan consumes >2x must
+# session-cache).
+@session_cached
 def _kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, user_id, v): distinct users per type with the
-    md5-prefix28 hash, persisted once per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KMV_D_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = (
+    md5-prefix28 hash."""
+    return (
         load_table(spark, sf_dir, "events")
         .select("event_type", "user_id")
         .distinct()
@@ -3984,10 +3848,7 @@ def _kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("v"),
             F.col("user_id"),
         )
-        .persist()
     )
-    _KMV_D_CACHE[key] = d
-    return d
 
 
 def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5158,6 +5019,18 @@ register("acf_autocorrelation", acf_autocorrelation, _acf_oracle())
 _AR_MIN_PAIR = 5  # minimum co-occurrence count for an emitted rule
 
 
+@session_cached
+def _ar_pres(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ok, b): distinct (orderkey, brand) basket presence."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("b"))
+        .distinct()
+    )
+
+
 def assoc_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules antecedent -> consequent over order baskets of
     part BRANDS — the market-basket class (Agrawal et al. SIGMOD'93,
@@ -5177,22 +5050,9 @@ def assoc_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cnt_ab * n ~ N^2) run in DECIMAL(38,0) / HUGEINT; both rule
     directions emit from one unordered pair count.
     """
-    def _build_pres() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        return (
-            li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .select(
-                F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("b")
-            )
-            .distinct()
-        )
-
     # 4 static consumers (pair self-join x2, marginals, basket total):
     # session-cache so lineitem is scanned ONCE, not four times
-    pres = _cached_rel(spark, sf_dir, "ar_pres", _build_pres)
+    pres = _ar_pres(spark, sf_dir)
     n_b = pres.agg(
         F.countDistinct("ok").cast("decimal(38,0)").alias("n_baskets")
     )
@@ -6208,6 +6068,17 @@ _MG_K = 8  # counters per summary
 _MG_BUCKETS = 16  # deterministic partial-summary buckets
 
 
+@session_cached
+def _mg_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, c, bkt): per-user event count and its summary bucket."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.col("user_id").alias("u"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .withColumn("bkt", F.expr(f"u % {_MG_BUCKETS}").cast("bigint"))
+    )
+
+
 def misra_gries_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable Misra-Gries heavy-hitter summary of event users — the
     deterministic frequent-items class (Misra & Gries 1982; the MERGE
@@ -6238,17 +6109,7 @@ def misra_gries_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 6 static consumers (rank chain, threshold chain, true-count join
     # back): session-cache so events is scanned ONCE (12th shared
     # relation, the _vopt_pref rule)
-    cnt = _cached_rel(
-        spark,
-        sf_dir,
-        "mg_cnt",
-        lambda: (
-            load_table(spark, sf_dir, "events")
-            .groupBy(F.col("user_id").alias("u"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .withColumn("bkt", F.expr(f"u % {_MG_BUCKETS}").cast("bigint"))
-        ),
-    )
+    cnt = _mg_cnt(spark, sf_dir)
     wb = Window.partitionBy("bkt").orderBy(
         F.col("c").desc(), F.col("u").asc()
     )

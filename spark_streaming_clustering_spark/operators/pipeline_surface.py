@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 from ..functions import vec
 from ..sources.tables import load_table
 from .registry import register, register_plan_proxy
+from ._session_cache import session_cached
 from ._text import _DK_SHINGLES, _shingles, shared_tf  # noqa: F401  (shared shingle/tf relations)
 from ._text import Q_GATE_MICRO, QMICRO_DUCK as _QMICRO_DUCK, QMICRO_SPARK as _QMICRO_SPARK
 
@@ -1134,27 +1135,19 @@ register(
 )
 
 
-# Per-doc token-stats cache: (applicationId, sf_dir) -> persisted DF.
-# The tokenize + doc aggregate feeds text_quality_score itself plus the
-# keep-best survivor pick, the clean-corpus gate and the pretrain-e2e
-# funnel — the shared_tf/_signatures pattern applied a third time.
-_QSTATS_CACHE: dict = {}
-
-
+# Per-doc token stats: the tokenize + doc aggregate feeds
+# text_quality_score itself plus the keep-best survivor pick, the
+# clean-corpus gate and the pretrain-e2e funnel — the
+# shared_tf/_signatures pattern applied a third time.
+@session_cached
 def _quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stats = _QSTATS_CACHE.get(key)
-    if stats is not None:
-        return stats
     tok = _tokens(spark, sf_dir)
-    stats = tok.groupBy("doc_id").agg(
+    return tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tok"),
         F.countDistinct("tok").alias("n_uniq"),
         F.sum(F.length("tok")).alias("sum_len"),
         F.sum(F.when(F.col("tok").isin(*STOPWORDS), 1).otherwise(0)).alias("n_stop"),
-    ).persist()
-    _QSTATS_CACHE[key] = stats
-    return stats
+    )
 
 
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -826,12 +826,14 @@ def test_ppjoin_plan_scans_corpus_at_most_twice(spark, sf_dir):
     subtree per consumer (observed 8 scans pre-cache)."""
     import re
 
+    from spark_streaming_clustering_spark.operators._session_cache import (
+        clear_all,
+    )
     from spark_streaming_clustering_spark.operators.extras_surface import (
-        clear_ppj_cache,
         ppjoin_set_similarity,
     )
 
-    clear_ppj_cache()
+    clear_all()
     plan = formatted_plan(ppjoin_set_similarity(spark, sf_dir))
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) <= 2
 

@@ -8,10 +8,10 @@ artifact) and fails if any key GAINED a shuffle exchange, lost a
 broadcast to a sort-merge join, re-scans a table, or acquired a
 cartesian product.
 
-Cache discipline: the committed sweep runs every key cold
-(``_meta.totals.in_memory_scans == 0``), so the shared persisted
-relations (tf, signatures, quality stats) are cleared here first —
-otherwise a pytest ordering that happens to warm them would hide real
+Cache discipline: the committed sweep starts in a fresh session with
+an empty CacheManager, so every session-cached relation is cleared
+here first (``clear_all``) and the CacheManager is asserted empty —
+otherwise a pytest ordering that happens to warm one would hide real
 plan nodes behind InMemoryTableScans and diff against the artifact.
 
 Improvements (fewer shuffles/scans) do NOT fail; regenerate PLANS.json
@@ -26,6 +26,7 @@ import os
 
 import pytest
 
+from spark_streaming_clustering_spark.operators._session_cache import clear_all
 from spark_streaming_clustering_spark.operators.registry import PLAN_PROXIES, QUERIES
 from spark_streaming_clustering_spark.plans import formatted_plan
 from tests.conftest import SF_ORACLE
@@ -43,39 +44,6 @@ def _plan_audit_module():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
-
-
-def _clear_shared_caches() -> None:
-    from spark_streaming_clustering_spark.operators import pipeline_surface
-    from spark_streaming_clustering_spark.operators._idioms import clear_sig_cache
-    from spark_streaming_clustering_spark.operators._simhash import (
-        clear_simhash_cache,
-    )
-    from spark_streaming_clustering_spark.operators._text import clear_tf_cache
-    from spark_streaming_clustering_spark.operators.extras_surface import (
-        clear_iso_cache,
-        clear_kmv_cache,
-        clear_merkle_cache,
-        clear_ppj_cache,
-        clear_stats_rel_caches,
-        clear_vopt_cache,
-    )
-
-    clear_sig_cache()
-    clear_simhash_cache()
-    clear_tf_cache()
-    clear_ppj_cache()
-    clear_vopt_cache()
-    clear_merkle_cache()
-    clear_iso_cache()
-    clear_kmv_cache()
-    clear_stats_rel_caches()
-    for df in pipeline_surface._QSTATS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    pipeline_surface._QSTATS_CACHE.clear()
 
 
 def _committed():
@@ -99,7 +67,8 @@ def test_shuffle_heaviest_keys_have_not_regressed(spark):
     ][:N_HEAVIEST]
     assert len(heavy) == N_HEAVIEST
 
-    _clear_shared_caches()
+    clear_all()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     regressions = []
     for k in heavy:
         builder = PLAN_PROXIES.get(k, QUERIES[k])

@@ -62,15 +62,15 @@ def test_flagship_plan_shape(spark):
 def test_minhash_lsh_single_pipeline(spark):
     import re
 
-    # The shared signature relation is session-cached (_idioms._SIG_CACHE);
+    # The shared signature relation is session-cached (_idioms._signatures);
     # if an earlier test already materialized it, the plan shows an
     # InMemoryTableScan instead of the parquet scan this test pins.
     # Clear it so the assertion sees the cold-session plan.
-    from spark_streaming_clustering_spark.operators._idioms import (
-        clear_sig_cache,
+    from spark_streaming_clustering_spark.operators._session_cache import (
+        clear_all,
     )
 
-    clear_sig_cache()
+    clear_all()
     plan = _plan(spark, "dedup_minhash_lsh")
     # "(n) Node" detail headers count each physical node exactly once
     scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
