@@ -64,6 +64,23 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS); read as long then convert
         # (tables.load_table) — Spark has no native nanos timestamp type.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Streaming offset/commit/source logs go through Hadoop's FileSystem
+        # API instead of the default FileContext manager.  Without
+        # libhadoop the local FS forks a subprocess per metadata call:
+        # `chmod` on every create and, through FileContext's rename,
+        # `readlink`.  Measured over 25-batch drains: 62-64 forks per
+        # micro-batch with the default, 15-16 with this one, and each of
+        # latestOffset/walCommit/commitOffsets fell from ~30 ms to ~9 ms
+        # (p50, local[2] on a 4-core host).  Commits stay atomic (temp
+        # file + non-overwriting FileSystem.rename on file: and HDFS,
+        # what HDFSMetadataLog needs; Spark's own fallback manager) and
+        # keep their .crc sidecars: `file:` stays the checksummed
+        # LocalFileSystem, so do not swap in RawLocalFileSystem.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

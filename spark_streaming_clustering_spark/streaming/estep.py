@@ -16,8 +16,10 @@ entirely — partials flow straight to the driver (bounded by N^2 per
 partition, N <= ~300).  At 100 TB the same plan holds: the batch scan
 is the only heavy stage and it is embarrassingly parallel.
 
-Latency: a Spark job costs ~200 ms of scheduling on this host, so for
-small micro-batches (the reference's measured regime is ~100 points per
+Latency: even the trainer's ``limit().toPandas()`` probe, one small
+Spark job, costs ~50 ms per batch (``step.self_ms_p50`` in perfbench's
+traced stream run, local[2] on a 4-core host), so for small
+micro-batches (the reference's measured regime is ~100 points per
 100 ms window) the trainer uses ``estep_local`` — the same numpy kernel
 run driver-side with zero Spark jobs — and only falls back to the
 distributed plan when a batch exceeds the small-batch threshold.  The

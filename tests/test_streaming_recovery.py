@@ -1,4 +1,4 @@
-"""Checkpoint recovery: a streaming query stopped mid-stream resumes
+"""Checkpoint recovery: a streaming query killed mid-stream resumes
 from its checkpoint without losing or double-counting data.
 
 This is the fault-tolerance upgrade over the reference (SURVEY.md
@@ -12,16 +12,49 @@ replays.
 
 from __future__ import annotations
 
-import time
+import os
 
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from spark_streaming_clustering_spark.operators.streaming_surface import (
     _replay_event_files,
 )
+from spark_streaming_clustering_spark.sources.points import stream_points
 from spark_streaming_clustering_spark.sources.tables import load_table
+from spark_streaming_clustering_spark.streaming.train import GStreamTrainer
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
+
+
+def _fail_on_second_batch(sink):
+    """Run 1's sink: batch 0 commits, batch 1 raises while in flight, so
+    the query dies mid-stream by construction rather than by racing a
+    ``stop()`` against the replay."""
+
+    def wrapped(df, bid: int) -> None:
+        if bid == 1:
+            raise RuntimeError("injected sink failure on batch 1")
+        sink(df, bid)
+
+    return wrapped
+
+
+def _recording(sink, bids: list[int]):
+    """``sink`` that also records the batch ids it is handed, in order."""
+
+    def wrapped(df, bid: int) -> None:
+        bids.append(bid)
+        sink(df, bid)
+
+    return wrapped
+
+
+def _await_injected_failure(q) -> None:
+    with pytest.raises(StreamingQueryException, match="injected sink failure"):
+        q.awaitTermination(120)
 
 
 def _start(spark, in_dir, ckpt, sink):
@@ -49,22 +82,16 @@ def test_checkpoint_recovery_no_loss_no_dupes(spark, sf_dir):
     def sink(df, bid: int) -> None:
         seen[bid] = {r.event_id for r in df.select("event_id").collect()}
 
-    # Run 1: kill the query as soon as at least one batch committed —
-    # mid-stream, before the 4-file replay completes.
-    q = _start(spark, in_dir, ckpt, sink)
-    deadline = time.time() + 120
-    while not seen and time.time() < deadline:
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination(60)
-    assert seen, "first run committed no batch within 120s"
-    ids_run1 = set().union(*seen.values())
-    bids_run1 = set(seen)
+    # Run 1 dies mid-stream: batch 0 committed, batch 1 in flight.
+    _await_injected_failure(_start(spark, in_dir, ckpt, _fail_on_second_batch(sink)))
+    assert set(seen) == {0}
 
     # Run 2: same checkpoint — must resume from the committed offset,
-    # reprocessing at most the one in-flight batch (same batchId).
-    q2 = _start(spark, in_dir, ckpt, sink)
+    # replaying the in-flight batch under its original batchId.
+    run2: list[int] = []
+    q2 = _start(spark, in_dir, ckpt, _recording(sink, run2))
     assert q2.awaitTermination(240), "recovery run did not finish"
+    assert run2[0] == 1  # the in-flight batch, same batchId
 
     union = set().union(*seen.values())
     assert union == all_ids  # nothing lost
@@ -72,12 +99,9 @@ def test_checkpoint_recovery_no_loss_no_dupes(spark, sf_dir):
     # partition the id space (no id in two different batchIds)
     total = sum(len(v) for v in seen.values())
     assert total == len(all_ids)
-    # run 2 continued, not restarted from scratch: it appended new
-    # batch ids beyond run 1's high-water mark (unless run 1 already
-    # consumed everything, which maxFilesPerTrigger=1 + early stop
-    # makes effectively impossible with 4 files)
-    if ids_run1 != all_ids:
-        assert max(seen) > max(bids_run1)
+    # run 2 continued, not restarted from scratch: batch 0 was not
+    # re-delivered
+    assert 0 not in run2
 
 
 def test_ddww_recovery_state_survives_restart(spark, sf_dir):
@@ -103,39 +127,24 @@ def test_ddww_recovery_state_survives_restart(spark, sf_dir):
             for r in df.collect()
         ]
 
-    def _run():
+    def _run(batch_fn):
         return (
             _ddww_dedup_stream(spark, in_dir)
-            .writeStream.foreachBatch(sink)
+            .writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
 
-    q = _run()
-    deadline = time.time() + 120
-    while not seen and time.time() < deadline:
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination(60)
-    assert seen, "first run committed no batch within 120s"
-    bids_run1 = set(seen)
+    # Run 1 dies with batch 0's dedup state committed and batch 1 in
+    # flight; run 2 must restore that state and replay batch 1.
+    _await_injected_failure(_run(_fail_on_second_batch(sink)))
+    assert set(seen) == {0}
 
-    q2 = _run()
+    run2: list[int] = []
+    q2 = _run(_recording(sink, run2))
     assert q2.awaitTermination(240), "recovery run did not finish"
-    if max(seen) == max(bids_run1):
-        # run 1 got so far the replay was already complete — the kill
-        # missed the window, so the RESTART path was never exercised
-        # and this degrades to a plain replay-equality test (ADVICE
-        # r12: make that visible instead of silently passing).
-        import warnings
-
-        warnings.warn(
-            "ddww recovery: run 1 completed the whole replay before "
-            "the kill; restart/recovery path NOT exercised this run "
-            f"(run1 batches={sorted(bids_run1)})",
-            stacklevel=1,
-        )
+    assert run2[0] == 1  # the in-flight batch, same batchId
 
     got = sorted(row for rows in seen.values() for row in rows)
     want = sorted(
@@ -145,3 +154,82 @@ def test_ddww_recovery_state_survives_restart(spark, sf_dir):
         .fetchall()
     )
     assert got == want  # nothing lost, nothing double-emitted
+
+
+# --- G-Stream checkpoints through the session's checkpoint file manager ---
+
+_DIM = 2
+_ROWS = 20
+
+
+def _write_point_files(in_dir, first: int, n: int) -> None:
+    """``n`` CSV point files (x0,x1,label,id), numbered from ``first``,
+    with strictly increasing mtimes so the file source replays them in
+    file order."""
+    os.makedirs(in_dir, exist_ok=True)
+    mtime0 = 1_600_000_000
+    for b in range(first, first + n):
+        x = np.random.default_rng(b).normal(b % 3, 0.5, size=(_ROWS, _DIM))
+        path = os.path.join(in_dir, f"b{b:03d}.csv")
+        with open(path, "w") as f:
+            for i, row in enumerate(x):
+                f.write(",".join(repr(float(v)) for v in row) + f",0,{b * _ROWS + i}\n")
+        os.utime(path, (mtime0 + b, mtime0 + b))
+
+
+class _RecordingTrainer(GStreamTrainer):
+    """Trainer that records the batch ids Spark hands ``step``."""
+
+    def __init__(self, spark):
+        super().__init__(spark)
+        seed = pd.DataFrame({"features": [[0.0, 0.0], [1.0, 1.0]]})
+        self.init_from_seed(seed)
+        self.batch_ids: list[int] = []
+
+    def step(self, batch, batch_id=None):
+        self.batch_ids.append(batch_id)
+        super().step(batch, batch_id)
+
+
+def _drain(spark, in_dir: str, ckpt: str) -> _RecordingTrainer:
+    tr = _RecordingTrainer(spark)
+    q = tr.fit_stream(stream_points(spark, in_dir, dim=_DIM), ckpt, trigger_ms=0)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return tr
+
+
+def test_checkpoint_manager_is_filesystem_based_and_keeps_checksums(spark, tmp_path):
+    jvm = spark.sparkContext._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    _write_point_files(in_dir, 0, 2)
+    assert _drain(spark, in_dir, ckpt).batch_ids == [0, 1]
+    for log in ("offsets", "commits"):
+        names = set(os.listdir(os.path.join(ckpt, log)))
+        assert {"0", "1", ".0.crc", ".1.crc"} <= names, (log, names)
+
+
+def test_gstream_restart_over_compacted_source_log(spark, tmp_path):
+    """12 files cross the file source's compacted log (``9.compact`` at
+    the default interval of 10); a fresh trainer restarted on the same
+    checkpoint after 2 more files arrive applies exactly those 2 batches.
+    The model itself is not checkpointed, so only batch accounting is
+    asserted."""
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    _write_point_files(in_dir, 0, 12)
+    run1 = _drain(spark, in_dir, ckpt)
+    assert run1.batch_ids == list(range(12))
+    assert os.path.exists(os.path.join(ckpt, "sources", "0", "9.compact"))
+
+    _write_point_files(in_dir, 12, 2)
+    run2 = _drain(spark, in_dir, ckpt)
+    assert run2.batch_ids == [12, 13]
+    assert run2.kk == 3  # two non-empty batches applied
