@@ -1,10 +1,14 @@
-"""Rows-only query keys for the streaming / G-Stream paths.
+"""Streaming and G-Stream query keys.
 
-These are not SQL-expressible (stateful iterative algorithm; streaming
-semantics), so they register without an oracle: the driver records the
-weaker rows>0 check, and the real verification lives in the pytest
-micro-traces and golden-replay tests (tests/test_gstream.py,
-tests/test_train_golden.py, tests/test_streaming_smoke.py).
+Each key runs a real Structured Streaming query (a file-source replay
+of a fixture table, drained with an availableNow trigger) or a
+deterministic G-Stream run, and registers an oracle: the equivalent
+DuckDB batch query, or a golden constant where the algorithm is not
+SQL-expressible (``gstream_epoch``, ``streaming_file_source``,
+``mllib_kmeans_baseline``).  Every drain goes through ``_drain``, so
+no key can read a sink before its query has finished.  Semantic
+invariants beyond the oracles are pinned in tests/test_gstream.py,
+tests/test_streaming_surface.py and tests/test_streaming_recovery.py.
 """
 
 from __future__ import annotations
@@ -13,8 +17,9 @@ import datetime
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..sources.points import stream_points
 from ..sources.tables import load_table, scratch_dir
@@ -24,19 +29,59 @@ from .registry import register
 from ._session_cache import session_cached
 
 
-def _await_finished(q, timeout: int = 480) -> None:
-    """Block until the availableNow query terminates; raise on timeout.
+def _drain(writer: DataStreamWriter, ckpt: str, timeout: int = 480) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query checkpointed at
+    ``ckpt`` and block until it has drained every available input.
 
     A plain ``awaitTermination(t)`` returns ``False`` on timeout and the
-    caller would silently read a PARTIAL memory-sink table — an
-    intermittent wrong-answer, far worse than a loud failure.  Seen in
-    practice: a loaded session returned 110/148 stream-stream join rows
-    at the 120 s mark."""
+    caller would silently read a PARTIAL sink — an intermittent
+    wrong-answer, far worse than a loud failure.  Seen in practice: a
+    loaded session returned 110/148 stream-stream join rows at the
+    120 s mark.  So on timeout the query is stopped and ``TimeoutError``
+    raised.  Returns the finished query (``lastProgress`` stays
+    readable)."""
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     if not q.awaitTermination(timeout):
         q.stop()
         raise TimeoutError(
             f"streaming query {q.name or q.id} still running after {timeout}s"
         )
+    return q
+
+
+def _drain_to_memory(df: DataFrame, mode: str, name: str, ckpt: str) -> DataFrame:
+    """Drain streaming ``df`` into the memory sink ``name`` with output
+    mode ``mode``; return the sink as a table."""
+    _drain(df.writeStream.outputMode(mode).format("memory").queryName(name), ckpt)
+    return df.sparkSession.table(name)
+
+
+_EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
+
+
+def _events_stream(spark: SparkSession, in_dir: str, schema: str = _EVENTS_SCHEMA) -> DataFrame:
+    """File-source replay of the parquet files in ``in_dir``, one file
+    per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(in_dir)
+
+
+_MTIME0 = 1_600_000_000  # first pinned replay-file mtime (epoch seconds)
+
+
+def _append_pinned(df: DataFrame, in_dir: str, mtime: float) -> None:
+    """Append ``df`` to ``in_dir`` as one parquet file with mtime ``mtime``.
+
+    The file source orders micro-batches by MODIFICATION TIME, and
+    back-to-back writes can collide on mtime under load and flip the
+    replay order (see the streaming_file_source fixture for the
+    observed flake).  Dedup keeps first-seen and the watermarked
+    consumers assume ≈time-ordered batches, so every replay fixture
+    pins the order instead of hoping."""
+    pattern = os.path.join(in_dir, "*.parquet")
+    before = set(glob.glob(pattern))
+    df.coalesce(1).write.mode("append").parquet(in_dir)
+    for p in set(glob.glob(pattern)) - before:
+        os.utime(p, (mtime, mtime))
 
 
 # gstream_epoch is the only driver-paced loop in the headline bench set;
@@ -186,14 +231,13 @@ def streaming_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -229 vs -210 under a saturated host).  Pin strictly increasing
     # mtimes so batch order is a property of the fixture, not of I/O
     # timing.
-    mtime0 = 1_600_000_000
     for b in range(4):  # 4 micro-batch files of 30 points
         path = os.path.join(data_dir, f"batch-{b}.csv")
         with open(path, "w") as f:
             for r in emb[b * 30 : (b + 1) * 30]:
                 vals = ",".join(repr(float(v)) for v in r.embedding)
                 f.write(f"{vals},{r.label},{r.vec_id}\n")
-        os.utime(path, (mtime0 + b, mtime0 + b))
+        os.utime(path, (_MTIME0 + b, _MTIME0 + b))
 
     trainer = GStreamTrainer(spark, GStreamParams(), out_dir=None, nb_wind=4)
     seed = spark.createDataFrame(
@@ -202,13 +246,7 @@ def streaming_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     trainer.init_from_seed(seed)
     stream = stream_points(spark, data_dir, dim=dim, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(lambda df, bid: trainer.step(df, bid))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
+    _drain(stream.writeStream.foreachBatch(lambda df, bid: trainer.step(df, bid)), ckpt)
     rows = trainer.model.snapshot_tables()["prototypes"]
     proto = spark.createDataFrame(rows, "node_id long, vector array<double>")
     return _proto_summary(proto)
@@ -258,32 +296,11 @@ def _replay_event_files(
     # later batches into dropped late data.  The single-partition global
     # window is fine here: this is a bounded test-replay fixture, not a
     # production path.
-    from pyspark.sql import Window
-
     ev = ev.withColumn(
         "b", F.ntile(n_files).over(Window.orderBy("event_id")) - 1
     )
-    import glob as _glob
-
-    mtime0 = 1_600_000_000
     for b in range(n_files):
-        (
-            ev.filter(F.col("b") == b)
-            .drop("b")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(in_dir)
-        )
-        # Pin strictly increasing mtimes per bucket: the file source
-        # orders micro-batches by modification time, and back-to-back
-        # writes can collide on mtime under load (see the
-        # streaming_file_source fixture for the observed flake).  The
-        # drained aggregates are order-insensitive, but dedup keeps
-        # first-seen and the watermarked consumers assume ≈time-ordered
-        # batches — pin the order instead of hoping.
-        for p in _glob.glob(os.path.join(in_dir, "*.parquet")):
-            if os.path.getmtime(p) > mtime0 + b:
-                os.utime(p, (mtime0 + b, mtime0 + b))
+        _append_pinned(ev.filter(F.col("b") == b).drop("b"), in_dir, _MTIME0 + b)
     return in_dir, ckpt
 
 
@@ -301,15 +318,9 @@ def streaming_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     entire time model).
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_winagg_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "10 minutes")
+        _events_stream(spark, in_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -321,16 +332,7 @@ def streaming_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_win_agg")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    return spark.table("stream_win_agg").select(
+    return _drain_to_memory(agg, "complete", "stream_win_agg", ckpt).select(
         F.col("w.start").alias("w_start"), "event_type", "n", "sum_value"
     )
 
@@ -374,15 +376,9 @@ def streaming_window_append_final(spark: SparkSession, sf_dir: str) -> DataFrame
     hash-comparable (the streaming_window_agg precedent).
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_winfinal_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     agg = (
-        stream.withWatermark("ts", _SWAF_DELAY)
+        _events_stream(spark, in_dir)
+        .withWatermark("ts", _SWAF_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -391,16 +387,7 @@ def streaming_window_append_final(spark: SparkSession, sf_dir: str) -> DataFrame
             .alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("streaming_window_append_final")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    return spark.table("streaming_window_append_final").select(
+    return _drain_to_memory(agg, "append", "streaming_window_append_final", ckpt).select(
         F.col("w.start").alias("w_start"), "event_type", "n", "sum_value"
     )
 
@@ -446,13 +433,6 @@ def stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_stateful_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
 
     def update_fn(key, pdf_iter, state):
         n, s = state.get if state.exists else (0, 0.0)
@@ -462,26 +442,17 @@ def stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n, s))
         yield pd.DataFrame({"user_id": [key[0]], "n": [n], "sum_value": [s]})
 
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    out = _events_stream(spark, in_dir).groupBy("user_id").applyInPandasWithState(
         update_fn,
         outputStructType="user_id long, n long, sum_value double",
         stateStructType="n long, sum_value double",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stateful_running_agg")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
     # update mode emits one row per (user, batch-seen); final totals =
     # the row with the largest running n per user.
     return (
-        spark.table("stateful_running_agg")
+        _drain_to_memory(out, "update", "stateful_running_agg", ckpt)
         .groupBy("user_id")
         .agg(F.max(F.struct("n", "sum_value")).alias("m"))
         .select(
@@ -516,28 +487,15 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DISTINCT — which is the DuckDB oracle.
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_dedup_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     deduped = (
-        stream.select("user_id", "event_type", "ts")
+        _events_stream(spark, in_dir)
+        .select("user_id", "event_type", "ts")
         .withWatermark("ts", "60 days")
         .dropDuplicates(["user_id", "event_type"])
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("streaming_dedup")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(deduped, "append", "streaming_dedup", ckpt).select(
+        "user_id", "event_type"
     )
-    _await_finished(q)
-    return spark.table("streaming_dedup").select("user_id", "event_type")
 
 
 register(
@@ -556,8 +514,6 @@ def _ddww_replay_files(spark: SparkSession, sf_dir: str):
     """4 mtime-pinned parquet micro-batch files of the DDWW fixture:
     key (user_id % 20, event_type) appears in batch b iff
     md5-prefix28(K#b) % 4 != 0, every batch-b row at T0 + b*10min."""
-    import glob as _glob
-
     tmp = scratch_dir("gstream_ddww_")
     in_dir, ckpt = os.path.join(tmp, "in"), os.path.join(tmp, "ckpt")
     keys = (
@@ -565,7 +521,6 @@ def _ddww_replay_files(spark: SparkSession, sf_dir: str):
         .select((F.col("user_id") % 20).alias("uid_bucket"), "event_type")
         .distinct()
     )
-    mtime0 = 1_600_000_000
     for b in range(4):
         h = F.conv(
             F.substring(
@@ -580,31 +535,16 @@ def _ddww_replay_files(spark: SparkSession, sf_dir: str):
             16,
             10,
         ).cast("bigint")
-        (
-            keys.filter(h % 4 != 0)
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(F.lit(_DDWW_T0 + b * _DDWW_SPACING_S)),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(in_dir)
+        batch = keys.filter(h % 4 != 0).withColumn(
+            "ts", F.timestamp_seconds(F.lit(_DDWW_T0 + b * _DDWW_SPACING_S))
         )
-        for p in _glob.glob(os.path.join(in_dir, "*.parquet")):
-            if os.path.getmtime(p) > mtime0 + b:
-                os.utime(p, (mtime0 + b, mtime0 + b))
+        _append_pinned(batch, in_dir, _MTIME0 + b)
     return in_dir, ckpt
 
 
 def _ddww_dedup_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """File-source replay -> watermark -> dropDuplicatesWithinWatermark."""
-    stream = (
-        spark.readStream.schema(
-            "uid_bucket long, event_type string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _events_stream(spark, in_dir, "uid_bucket long, event_type string, ts timestamp")
     return stream.withWatermark("ts", _DDWW_DELAY).dropDuplicatesWithinWatermark(
         ["uid_bucket", "event_type"]
     )
@@ -627,7 +567,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     version the probe ran on — ADVICE r12: a Spark upgrade or
     state-store provider change may legitimately shift DDWW's eviction
     lag and flip this oracle with no code change; the version guard in
-    tests/test_round12.py fails with a re-probe instruction instead of
+    tests/test_streaming_surface.py fails with a re-probe instruction instead of
     an opaque hash mismatch.  Probe recipe, fresh local[32] session):
     during batch b rows match against PRE-eviction state, then entries
     with expiry (= emitted row's event time + delay) below the CURRENT
@@ -644,16 +584,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     in_dir, ckpt = _ddww_replay_files(spark, sf_dir)
     deduped = _ddww_dedup_stream(spark, in_dir)
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("streaming_dedup_watermark")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    return spark.table("streaming_dedup_watermark").select(
+    return _drain_to_memory(deduped, "append", "streaming_dedup_watermark", ckpt).select(
         "uid_bucket",
         "event_type",
         F.col("ts").cast("long").alias("ts_epoch_s"),
@@ -691,6 +622,25 @@ register(
 )
 
 
+def _join_side(
+    spark: SparkSession, in_dir: str, event_type: str, prefix: str, delay: str
+) -> DataFrame:
+    """One side of the click/purchase stream-stream joins: its own
+    replay of ``in_dir`` filtered to ``event_type``, columns renamed
+    ``{prefix}_id/_user/_ts`` and watermarked ``delay`` behind
+    ``{prefix}_ts``."""
+    return (
+        _events_stream(spark, in_dir)
+        .filter(F.col("event_type") == event_type)
+        .select(
+            F.col("event_id").alias(f"{prefix}_id"),
+            F.col("user_id").alias(f"{prefix}_user"),
+            F.col("ts").alias(f"{prefix}_ts"),
+        )
+        .withWatermark(f"{prefix}_ts", delay)
+    )
+
+
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream inner join: click events joined to the
     purchases the same user makes within the next 4 hours, both sides
@@ -707,39 +657,14 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle.
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_ssjoin_")
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-
-    def _side(event_type: str, prefix: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", "60 days")
-        )
-
-    joined = _side("click", "l").join(
-        _side("purchase", "r"),
+    joined = _join_side(spark, in_dir, "click", "l", "60 days").join(
+        _join_side(spark, in_dir, "purchase", "r", "60 days"),
         F.expr(
             "l_user = r_user AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL 4 HOURS"
         ),
         "inner",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_stream_join")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    return spark.table("stream_stream_join").select(
+    return _drain_to_memory(joined, "append", "stream_stream_join", ckpt).select(
         "l_id", "r_id", F.col("l_user").alias("user_id")
     )
 
@@ -834,28 +759,13 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_sstatic_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _events_stream(spark, in_dir)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = stream.join(
         F.broadcast(cust), stream.user_id == cust.c_custkey, "inner"
     ).select("event_id", "c_mktsegment", "value")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_static_join")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
     return (
-        spark.table("stream_static_join")
+        _drain_to_memory(joined, "append", "stream_static_join", ckpt)
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -891,16 +801,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-over-union is the engine-neutral equivalent.  The append
     result equals the batch argmax per key — the DuckDB oracle.
     """
-    from pyspark.sql.window import Window
-
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_upsert_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     state: dict[str, DataFrame | None] = {"df": None}
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.desc("ts"), F.desc("event_id")
@@ -916,13 +817,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
+    _drain(_events_stream(spark, in_dir).writeStream.foreachBatch(upsert), ckpt)
     assert state["df"] is not None
     return state["df"].select(
         "user_id",
@@ -966,15 +861,9 @@ def streaming_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions per key via watermark eviction.
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_sesswin_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     agg = (
-        stream.withWatermark("ts", "60 days")
+        _events_stream(spark, in_dir)
+        .withWatermark("ts", "60 days")
         .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -984,16 +873,7 @@ def streaming_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("streaming_session_agg")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    return spark.table("streaming_session_agg")
+    return _drain_to_memory(agg, "complete", "streaming_session_agg", ckpt)
 
 
 register(
@@ -1039,23 +919,14 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_pqsink_")
     out = os.path.join(os.path.dirname(ckpt), "out")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream.filter(F.col("value") > 100.0)
+    _drain(
+        _events_stream(spark, in_dir)
+        .filter(F.col("value") > 100.0)
         .select("event_id", "event_type", "value")
         .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out),
+        ckpt,
     )
-    _await_finished(q)
     back = spark.read.schema("event_id long, event_type string, value double").parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1104,40 +975,15 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose memory is O(skew x rate) instead of O(history).
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_ssoj_")
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-
-    def _side(event_type: str, prefix: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", SSOJ_DELAY)
-        )
-
-    joined = _side("click", "l").join(
-        _side("purchase", "r"),
+    joined = _join_side(spark, in_dir, "click", "l", SSOJ_DELAY).join(
+        _join_side(spark, in_dir, "purchase", "r", SSOJ_DELAY),
         F.expr(
             f"l_user = r_user AND r_ts >= l_ts "
             f"AND r_ts <= l_ts + INTERVAL {SSOJ_WINDOW_H} HOURS"
         ),
         "leftOuter",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_stream_outer_join")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    return spark.table("stream_stream_outer_join").select(
+    return _drain_to_memory(joined, "append", "stream_stream_outer_join", ckpt).select(
         "l_id", "r_id", F.col("l_user").alias("user_id")
     )
 
@@ -1183,24 +1029,10 @@ def streaming_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the type; 4 here) rather than once at drain.
     """
     in_dir, ckpt = _replay_event_files(spark, sf_dir, "gstream_updmode_")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    agg = _events_stream(spark, in_dir).groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n")
     )
-    agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("streaming_update_mode")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
-    hist = spark.table("streaming_update_mode")
+    hist = _drain_to_memory(agg, "update", "streaming_update_mode", ckpt)
     return hist.groupBy("event_type").agg(
         F.max("n").alias("n"),
         F.count(F.lit(1)).alias("n_updates"),
@@ -1246,31 +1078,21 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LAST (mtime-pinned) so its micro-batch drives the final watermark
     # past every real day window's end.
     sentinel = spark.createDataFrame(
-        [(-1, datetime.datetime(2024, 3, 1), -1, "__flush__", 0.0)],
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
+        [(-1, datetime.datetime(2024, 3, 1), -1, "__flush__", 0.0)], _EVENTS_SCHEMA
     )
-    existing = glob.glob(os.path.join(in_dir, "*.parquet"))
-    max_mtime = max(os.path.getmtime(p) for p in existing)
-    sentinel.coalesce(1).write.mode("append").parquet(in_dir)
     # Pin the sentinel strictly AFTER every real file, relative to the
     # replay fixture's actual mtimes (a hard-coded constant would break
     # silently if _replay_event_files changed its mtime scheme or file
     # count — review finding): if the sentinel batch were read early,
     # its 2024-03-01 timestamp would advance the watermark ~30 days and
     # every real row after it would be dropped as late.
-    flush_mtime = max_mtime + 1
-    for p in glob.glob(os.path.join(in_dir, "*.parquet")):
-        if p not in existing:
-            os.utime(p, (flush_mtime, flush_mtime))
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    max_mtime = max(
+        os.path.getmtime(p) for p in glob.glob(os.path.join(in_dir, "*.parquet"))
     )
+    _append_pinned(sentinel, in_dir, max_mtime + 1)
     hourly = (
-        stream.withWatermark("ts", "10 seconds")
+        _events_stream(spark, in_dir)
+        .withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 hour").alias("w1"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n1"),
@@ -1280,17 +1102,8 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = hourly.groupBy(
         F.window(F.window_time("w1"), "1 day").alias("w2"), "event_type"
     ).agg(F.sum("n1").alias("n"), F.sum("sv").alias("sv"))
-    q = (
-        daily.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_chained_win")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
     return (
-        spark.table("stream_chained_win")
+        _drain_to_memory(daily, "append", "stream_chained_win", ckpt)
         .where(F.col("event_type") != "__flush__")
         .select(
             F.col("w2.start").alias("day_start"),
@@ -1341,20 +1154,7 @@ def stream_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
+    _drain(_events_stream(spark, in_dir).writeStream.foreachBatch(write_batch), ckpt)
     # Simulated retry: redeliver batch 0 through the same idempotent
     # writer.  Dynamic overwrite replaces partition batch_id=0; a plain
     # append sink would now hold duplicates and fail the oracle.
@@ -1413,15 +1213,9 @@ def streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.conf.set(chlog_key, "true")
     try:
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         agg = (
-            stream.withWatermark("ts", "10 minutes")
+            _events_stream(spark, in_dir)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -1430,15 +1224,12 @@ def streaming_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
         )
-        q = (
+        q = _drain(
             agg.writeStream.outputMode("complete")
             .format("memory")
-            .queryName("stream_rocksdb_win")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .queryName("stream_rocksdb_win"),
+            ckpt,
         )
-        _await_finished(q)
         prog = q.lastProgress
         ops = (prog or {}).get("stateOperators") or []
         used_rocksdb = any(
@@ -1519,20 +1310,7 @@ def stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             df.unpersist()
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_finished(q)
+    _drain(_events_stream(spark, in_dir).writeStream.foreachBatch(write_batch), ckpt)
     raw = (
         spark.read.parquet(raw_dir)
         .groupBy("event_type")

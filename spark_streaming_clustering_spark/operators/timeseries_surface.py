@@ -335,7 +335,7 @@ def ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: "earliest/latest" order by event_id — ``ts`` is
     strictly monotone in ``event_id`` at every committed fixture
-    (pinned by tests/test_round12.py), so event_id IS the time order
+    (pinned by tests/test_streaming_surface.py), so event_id IS the time order
     with a total tiebreak, and ``min_by``/``max_by`` on a SCALAR key
     are engine-exact (no struct-ordering divergence to worry about).
     Values quantize to integer cents before aggregation.

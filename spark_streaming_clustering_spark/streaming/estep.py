@@ -97,6 +97,24 @@ def _group_partials(x, ids, bmu1, bmu2, d2_min, n_cent):
         )
 
 
+def _merge_partials(parts, dim: int) -> dict[int, PointStats]:
+    """Fold ``(bmu1, bmu2, cnt, sum_d2, sum_vec, ids)`` partials — a
+    ``_group_partials`` tuple or a collected ``PARTIAL_SCHEMA`` row —
+    into the reference's pointStats keyed by winner position.  Partials
+    fold in input order, so the float sums are reproducible."""
+    out: dict[int, PointStats] = {}
+    for b1, b2, cnt, sum_d2, sum_vec, ids in parts:
+        st = out.get(b1)
+        if st is None:
+            st = out[b1] = PointStats(defaultdict(int), 0.0, np.zeros(dim), 0, set())
+        st.bmu2_counts[b2] += cnt
+        st.sum_d2 += sum_d2
+        st.sum_vec = st.sum_vec + np.asarray(sum_vec)
+        st.count += cnt
+        st.ids.update(map(int, ids))
+    return out
+
+
 def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[int, PointStats]:
     """Driver-local E-step over an in-memory batch — zero Spark jobs.
 
@@ -107,21 +125,9 @@ def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[i
     """
     x = np.ascontiguousarray(x, dtype=np.float64)
     bmu1, bmu2, d2_min = _assign_top2(x, centroids)
-    out: dict[int, PointStats] = {}
-    for b1, b2, cnt, sum_d2, sum_vec, id_grp in _group_partials(
-        x, ids, bmu1, bmu2, d2_min, len(centroids)
-    ):
-        st = out.get(b1)
-        if st is None:
-            st = out[b1] = PointStats(
-                defaultdict(int), 0.0, np.zeros(x.shape[1]), 0, set()
-            )
-        st.bmu2_counts[b2] += cnt
-        st.sum_d2 += sum_d2
-        st.sum_vec = st.sum_vec + sum_vec
-        st.count += cnt
-        st.ids.update(int(i) for i in id_grp)
-    return out
+    return _merge_partials(
+        _group_partials(x, ids, bmu1, bmu2, d2_min, len(centroids)), x.shape[1]
+    )
 
 
 def _partial_stats(pdf_iter, centroids_bc, feature_cols=None):
@@ -179,16 +185,4 @@ def compute_point_stats(
     )
     rows = partials.collect()
     centroids_bc.unpersist()
-
-    dim = centroids.shape[1]
-    out: dict[int, PointStats] = {}
-    for r in rows:
-        st = out.get(r.bmu1)
-        if st is None:
-            st = out[r.bmu1] = PointStats(defaultdict(int), 0.0, np.zeros(dim), 0, set())
-        st.bmu2_counts[r.bmu2] += r.cnt
-        st.sum_d2 += r.sum_d2
-        st.sum_vec = st.sum_vec + np.asarray(r.sum_vec)
-        st.count += r.cnt
-        st.ids.update(r.ids)
-    return out
+    return _merge_partials(rows, centroids.shape[1])

@@ -48,9 +48,6 @@ class Prototype:
     ids: set[int]
     node_id: int
 
-    def to_string_proto(self) -> str:
-        return ", ".join(repr(v) for v in self.vector.tolist())
-
 
 @dataclass
 class PointStats:

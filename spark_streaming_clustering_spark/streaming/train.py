@@ -89,8 +89,7 @@ def write_snapshot(spark: SparkSession, model: GStreamModel, out_dir: str, kk: i
         ),
     }
     for family, (rows, schema) in specs.items():
-        df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
-        df.coalesce(1).write.mode("overwrite").parquet(
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"{family}-{kk}")
         )
 
@@ -195,16 +194,13 @@ class GStreamTrainer:
         stream_df: DataFrame,
         checkpoint_dir: str,
         trigger_ms: int = 100,
-        await_seconds: float | None = None,
     ):
         """readStream -> foreachBatch(step); processing-time trigger like
-        the reference's 100 ms batch interval (batchStreamRun.scala:32-34)."""
-        q = (
+        the reference's 100 ms batch interval (batchStreamRun.scala:32-34).
+        Returns the running query; the caller owns its lifetime."""
+        return (
             stream_df.writeStream.foreachBatch(lambda df, bid: self.step(df, bid))
             .option("checkpointLocation", checkpoint_dir)
             .trigger(processingTime=f"{trigger_ms} milliseconds")
             .start()
         )
-        if await_seconds is not None:
-            q.awaitTermination(await_seconds)
-        return q

@@ -88,19 +88,6 @@ def test_rfm_segments_partition_all_users(spark):
         assert max(sizes.values()) - min(sizes.values()) <= 1
 
 
-def test_rocksdb_key_restores_session_conf(spark):
-    """The RocksDB key must leave the session's state-store provider
-    untouched (other streaming keys depend on the default)."""
-    from spark_streaming_clustering_spark.operators.streaming_surface import (
-        streaming_rocksdb_state,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key, "UNSET")
-    streaming_rocksdb_state(spark, SF_SMOKE).collect()
-    assert spark.conf.get(key, "UNSET") == before
-
-
 def test_bitmap_all_row_bounds(spark):
     """The or-merged 'ALL' distinct count is <= the per-type sum and
     >= the max per-type count (set algebra sanity)."""
@@ -133,30 +120,3 @@ def test_bpe_pairs_match_python_counter(spark):
     expect = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:BPE_TOPK]
     got = [(r.pair, r.n) for r in bpe_pair_counts(spark, SF_SMOKE).collect()]
     assert got == expect
-
-
-def test_chained_windows_emit_each_window_once(spark):
-    """Append mode through two chained stateful operators must emit
-    each (day, type) window exactly once — a duplicate row means the
-    first-level aggregate re-emitted into a finalized day window."""
-    from collections import Counter
-
-    from spark_streaming_clustering_spark.operators.streaming_surface import (
-        streaming_chained_windows,
-    )
-
-    rows = streaming_chained_windows(spark, SF_SMOKE).collect()
-    keys = Counter((r.day_start, r.event_type) for r in rows)
-    dups = {k: c for k, c in keys.items() if c > 1}
-    assert not dups
-
-
-def test_idempotent_sink_partitions_and_no_dups(spark):
-    """After the deliberate batch-0 redelivery the sink still holds
-    exactly one copy of every event (n == n_distinct per type)."""
-    from spark_streaming_clustering_spark.operators.streaming_surface import (
-        stream_idempotent_sink,
-    )
-
-    for r in stream_idempotent_sink(spark, SF_SMOKE).collect():
-        assert r.n == r.n_distinct

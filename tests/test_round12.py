@@ -1,91 +1,15 @@
-"""Round-12 batch: bounded-state streaming dedup (DDWW), append-mode
-finalized window aggregation, weighted shortest path.  Oracle equality
-runs in scripts/selfcheck.py; these tests pin the semantic invariants
-and the fixture preconditions the oracles rely on."""
+"""Round-12 batch: weighted shortest path and the analytics keys of
+that round.  Oracle equality runs in scripts/selfcheck.py; these tests
+pin the semantic invariants the oracles rely on.  The round's streaming
+keys (DDWW, append-mode windows) are tested in
+tests/test_streaming_surface.py."""
 
 from __future__ import annotations
 
-import duckdb
 from pyspark.sql import functions as F
 
-from spark_streaming_clustering_spark.operators.streaming_surface import (
-    streaming_dedup_watermark,
-    streaming_window_append_final,
-)
 from tests.util_oracle import compare, duck_con
 from spark_streaming_clustering_spark.operators.registry import ORACLES
-
-
-def test_events_ts_monotone_in_event_id_all_fixtures():
-    """PRECONDITION of every append-mode oracle: the ntile-by-event_id
-    replay produces no late rows because ts is strictly monotone in
-    event_id — at EVERY committed fixture scale (a new fixture must
-    re-establish this or the append-mode sums go incomplete)."""
-    for sf in ("sf0.001", "sf0.01", "sf0.1"):
-        n = duckdb.connect().execute(
-            f"""
-            WITH t AS (SELECT ts, lag(ts) OVER (ORDER BY event_id) AS pts
-                       FROM read_parquet('/root/testdata/{sf}/events.parquet'))
-            SELECT COUNT(*) FROM t WHERE ts < pts
-            """
-        ).fetchone()[0]
-        assert n == 0, f"{sf}: {n} ts inversions break the no-late-rows claim"
-
-
-def test_append_final_emits_each_window_once_and_drops_tail(spark, sf_dir):
-    """Append-mode invariants: (a) every (window, event_type) emitted
-    at most once; (b) the trailing open windows are NOT emitted (the
-    contract is load-bearing: batch agg has strictly more windows);
-    (c) emitted windows all end at or before max_ts - delay."""
-    got = streaming_window_append_final(spark, sf_dir).collect()
-    keys = [(r.w_start, r.event_type) for r in got]
-    assert len(keys) == len(set(keys))  # exactly-once per window
-    con = duck_con(sf_dir)
-    max_ts, n_all = con.execute(
-        """SELECT MAX(ts),
-                  COUNT(DISTINCT (time_bucket(INTERVAL 1 HOUR, ts), event_type))
-           FROM events"""
-    ).fetchone()
-    assert len(got) < n_all  # open tail windows withheld
-    import datetime
-
-    cutoff = max_ts - datetime.timedelta(minutes=37)
-    assert all(
-        r.w_start + datetime.timedelta(hours=1) <= cutoff for r in got
-    )
-
-
-def test_ddww_oracle_pinned_to_probed_spark_version():
-    """ADVICE r12: the streaming_dedup_watermark oracle encodes an
-    empirically probed, version-specific eviction lag of
-    dropDuplicatesWithinWatermark (blocked at e1+1/e1+2, re-emittable
-    at e1+3) measured on pyspark 4.1.2 with the default HDFS-backed
-    state store.  A Spark upgrade may legitimately shift that timing;
-    this guard turns the resulting opaque oracle mismatch into an
-    explicit re-probe instruction."""
-    import pyspark
-
-    assert pyspark.__version__ == "4.1.2", (
-        f"pyspark {pyspark.__version__} != 4.1.2: the DDWW chain-rule "
-        "oracle (operators/streaming_surface.py, streaming_dedup_"
-        "watermark) pins eviction-lag behavior probed on 4.1.2. "
-        "Re-run the 7-min/2-min delay probes described in its "
-        "docstring, update the oracle if the lag changed, then bump "
-        "this pin."
-    )
-
-
-def test_ddww_emission_multiset_matches_oracle(spark, sf_dir):
-    """Driver-shaped oracle compare for the DDWW key (rows + schema +
-    values), mirroring CORRECTNESS — plus the TTL invariant: at least
-    one key is emitted TWICE (eviction actually happened; a vacuous
-    fixture would collapse to streaming_dedup's DISTINCT)."""
-    df = streaming_dedup_watermark(spark, sf_dir)
-    rows = df.collect()
-    compare(df, duck_con(sf_dir), ORACLES["streaming_dedup_watermark"],
-            "streaming_dedup_watermark")
-    keys = [(r.uid_bucket, r.event_type) for r in rows]
-    assert len(keys) > len(set(keys)), "no re-emission: TTL never fired"
 
 
 def test_wsp_oracle_compare(spark, sf_dir):

@@ -1,5 +1,6 @@
 """Semantic invariants of the round-4 batch-2 operators (sources, map
-functions, streaming parquet sink, iterative PageRank)."""
+functions, iterative PageRank); its streaming keys are tested in
+tests/test_streaming_surface.py."""
 
 from __future__ import annotations
 
@@ -46,36 +47,6 @@ def test_pagerank_matches_sequential_emulation(spark):
     assert [(r.node, r.rank) for r in rows] == expect
     for r in rows:
         assert r.kind == ("customer" if r.node % 2 == 0 else "supplier")
-
-
-def test_streaming_parquet_sink_equals_batch(spark):
-    """The drained streaming-parquet roundtrip equals the same
-    filter+aggregate computed in one batch pass."""
-    from pyspark.sql import functions as F
-
-    from spark_streaming_clustering_spark.operators.streaming_surface import (
-        streaming_parquet_sink,
-    )
-    from spark_streaming_clustering_spark.sources.tables import load_table
-
-    got = {
-        r.event_type: (r.n, r.sum_value)
-        for r in streaming_parquet_sink(spark, SF_SMOKE).collect()
-    }
-    exp = {
-        r.event_type: (r.n, r.sum_value)
-        for r in load_table(spark, SF_SMOKE, "events")
-        .filter(F.col("value") > 100.0)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .collect()
-    }
-    assert got == exp and got
 
 
 def test_source_roundtrips_preserve_corpus(spark):
@@ -248,44 +219,6 @@ def test_pmi_scores_are_upper_bounded_by_min_count(spark):
     assert [(r.pmi, r.bg) for r in rows] == expect
     for r in rows:
         assert r.c_ab >= PMI_MIN_COUNT
-
-
-def test_stream_stream_outer_join_closure_rule(spark):
-    """The outer join emits exactly: all inner matches, plus unmatched
-    clicks whose match window closed under the final watermark
-    (min(max click ts, max purchase ts) - delay > click ts + window)."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from spark_streaming_clustering_spark.operators.streaming_surface import (
-        SSOJ_DELAY_MIN,
-        SSOJ_WINDOW_H,
-        stream_stream_outer_join,
-    )
-    from spark_streaming_clustering_spark.sources.tables import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    clicks = [e for e in ev if e.event_type == "click"]
-    purch = [e for e in ev if e.event_type == "purchase"]
-    wm = min(max(e.ts for e in clicks), max(e.ts for e in purch)) - datetime.timedelta(minutes=SSOJ_DELAY_MIN)
-    win = datetime.timedelta(hours=SSOJ_WINDOW_H)
-    expect = set()
-    for c in clicks:
-        matches = [
-            p for p in purch
-            if p.user_id == c.user_id and c.ts <= p.ts <= c.ts + win
-        ]
-        if matches:
-            expect.update((c.event_id, p.event_id) for p in matches)
-        elif wm > c.ts + win:
-            expect.add((c.event_id, None))
-    got = {
-        (r.l_id, r.r_id)
-        for r in stream_stream_outer_join(spark, SF_SMOKE).collect()
-    }
-    assert got == expect and got
-    assert any(r is None for _, r in got)  # outer rows actually present
 
 
 def test_gapfill_interpolate_semantics(spark):
