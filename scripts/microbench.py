@@ -11,6 +11,11 @@ With ``--plans`` it also writes each key's ``explain("formatted")``
 (the registered plan proxy for driver-paced keys, plus the final
 result plan where the key is a single lazy plan) to
 ``OUTDIR/<key>.txt``.
+
+Each sample records, next to its wall time and job count, the driver's
+own Python CPU (``py_cpu_s``, user + system from ``getrusage``) and the
+py4j commands it sent to the JVM (``py4j_calls``), so driver chatter
+shows up beside the Spark-side work.
 """
 
 from __future__ import annotations
@@ -19,13 +24,35 @@ import argparse
 import io
 import json
 import os
+import resource
 import sys
 import time
 from contextlib import redirect_stdout
 
+import py4j.clientserver
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_streaming_clustering_spark.session import get_spark  # noqa: E402
+
+_PY4J_CALLS = 0
+
+
+def _count_py4j_calls() -> None:
+    """Count every command the driver sends to the JVM (this script only)."""
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        global _PY4J_CALLS
+        _PY4J_CALLS += 1
+        return send(self, command)
+
+    py4j.clientserver.ClientServerConnection.send_command = counted
+
+
+def _py_cpu_s() -> float:
+    ru = resource.getrusage(resource.RUSAGE_SELF)
+    return ru.ru_utime + ru.ru_stime
 
 
 def main() -> None:
@@ -39,6 +66,7 @@ def main() -> None:
     from spark_streaming_clustering_spark.operators.registry import QUERIES
     from spark_streaming_clustering_spark.operators.registry import PLAN_PROXIES
 
+    _count_py4j_calls()
     spark = get_spark("microbench")
     keys = [k.strip() for k in args.keys.split(",") if k.strip()]
 
@@ -63,13 +91,17 @@ def main() -> None:
         # silently misreports when warm-up/caching changes the count
         # across samples — e.g. a session-cached relation's first build).
         jobs_per_sample: list[int] = []
+        py_cpu_s: list[float] = []
+        py4j_calls: list[int] = []
         st0 = _steal()
         for i in range(args.n):
             grp = f"mb_{key}_{i}"
             spark.sparkContext.setJobGroup(grp, f"microbench:{key}")
-            t0 = time.monotonic()
+            calls0, cpu0, t0 = _PY4J_CALLS, _py_cpu_s(), time.monotonic()
             _force(QUERIES[key](spark, args.sf_dir))
             samples.append(round(time.monotonic() - t0, 3))
+            py_cpu_s.append(round(_py_cpu_s() - cpu0, 3))
+            py4j_calls.append(_PY4J_CALLS - calls0)
             ids = spark.sparkContext.statusTracker().getJobIdsForGroup(grp)
             jobs_per_sample.append(len(ids))
         st1 = _steal()
@@ -77,10 +109,12 @@ def main() -> None:
         njobs = jobs_per_sample[-1] if jobs_per_sample else None
         out[key] = {"median": med, "samples": samples, "jobs": njobs,
                     "jobs_per_sample": jobs_per_sample,
+                    "py_cpu_s": py_cpu_s, "py4j_calls": py4j_calls,
                     "steal_ticks": (st1 - st0) if st0 is not None else None}
         print(
             f"{key}: median={med} jobs={njobs} steal={out[key]['steal_ticks']}"
-            f" samples={samples} jobs_per_sample={jobs_per_sample}",
+            f" samples={samples} jobs_per_sample={jobs_per_sample}"
+            f" py_cpu_s={py_cpu_s} py4j_calls={py4j_calls}",
             flush=True,
         )
         if args.plans:

@@ -25,7 +25,9 @@ Behavior parity:
 * snapshots written in the reference's own text formats at the B10
   milestone schedule under ``dirSortie`` (batchStream.scala:95-101);
 * the run stops once ``nbWind`` non-empty micro-batches are processed
-  (the reference's JUnit test passes nbWind and kills the context).
+  (the reference's JUnit test passes nbWind and kills the context); a
+  query that dies before that raises its exception, so the process
+  exits non-zero.
 """
 
 from __future__ import annotations
@@ -96,6 +98,12 @@ def run(argv: list[str]) -> GStreamTrainer:
                     "extension",
                     file=sys.stderr,
                 )
+        if trainer.kk <= nb_wind:
+            # the query died before nbWind batches: fail the run, do not
+            # hand back a half-trained model with exit code 0
+            raise query.exception() or RuntimeError(
+                f"stream query stopped after {trainer.kk - 1} of {nb_wind} batches"
+            )
     finally:
         query.stop()
     return trainer

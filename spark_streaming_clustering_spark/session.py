@@ -14,6 +14,11 @@ executors; local[32] only verifies correctness):
 * Arrow on — every Pandas UDF / ``toPandas`` boundary is Arrow-batched.
 * Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle regardless of host timezone.
+* PySpark's DataFrame call-site capture off: it only adds the Python
+  ``file:line`` to error contexts (errors keep their class and message)
+  and costs driver CPU, py4j round trips and memory on every ``Column``
+  built.  ``extra_conf`` can turn it back on, but only for the first
+  session of a process (PySpark reads the flag once per process).
 """
 
 from __future__ import annotations
@@ -81,6 +86,19 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # PySpark's call-site capture (pyspark.errors.utils._with_origin)
+        # runs on F.col and every Column method: a Python stack walk, an
+        # `import IPython` plus a failing `import ipykernel`, and ~10 py4j
+        # round trips (active session, JVM class lookup, conf read, origin
+        # set/clear).  The first capture loads IPython into the driver:
+        # ~540 modules, +26 MB RSS, ~0.3 s CPU.  scripts/microbench.py at
+        # sf0.01 (pyspark 4.1.2, 4-core host), median per warm call, on ->
+        # off: py4j commands 3,032 -> 1,232 for exact_quantile_bisect and
+        # 1,180 -> 485 for merge_into_upsert; driver Python CPU over the
+        # six perfbench mix keys 340 -> 207 ms.  PySpark caches the flag
+        # per process at the first Column built under an active session,
+        # so re-enabling it via extra_conf only works before that point.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

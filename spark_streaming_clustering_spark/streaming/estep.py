@@ -180,9 +180,12 @@ def compute_point_stats(
     spark = batch_df.sparkSession
     centroids_bc = spark.sparkContext.broadcast(np.ascontiguousarray(centroids))
     cols = ["features", "id"] if feature_cols is None else [*feature_cols, "id"]
-    partials = batch_df.select(*cols).mapInPandas(
-        lambda it: _partial_stats(it, centroids_bc, feature_cols), PARTIAL_SCHEMA
-    )
-    rows = partials.collect()
-    centroids_bc.unpersist()
+    try:
+        rows = batch_df.select(*cols).mapInPandas(
+            lambda it: _partial_stats(it, centroids_bc, feature_cols), PARTIAL_SCHEMA
+        ).collect()
+    finally:
+        # destroy, not unpersist: unpersist leaves the broadcast's pickle
+        # file in the driver's temp dir until the session stops
+        centroids_bc.destroy()
     return _merge_partials(rows, centroids.shape[1])

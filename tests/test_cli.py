@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from spark_streaming_clustering_spark import cli
 
 
@@ -39,6 +42,27 @@ def test_cli_end_to_end(spark, tmp_path):
     weights = (snap / "Weights-1" / "part-00000").read_text().strip().splitlines()
     assert all(float(w) > 0 for w in weights)
     assert os.path.exists(snap / "timeUpdates-1" / "part-00000")
+
+
+def test_cli_raises_when_the_query_dies(spark, tmp_path):
+    """A query that dies before nbWind batches fails the run instead of
+    returning a seed-only model (and exit code 0).  Here the snapshot
+    dir's path is taken by a regular file, so the first snapshot
+    raises inside foreachBatch."""
+    data = tmp_path / "data"
+    out = tmp_path / "out"
+    data.mkdir()
+    out.mkdir()
+    (data / "nodes2.txt").write_text("122,199,1,1\n243,434,2,2\n")
+    lines = [f"{100 + i},{200 + i},{i % 2},{i}" for i in range(20)]
+    (data / "batch-0.csv").write_text("\n".join(lines) + "\n")
+    (out / "DS-dead-3").write_text("not a directory\n")
+
+    with pytest.raises(StreamingQueryException, match="NotADirectoryError"):
+        cli.run(
+            ["local[8]", str(data), str(out), "DS-dead", ",", "0.9", "1.2", "3", "3"]
+        )
+    assert not spark.streams.active
 
 
 def test_cli_txt_batch_files(spark, tmp_path):

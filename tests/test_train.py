@@ -391,6 +391,44 @@ def test_estep_columnar_matches_array_path(spark, sf_dir):
         np.testing.assert_allclose(a[k].sum_d2, b[k].sum_d2, rtol=1e-9)
 
 
+def _broadcast_files(spark) -> int:
+    return len(os.listdir(spark.sparkContext._temp_dir))
+
+
+def test_estep_distributed_releases_its_broadcast(spark):
+    """Each distributed E-step broadcasts the centroids to a pickle file
+    in the driver's temp dir; the call must delete it, not leave one file
+    per micro-batch until the session stops."""
+    from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
+
+    batch = spark.range(50).select(
+        F.array(F.col("id").cast("double"), (F.col("id") % 7).cast("double")).alias("features"),
+        "id",
+    )
+    cent = np.array([[0.0, 0.0], [40.0, 3.0]])
+    before = _broadcast_files(spark)
+    for _ in range(3):
+        stats = compute_point_stats(batch, cent)
+    assert sum(p.count for p in stats.values()) == 50
+    assert _broadcast_files(spark) == before
+
+
+def test_estep_distributed_releases_its_broadcast_on_failure(spark):
+    """A batch whose E-step dies in the executor (3-D centroids against
+    2-D points) raises, and still deletes the broadcast file."""
+    from pyspark.errors import PythonException
+
+    from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
+
+    batch = spark.range(10).select(
+        F.array(F.col("id").cast("double"), F.lit(0.0)).alias("features"), "id"
+    )
+    before = _broadcast_files(spark)
+    with pytest.raises(PythonException, match="matmul"):
+        compute_point_stats(batch, np.zeros((2, 3)))
+    assert _broadcast_files(spark) == before
+
+
 def test_watermark_drops_late_data(spark, tmp_path):
     """Event-time semantics the reference lacks entirely: once the
     watermark has advanced past a window and the window was emitted
