@@ -15,7 +15,10 @@ result plan where the key is a single lazy plan) to
 Each sample records, next to its wall time and job count, the driver's
 own Python CPU (``py_cpu_s``, user + system from ``getrusage``) and the
 py4j commands it sent to the JVM (``py4j_calls``), so driver chatter
-shows up beside the Spark-side work.
+shows up beside the Spark-side work.  ``build_jobs`` counts the jobs
+that ran while the key only BUILT its DataFrame, before the noop force
+(eager work in a builder: layout writes, driver-paced loops, schema
+inference); ``jobs`` counts build plus execution.
 """
 
 from __future__ import annotations
@@ -77,6 +80,13 @@ def main() -> None:
     _force(QUERIES["flagship_revenue"](spark, args.sf_dir))
     _force(spark.range(256).repartition(32).mapInPandas(lambda it: it, "id long"))
 
+    sc = spark.sparkContext
+
+    def _group_jobs(grp: str) -> int:
+        # job starts reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return len(sc.statusTracker().getJobIdsForGroup(grp))
+
     def _steal():
         try:
             with open("/proc/stat") as f:
@@ -91,29 +101,33 @@ def main() -> None:
         # silently misreports when warm-up/caching changes the count
         # across samples — e.g. a session-cached relation's first build).
         jobs_per_sample: list[int] = []
+        build_jobs: list[int] = []
         py_cpu_s: list[float] = []
         py4j_calls: list[int] = []
         st0 = _steal()
         for i in range(args.n):
-            grp = f"mb_{key}_{i}"
-            spark.sparkContext.setJobGroup(grp, f"microbench:{key}")
+            build_grp, force_grp = f"mb_{key}_{i}_build", f"mb_{key}_{i}_force"
+            sc.setJobGroup(build_grp, f"microbench:{key}")
             calls0, cpu0, t0 = _PY4J_CALLS, _py_cpu_s(), time.monotonic()
-            _force(QUERIES[key](spark, args.sf_dir))
+            df = QUERIES[key](spark, args.sf_dir)
+            sc.setJobGroup(force_grp, f"microbench:{key}")
+            _force(df)
             samples.append(round(time.monotonic() - t0, 3))
             py_cpu_s.append(round(_py_cpu_s() - cpu0, 3))
             py4j_calls.append(_PY4J_CALLS - calls0)
-            ids = spark.sparkContext.statusTracker().getJobIdsForGroup(grp)
-            jobs_per_sample.append(len(ids))
+            build_jobs.append(_group_jobs(build_grp))
+            jobs_per_sample.append(build_jobs[-1] + _group_jobs(force_grp))
         st1 = _steal()
         med = sorted(samples)[len(samples) // 2]
         njobs = jobs_per_sample[-1] if jobs_per_sample else None
         out[key] = {"median": med, "samples": samples, "jobs": njobs,
-                    "jobs_per_sample": jobs_per_sample,
+                    "jobs_per_sample": jobs_per_sample, "build_jobs": build_jobs,
                     "py_cpu_s": py_cpu_s, "py4j_calls": py4j_calls,
                     "steal_ticks": (st1 - st0) if st0 is not None else None}
         print(
             f"{key}: median={med} jobs={njobs} steal={out[key]['steal_ticks']}"
             f" samples={samples} jobs_per_sample={jobs_per_sample}"
+            f" build_jobs={build_jobs}"
             f" py_cpu_s={py_cpu_s} py4j_calls={py4j_calls}",
             flush=True,
         )

@@ -27,11 +27,16 @@ Behavior parity:
 * the run stops once ``nbWind`` non-empty micro-batches are processed
   (the reference's JUnit test passes nbWind and kills the context); a
   query that dies before that raises its exception, so the process
-  exits non-zero.
+  exits non-zero;
+* a re-run into a ``dirSortie`` whose ``.ckpt-<DSname>`` already holds
+  committed batches fails at once: the model lives in driver memory
+  only, so it cannot resume, and the checkpoint's file-source log marks
+  every input as seen, so the run would wait forever.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -51,6 +56,15 @@ def run(argv: list[str]) -> GStreamTrainer:
      decay_factor, lambda_age, nb_nodes_to_add, nb_wind) = argv
     decay_factor, lambda_age = float(decay_factor), float(lambda_age)
     nb_nodes_to_add, nb_wind = int(nb_nodes_to_add), int(nb_wind)
+    checkpoint_dir = f"{dir_sortie}/.ckpt-{ds_name}"
+    commits = os.path.join(checkpoint_dir, "commits")
+    if os.path.isdir(commits) and os.listdir(commits):
+        raise FileExistsError(
+            f"{checkpoint_dir} holds a previous run's streaming checkpoint; "
+            "the model is not persisted, so the run cannot resume from it "
+            "(and would wait forever for input it has already seen): remove "
+            "that directory or pick another dirSortie or DSname"
+        )
 
     # master passes through verbatim (spark://, yarn, local[n] all work;
     # batchStreamRun.scala:29 hands its arg to SparkConf.setMaster too)
@@ -82,7 +96,7 @@ def run(argv: list[str]) -> GStreamTrainer:
         spark, dir_data, dim=dim, max_files_per_trigger=1, sep=separator,
         glob="*.{csv,txt}", exclude_file="nodes2.txt",
     )
-    query = trainer.fit_stream(stream, checkpoint_dir=f"{dir_sortie}/.ckpt-{ds_name}")
+    query = trainer.fit_stream(stream, checkpoint_dir=checkpoint_dir)
     try:
         waited = 0.0
         warned = False

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, register_views
+from ..sources.tables import load_table, read_stable_parquet, register_views
 from .registry import register
 
 # ==========================================================================
@@ -492,7 +492,7 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .scale_surface import events_by_day_layout
 
-    fact = spark.read.parquet(events_by_day_layout(spark, sf_dir))
+    fact = read_stable_parquet(spark, events_by_day_layout(spark, sf_dir))
     # Calendar dimension: every date of January 2024 tagged with a week
     # index; the query filter is on week_idx, NOT on event_date.
     cal = spark.range(1, 32).select(
@@ -1126,7 +1126,7 @@ def range_partition_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
     return (
-        spark.read.parquet(out)
+        read_stable_parquet(spark, out)
         .groupBy("range_id")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -109,7 +109,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_stable_parquet
 from .registry import register, register_plan_proxy
 from ._session_cache import session_cached
 
@@ -329,7 +329,7 @@ def hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent and the sketch bytes roundtrip parquet
     losslessly.
     """
-    sk = spark.read.parquet(_hll_daily_layout(spark, sf_dir))
+    sk = read_stable_parquet(spark, _hll_daily_layout(spark, sf_dir))
     events = load_table(spark, sf_dir, "events")
     per_type = sk.groupBy("event_type").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"),
@@ -625,7 +625,7 @@ def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the doubled pre-shuffle rows at #bins x #grains per task anyway.
     both = F.explode(F.array(F.col("status"), F.lit("ALL"))).alias("status")
 
-    sk = spark.read.parquet(_quantile_daily_layout(spark, sf_dir))
+    sk = read_stable_parquet(spark, _quantile_daily_layout(spark, sf_dir))
     merged = (
         sk.select(both, "bin", "cnt")
         .groupBy("status", "bin")
@@ -1910,7 +1910,7 @@ def agg_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIDE and emits the equality as ``ivm_equals_recompute``; the
     oracle re-derives the identical integer arithmetic.
     """
-    stored = spark.read.parquet(_ivm_base_agg_layout(spark, sf_dir))
+    stored = read_stable_parquet(spark, _ivm_base_agg_layout(spark, sf_dir))
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", _ivm_cents().alias("cents")
     )
@@ -6487,7 +6487,7 @@ def join_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivm_equals_recompute`` (merged view == from-scratch recompute
     over the post-insert tables, the agg_ivm_delta checked contract).
     """
-    stored = spark.read.parquet(_jivm_base_layout(spark, sf_dir))
+    stored = read_stable_parquet(spark, _jivm_base_layout(spark, sf_dir))
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.year("o_orderdate").cast("bigint").alias("o_year"), _jivm_cents().alias("cents")
     )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_stable_parquet
 from .registry import register
 
 # ==========================================================================
@@ -396,7 +396,7 @@ def merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.bkt for r in src.select("bkt").distinct().collect()
     )
 
-    tgt_aff = spark.read.parquet(v1).filter(F.col("bkt").isin(affected))
+    tgt_aff = read_stable_parquet(spark, v1).filter(F.col("bkt").isin(affected))
     j = tgt_aff.alias("t").join(
         src.alias("s"), F.col("t.c_custkey") == F.col("s.k"), "full_outer"
     )
@@ -426,7 +426,7 @@ def merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged.write.mode("overwrite").partitionBy("bkt").parquet(v2)
 
     # manifest union: untouched v1 files + rewritten v2 files
-    final = spark.read.parquet(v1).filter(
+    final = read_stable_parquet(spark, v1).filter(
         ~F.col("bkt").isin(affected)
     ).unionByName(spark.read.parquet(v2))
     return final.select("c_custkey", "acctbal_cents", "c_mktsegment")

@@ -20,7 +20,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import derived_layout_path, load_table, scratch_dir
+from ..sources.tables import (
+    derived_layout_path,
+    load_table,
+    read_stable_parquet,
+    scratch_dir,
+)
 from .registry import register
 
 _N_BUCKETS = 8
@@ -207,7 +212,7 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, not per-row.
     """
     out = events_by_day_layout(spark, sf_dir)
-    got = spark.read.parquet(out).filter(
+    got = read_stable_parquet(spark, out).filter(
         (F.col("event_date") >= "2024-01-08") & (F.col("event_date") <= "2024-01-14")
     )
     return (

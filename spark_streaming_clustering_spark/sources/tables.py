@@ -6,6 +6,20 @@ Spark-native form: columnar parquet scans with Catalyst predicate
 pushdown and column pruning — at 100 TB these scans are where most of
 the win comes from, so every query selects columns explicitly and
 filters as early as possible.
+
+Stable inputs (the test tables and the ``_SUCCESS``-guarded write-once
+layouts) are read through ``read_stable_parquet``, which pins the
+schema Spark inferred for the same input earlier in the session.  A
+bare ``spark.read.parquet(path)`` runs a one-task Spark job to read a
+file footer for schema inference, on every call: measured on pyspark
+4.1.2 (``local[2]``, 4-core host, sf0.01, warm session) that is 1 job
+and 60-110 ms of process-tree CPU per ``lineitem`` load, against 0 jobs
+and 0-30 ms with the schema given.  ``flagship_revenue`` ran 5 such
+jobs (one per table) just building its DataFrame.  The pinned schema
+is Spark's own inference, re-run when the input's files or a
+schema-affecting parquet conf change, so the plan is the same one a
+bare read gives; translating footers with pyarrow instead would be a
+second type mapper, drifting from Spark on NANOS, INT96 and NTZ.
 """
 
 from __future__ import annotations
@@ -13,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from ..operators._session_cache import session_cached
 
 TABLES = (
     "region",
@@ -47,7 +64,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # render in UTC to match the tz-naive DuckDB oracle.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_stable_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as long (spark.sql.legacy.parquet.nanosAsLong);
         # floor-divide to micros == DuckDB's nanos->micros truncation.
@@ -56,6 +73,56 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # integer div, not '/': nanos ~1.7e18 exceed double's 53-bit mantissa
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+# Session confs that change the schema Spark infers from a parquet
+# footer; their values are part of the schema cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+@session_cached
+def _inferred_schema(
+    spark: SparkSession, parent: str, name: str, fingerprint: tuple, confs: tuple
+) -> StructType:
+    """Spark's own schema for the parquet input ``parent/name`` (one
+    footer-read job).  ``fingerprint`` and ``confs`` only key the cache."""
+    return spark.read.parquet(os.path.join(parent, name)).schema
+
+
+def _input_fingerprint(path: str) -> tuple:
+    """(size, mtime_ns) of a file; for a directory, the sorted
+    (relpath, size, mtime_ns) of every file under it."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    entries = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            entries.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(entries))
+
+
+def read_stable_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema pinned: inferred once
+    per (session, path, input fingerprint, schema confs), so a warm read
+    runs no footer job and a rewritten input or a flipped conf
+    re-infers.  For inputs that outlive the call; an output written and
+    read back once gains nothing here and would only grow the cache.
+    A path that is not on the local file system (or does not exist)
+    falls through to the bare read and Spark's own handling."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    parent, name = os.path.split(os.path.normpath(path))
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    schema = _inferred_schema(spark, parent, name, _input_fingerprint(path), confs)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -68,8 +135,8 @@ def source_fingerprint(sf_dir: str, name: str) -> str:
     silently reuses stale data if the fixture at that path is ever
     regenerated; folding the source fingerprint into the cache path
     invalidates it instead (review finding, round 4)."""
-    st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-    return f"{st.st_size}_{st.st_mtime_ns}"
+    size, mtime_ns = _input_fingerprint(os.path.join(sf_dir, f"{name}.parquet"))
+    return f"{size}_{mtime_ns}"
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

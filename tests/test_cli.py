@@ -5,6 +5,8 @@ an init file, then inspect text snapshots)."""
 from __future__ import annotations
 
 import os
+import re
+import time
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -62,6 +64,27 @@ def test_cli_raises_when_the_query_dies(spark, tmp_path):
         cli.run(
             ["local[8]", str(data), str(out), "DS-dead", ",", "0.9", "1.2", "3", "3"]
         )
+    assert not spark.streams.active
+
+
+def test_cli_rerun_into_a_finished_checkpoint_fails_fast(spark, tmp_path):
+    """A second run into the same dirSortie cannot resume (the model is
+    in memory only) and its file source would see no new input, so it
+    raises at once, naming the checkpoint dir, instead of waiting
+    forever."""
+    data = tmp_path / "data"
+    out = tmp_path / "out"
+    data.mkdir()
+    (data / "nodes2.txt").write_text("122,199,1,1\n243,434,2,2\n")
+    lines = [f"{100 + i},{200 + i},{i % 2},{i}" for i in range(20)]
+    (data / "batch-0.csv").write_text("\n".join(lines) + "\n")
+    argv = ["local[8]", str(data), str(out), "DS-again", ",", "0.9", "1.2", "3", "1"]
+    cli.run(argv)
+
+    t0 = time.monotonic()
+    with pytest.raises(FileExistsError, match=re.escape(f"{out}/.ckpt-DS-again")):
+        cli.run(argv)
+    assert time.monotonic() - t0 < 5.0
     assert not spark.streams.active
 
 

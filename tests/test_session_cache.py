@@ -18,7 +18,12 @@ from spark_streaming_clustering_spark.operators._session_cache import (
 )
 
 # positional args after (spark, sf_dir), per builder that takes more
-_EXTRA_ARGS = {"_merkle_leaves": [(False,), (True,)]}
+_EXTRA_ARGS = {
+    "_merkle_leaves": [(False,), (True,)],
+    # (file name under sf_dir, input fingerprint, schema conf values);
+    # the last two only key the cache
+    "_inferred_schema": [("lineitem.parquet", (0, 0), ())],
+}
 
 
 def test_application_id_only_in_the_primitive():
