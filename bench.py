@@ -550,14 +550,14 @@ def bench_estep_distributed(spark, sf_dir: str, n_nodes: int = 50):
 
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     li = load_table(spark, sf_dir, "lineitem").select(
-        *cols, F.monotonically_increasing_id().alias("id")
+        F.array(*cols).alias("features"), F.monotonically_increasing_id().alias("id")
     )
     n_points = li.count()
     # deterministic centroid grid spanning the data ranges (no RNG)
     grid = np.linspace(0.0, 1.0, n_nodes)
     cent = np.stack([grid * 50, grid * 100_000, grid, grid * 0.08], axis=1)
     t0 = time.monotonic()
-    stats = compute_point_stats(li, cent, feature_cols=cols)
+    stats = compute_point_stats(li, cent)
     dt = time.monotonic() - t0
     assert sum(s.count for s in stats.values()) == n_points
     return dt, n_points / dt

@@ -166,45 +166,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 #   atexit removal, so even a single session leaves /tmp clean.
 
 _SESSION_TMP_PATHS: set[str] = set()
-_FLAT_SCHEME_SWEPT = False
-
-
-def _sweep_old_flat_layouts(live_app_id: str) -> None:
-    """One-time reclaim of layouts that PRE-DATE the per-prefix nesting
-    (review finding r7): earlier sessions wrote directly under the tmp
-    root as ``{prefix}_{appId}_{sfTag}[_{fingerprint}]``, which the
-    nested prune never visits, so they leak until tmp cleanup.  The
-    match is anchored on the local-mode appId core (``local-<millis>``)
-    plus an sf tag — the two components every flat-scheme name carried —
-    and skips the live session's own appId for safety.  An mtime age
-    guard (>1h) limits reclamation to genuinely stale layouts: the
-    appId check only protects THIS process, so without it a concurrent
-    session still on the pre-nesting code could lose live layouts
-    mid-run (ADVICE r8; single-host sequential usage is the documented
-    protocol, the guard makes the blast radius zero either way)."""
-    import re
-    import shutil
-    import tempfile
-    import time
-
-    global _FLAT_SCHEME_SWEPT
-    if _FLAT_SCHEME_SWEPT:
-        return
-    _FLAT_SCHEME_SWEPT = True
-    root = tempfile.gettempdir()
-    flat_re = re.compile(r"^\w+_local-\d{10,}_\w*sf\d\w*$")
-    min_age_sec = 3600.0
-    now = time.time()
-    for name in os.listdir(root):
-        p = os.path.join(root, name)
-        if not (os.path.isdir(p) and flat_re.match(name) and live_app_id not in name):
-            continue
-        try:
-            age = now - os.path.getmtime(p)
-        except OSError:
-            continue
-        if age > min_age_sec:
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def _cleanup_session_tmp() -> None:
@@ -248,7 +209,6 @@ def derived_layout_path(
     # prune rmtree a live "events_by_day_..." layout; appIds themselves
     # may contain underscores on YARN, so anchoring that slot is not
     # delimiter-safe either).
-    _sweep_old_flat_layouts(spark.sparkContext.applicationId)
     fam_dir = os.path.join(tempfile.gettempdir(), "spark_graft_layouts", prefix)
     os.makedirs(fam_dir, exist_ok=True)
     parts = [spark.sparkContext.applicationId, tag]

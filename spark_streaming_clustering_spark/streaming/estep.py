@@ -39,6 +39,7 @@ from collections import defaultdict
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .gstream_model import PointStats
 
@@ -130,23 +131,23 @@ def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[i
     )
 
 
-def _partial_stats(pdf_iter, centroids_bc, feature_cols=None):
+def _partial_stats(pdf_iter, centroids_bc):
     """Executor side: vectorized top-2 assignment + partial aggregation.
 
-    ``feature_cols``: when the features arrive as separate scalar
-    columns (the columnar fast path), build the matrix with a cheap
-    2-D ``to_numpy`` instead of np.stack over per-row Python lists —
-    Arrow hands scalar columns over as contiguous buffers, while an
-    array<double> column materializes one object per row.
+    Each batch holds one scalar double column per dimension, then
+    ``id``: the matrix is a cheap 2-D ``to_numpy`` over contiguous Arrow
+    buffers, where an array<double> column would materialize one Python
+    object per row.
     """
     cent = centroids_bc.value  # (n, dim) float64
     for pdf in pdf_iter:
         if len(pdf) == 0:
             continue
-        if feature_cols is not None:
-            x = pdf[list(feature_cols)].to_numpy(dtype=np.float64)
-        else:
-            x = np.stack(pdf["features"].to_numpy()).astype(np.float64)
+        feats = pdf.iloc[:, :-1]
+        # Catalyst folds features[i] past the end of a narrower array(...)
+        # to null: drop the all-null columns so the matmul rejects the
+        # dimension mismatch instead of assigning on NaN distances
+        x = feats.loc[:, feats.notna().any()].to_numpy(dtype=np.float64)
         ids = pdf["id"].to_numpy()
         bmu1, bmu2, d2_min = _assign_top2(x, cent)
         parts = list(_group_partials(x, ids, bmu1, bmu2, d2_min, len(cent)))
@@ -164,25 +165,26 @@ def _partial_stats(pdf_iter, centroids_bc, feature_cols=None):
         )
 
 
-def compute_point_stats(
-    batch_df: DataFrame,
-    centroids: np.ndarray,
-    feature_cols: list[str] | None = None,
-) -> dict[int, PointStats]:
+def _estep_input(batch_df: DataFrame, dim: int) -> DataFrame:
+    """The E-step's input projection: ``features[0] .. features[dim-1]``
+    as scalar columns, then ``id``.  When ``features`` is built with
+    ``array(x0, x1, ...)`` (``sources.points.read_points``), Catalyst
+    folds each ``features[i]`` back to its source column, so the scan
+    feeds Arrow scalar columns and no array is ever built."""
+    return batch_df.select(*(F.col("features")[i] for i in range(dim)), "id")
+
+
+def compute_point_stats(batch_df: DataFrame, centroids: np.ndarray) -> dict[int, PointStats]:
     """Run the E-step for one micro-batch.
 
-    ``batch_df`` needs columns (features array<double>, id long) — or,
-    with ``feature_cols``, one scalar double column per dimension plus
-    ``id`` (the columnar fast path: Arrow ships contiguous buffers
-    instead of per-row lists).  Returns the reference's pointStats
-    keyed by winner position.
+    ``batch_df`` needs columns (features array<double>, id long).
+    Returns the reference's pointStats keyed by winner position.
     """
     spark = batch_df.sparkSession
     centroids_bc = spark.sparkContext.broadcast(np.ascontiguousarray(centroids))
-    cols = ["features", "id"] if feature_cols is None else [*feature_cols, "id"]
     try:
-        rows = batch_df.select(*cols).mapInPandas(
-            lambda it: _partial_stats(it, centroids_bc, feature_cols), PARTIAL_SCHEMA
+        rows = _estep_input(batch_df, centroids.shape[1]).mapInPandas(
+            lambda it: _partial_stats(it, centroids_bc), PARTIAL_SCHEMA
         ).collect()
     finally:
         # destroy, not unpersist: unpersist leaves the broadcast's pickle

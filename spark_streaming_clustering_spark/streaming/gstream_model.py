@@ -7,8 +7,10 @@ quirks — they shape the golden outputs:
 * node ids are ``len(nodes)+1`` at creation and NOT positionally
   stable after deletions; the graph algebra indexes by position
   (batchStreamModel.scala:57,277).
-* ``upGlobalErrors`` has an inverted guard and is a no-op in practice
-  (batchStreamModel.scala:257) — preserved, not "fixed".
+* ``upGlobalErrors`` (batchStreamModel.scala:254-260) is not ported:
+  its inverted guard makes it a no-op, except right after
+  ``removeIsolatedNodes`` deleted two or more nodes below a winner,
+  where it indexes past the end of ``errors`` and kills the batch.
 * ``addNewNodes`` picks the neighbor f by searching the max neighbor
   error value in the GLOBAL error array (``errors.indexOf``), so an
   equal-valued non-neighbor earlier in the array wins the lookup
@@ -19,8 +21,13 @@ quirks — they shape the golden outputs:
 * edge ages grow exponentially: age = age*lambda + 1 per batch for
   edges incident to a winner (batchStreamModel.scala:154-160); weight
   decay applies to every node every batch (batchStreamModel.scala:146).
-* deletions archive nodes to tombstone stores rather than dropping
-  them (batchStreamModel.scala:239,318).
+* the reference archives deleted nodes, with the ids of every point
+  they ever won, in two tombstone stores (batchStreamModel.scala:239,318).
+  Only the faded ones are an output (OutdatedProtos), so only they are
+  kept, as (vector, node id); isolated nodes are dropped, and no point
+  id is kept.  Driver state is O(nodes^2 + faded x dim), never O(points).
+* the adjacency lives in ``ages`` alone: NaN means "no edge".  The
+  reference's 0/1 ``edges`` matrix is derived from it, read-only.
 
 The per-label update loop runs in ascending-label order (the reference
 iterates in ``collect()`` order, which is partition-dependent; sorting
@@ -33,7 +40,7 @@ work is the E-step (estep.py).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -42,10 +49,10 @@ from .params import GStreamParams
 
 @dataclass
 class Prototype:
-    """Archived node snapshot (reference `prototype`, pointObj.scala:22-26)."""
+    """A faded node (reference `prototype`, pointObj.scala:22-26, without
+    its point ids)."""
 
     vector: np.ndarray
-    ids: set[int]
     node_id: int
 
 
@@ -69,22 +76,17 @@ class GStreamModel:
         self.p = params or GStreamParams()
         self.nodes: np.ndarray = np.zeros((0, 0))  # (n, dim) centroid matrix
         self.node_ids: list[int] = []
-        self.point_ids: list[set[int]] = []
-        self.edges: np.ndarray = np.zeros((0, 0), dtype=np.int64)
-        self.ages: np.ndarray = np.zeros((0, 0))
+        self.ages: np.ndarray = np.zeros((0, 0))  # edge ages, NaN = no edge
         self.errors: np.ndarray = np.zeros(0)
         self.weights: np.ndarray = np.zeros(0)
         self.outdated_nodes: list[Prototype] = []
-        self.isolated_nodes: list[Prototype] = []
 
     # --- B1: init2NodesObj (batchStreamModel.scala:35-43) -----------------
-    def init_two_nodes(self, n1, n2, id_point: int = 1) -> "GStreamModel":
+    def init_two_nodes(self, n1, n2) -> "GStreamModel":
         n1 = np.asarray(n1, dtype=np.float64)
         n2 = np.asarray(n2, dtype=np.float64)
         self.nodes = np.vstack([n1, n2])
         self.node_ids = [1, 2]  # nodes.length+1 at each append
-        self.point_ids = [{id_point}, {id_point + 1}]
-        self.edges = np.array([[0, 1], [1, 0]], dtype=np.int64)
         self.ages = np.array([[np.nan, 0.0], [0.0, np.nan]])
         self.errors = np.zeros(2)
         self.weights = np.ones(2)
@@ -94,13 +96,20 @@ class GStreamModel:
     def n_nodes(self) -> int:
         return self.nodes.shape[0]
 
+    @property
+    def edges(self) -> np.ndarray:
+        """The reference's 0/1 adjacency matrix, derived from ``ages``.
+        Read-only: write an edge by setting its age."""
+        edges = (~np.isnan(self.ages)).astype(np.int64)
+        edges.flags.writeable = False
+        return edges
+
     # --- B2: per-batch orchestrator (batchStreamModel.scala:61-107) -------
     def update(self, point_stats: dict[int, PointStats], kk: int) -> "GStreamModel":
         nb_nodes = self.n_nodes  # captured BEFORE the update (line 73)
         self.update_rule(point_stats)
         self.remove_old_edges()
         self.remove_isolated_nodes()
-        self.up_global_errors(point_stats)
         if nb_nodes > self.p.fading_min_nodes and kk % 3 == 0:
             self.fading()
         self.remove_isolated_nodes()
@@ -111,7 +120,7 @@ class GStreamModel:
 
     # --- helpers ----------------------------------------------------------
     def _neighbors(self, i: int) -> np.ndarray:
-        return np.flatnonzero(self.edges[i] == 1)
+        return np.flatnonzero(~np.isnan(self.ages[i]))
 
     # --- B3: updateRule (batchStreamModel.scala:142-208) ------------------
     def update_rule(self, point_stats: dict[int, PointStats]) -> None:
@@ -124,9 +133,6 @@ class GStreamModel:
             for nb in self._neighbors(label):
                 self.ages[nb, label] = self.ages[nb, label] * self.p.lambda_age + 1.0
                 self.ages[label, nb] = self.ages[nb, label]
-
-            # merge assigned ids (163)
-            self.point_ids[label] |= st.ids
 
             # weighted incremental mean (165-188)
             nominateur = self.weights[label] * self.nodes[label] + st.sum_vec
@@ -151,8 +157,6 @@ class GStreamModel:
             # Scala maxBy returns the first max -> lowest position wins ties
             items = sorted(st.bmu2_counts.items())
             idx_max = max(items, key=lambda kv: kv[1])[0]
-            self.edges[label, idx_max] = 1
-            self.edges[idx_max, label] = 1
             self.ages[label, idx_max] = 0.0
             self.ages[idx_max, label] = 0.0
 
@@ -163,32 +167,19 @@ class GStreamModel:
     def remove_old_edges(self) -> None:
         with np.errstate(invalid="ignore"):
             too_old = self.ages > self.p.max_age  # NaN compares False
-        self.edges[too_old] = 0
         self.ages[too_old] = np.nan
 
     # --- B5: removeIsolatedNodes (batchStreamModel.scala:228-251) ---------
     def remove_isolated_nodes(self) -> None:
-        if self.edges.shape[0] != self.n_nodes or (
-            self.n_nodes > 0 and self.edges.shape[0] != self.edges.shape[1]
+        if self.ages.shape[0] != self.n_nodes or (
+            self.n_nodes > 0 and self.ages.shape[0] != self.ages.shape[1]
         ):
             raise ValueError(
                 "The size of nodes and edges must be equal, edges must be a square matrix"
             )
         for j in range(self.n_nodes - 1, -1, -1):
-            if not self.edges[j].any():
-                self.isolated_nodes.append(
-                    Prototype(self.nodes[j].copy(), set(self.point_ids[j]), self.node_ids[j])
-                )
+            if np.isnan(self.ages[j]).all():
                 self._delete_node(j)
-
-    # --- B6: upGlobalErrors (batchStreamModel.scala:254-260) --------------
-    def up_global_errors(self, point_stats: dict[int, PointStats]) -> None:
-        # The reference's guard `if (this.errors.size < er._1)` is inverted
-        # (labels are valid indices, so it is ~always false): a no-op in
-        # practice.  Preserved verbatim — do NOT "fix".
-        for label, st in point_stats.items():
-            if len(self.errors) < label:
-                self.errors[label] += st.sum_d2  # pragma: no cover (quirk arm)
 
     # --- B7: fading (batchStreamModel.scala:309-327) ----------------------
     def fading(self) -> None:
@@ -197,11 +188,7 @@ class GStreamModel:
         smallest = int(np.argmin(self.weights))  # first min, as minBy
         if self.weights[smallest] < self.p.min_weight:
             self.outdated_nodes.append(
-                Prototype(
-                    self.nodes[smallest].copy(),
-                    set(self.point_ids[smallest]),
-                    self.node_ids[smallest],
-                )
+                Prototype(self.nodes[smallest].copy(), self.node_ids[smallest])
             )
             self._delete_node(smallest)
 
@@ -220,16 +207,12 @@ class GStreamModel:
             f = int(np.flatnonzero(self.errors == max_nb_err)[0])
 
             mid = 0.5 * (self.nodes[q] + self.nodes[f])
-            self._append_node(mid, set(), len(self.node_ids) + 1)
+            self._append_node(mid, len(self.node_ids) + 1)
 
-            self.edges[q, f] = 0
-            self.edges[f, q] = 0
             self.ages[q, f] = np.nan
             self.ages[f, q] = np.nan
             r = self.n_nodes - 1
             for x in (q, f):
-                self.edges[x, r] = 1
-                self.edges[r, x] = 1
                 self.ages[x, r] = 0.0
                 self.ages[r, x] = 0.0
 
@@ -238,14 +221,10 @@ class GStreamModel:
             self.errors[-1] = self.errors[q] + self.errors[f]  # post-scaling
 
     # --- B9: matrix grow/shrink (batchStreamModel.scala:347-381) ----------
-    def _append_node(self, vec: np.ndarray, ids: set[int], node_id: int) -> None:
+    def _append_node(self, vec: np.ndarray, node_id: int) -> None:
         self.nodes = np.vstack([self.nodes, vec])
         self.node_ids.append(node_id)
-        self.point_ids.append(ids)
         n = self.n_nodes
-        edges = np.zeros((n, n), dtype=np.int64)
-        edges[: n - 1, : n - 1] = self.edges
-        self.edges = edges
         ages = np.full((n, n), np.nan)
         ages[: n - 1, : n - 1] = self.ages
         self.ages = ages
@@ -256,18 +235,13 @@ class GStreamModel:
         keep = [i for i in range(self.n_nodes) if i != j]
         self.nodes = self.nodes[keep]
         self.node_ids.pop(j)
-        self.point_ids.pop(j)
-        self.edges = self.edges[np.ix_(keep, keep)]
         self.ages = self.ages[np.ix_(keep, keep)]
         self.weights = np.delete(self.weights, j)
         self.errors = np.delete(self.errors, j)
 
     # --- exports (pointObj.scala:27-46; batchStream.scala:97-101) ---------
-    def to_string_proto(self) -> list[str]:
-        return [", ".join(repr(v) for v in row.tolist()) for row in self.nodes]
-
     def edge_list(self) -> list[tuple[int, int]]:
-        src, dst = np.nonzero(self.edges)
+        src, dst = np.nonzero(~np.isnan(self.ages))
         return [(int(s), int(d)) for s, d in zip(src, dst)]
 
     def snapshot_tables(self) -> dict[str, list[tuple]]:

@@ -49,8 +49,11 @@ def write_snapshot_text(model: GStreamModel, out_dir: str, kk: int,
     so byte parity with the reference's goldens holds only for values
     outside that range — semantic parity is what the replay tests
     assert."""
-    protos = model.to_string_proto()
-    outdated = [", ".join(repr(v) for v in p.vector.tolist()) for p in model.outdated_nodes]
+    def vector_lines(vectors) -> list[str]:
+        return [", ".join(repr(v) for v in vec.tolist()) for vec in vectors]
+
+    protos = vector_lines(model.nodes)
+    outdated = vector_lines(p.vector for p in model.outdated_nodes)
     edges = [
         "ArrayBuffer(" + ", ".join(str(int(v)) for v in row) + ")" for row in model.edges
     ]
@@ -131,7 +134,7 @@ class GStreamTrainer:
             first_two = [seed["features"].iloc[0], seed["features"].iloc[1]]
         else:
             first_two = [r[0] for r in seed.select("features").limit(2).collect()]
-        self.model.init_two_nodes(first_two[0], first_two[1], id_point=1)
+        self.model.init_two_nodes(first_two[0], first_two[1])
         return self
 
     def step(self, batch: DataFrame | pd.DataFrame, batch_id: int | None = None) -> None:

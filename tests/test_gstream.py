@@ -1,25 +1,30 @@
 """Micro-trace unit tests for the G-Stream M-step (SURVEY section 5.2).
 
 Each Tier-B operator checked against hand-computed expectations,
-including the reference quirks (B6 no-op, exponential aging, gate
-boundaries, global-indexOf neighbor pick).
+including the reference quirks (exponential aging, gate boundaries,
+global-indexOf neighbor pick), plus the bound on driver state.
 """
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from spark_streaming_clustering_spark.streaming.gstream_model import (
     GStreamModel,
     PointStats,
+    Prototype,
 )
 from spark_streaming_clustering_spark.streaming.params import GStreamParams
+from spark_streaming_clustering_spark.streaming.train import GStreamTrainer
 
 
 def fresh_model(**over) -> GStreamModel:
     m = GStreamModel(GStreamParams(**over))
-    return m.init_two_nodes([0.0, 0.0], [10.0, 10.0], id_point=1)
+    return m.init_two_nodes([0.0, 0.0], [10.0, 10.0])
 
 
 def stats(bmu2, sum_d2, sum_vec, count, ids) -> PointStats:
@@ -30,7 +35,6 @@ def test_init_two_nodes():
     m = fresh_model()
     assert m.n_nodes == 2
     assert m.node_ids == [1, 2]
-    assert m.point_ids == [{1}, {2}]
     np.testing.assert_array_equal(m.edges, [[0, 1], [1, 0]])
     assert np.isnan(m.ages[0, 0]) and np.isnan(m.ages[1, 1])
     assert m.ages[0, 1] == 0.0 and m.ages[1, 0] == 0.0
@@ -40,7 +44,7 @@ def test_init_two_nodes():
 
 def test_update_rule_one_step_hand_computed():
     """3 points win node 0 (runner-up 1): verify decay, aging, centroid
-    mean, weight, error, edge refresh, id merge against hand math."""
+    mean, weight, error and edge refresh against hand math."""
     m = fresh_model()
     st = {0: stats({1: 3}, sum_d2=14.0, sum_vec=[3.0, 6.0], count=3, ids=[7, 8, 9])}
     m.update_rule(st)
@@ -56,7 +60,6 @@ def test_update_rule_one_step_hand_computed():
     np.testing.assert_allclose(m.nodes[0], [3 / 3.9, 6 / 3.9])
     np.testing.assert_allclose(m.nodes[1], [10.0, 10.0])
     np.testing.assert_allclose(m.errors, [14.0, 0.0])
-    assert m.point_ids[0] == {1, 7, 8, 9}
 
 
 def test_update_rule_aging_is_exponential():
@@ -64,8 +67,7 @@ def test_update_rule_aging_is_exponential():
     # make node 1 the winner with runner-up 0 twice; edge(0,1) ages as
     # age*1.2+1 but is refreshed to 0 each time by the bmu2 edge; to see
     # aging survive, add a third node connected to 1 that never wins.
-    m._append_node(np.array([20.0, 20.0]), set(), 3)
-    m.edges[1, 2] = m.edges[2, 1] = 1
+    m._append_node(np.array([20.0, 20.0]), 3)
     m.ages[1, 2] = m.ages[2, 1] = 0.0
     st = {1: stats({0: 1}, 1.0, [10.0, 10.0], 1, [4])}
     m.update_rule(st)
@@ -76,7 +78,7 @@ def test_update_rule_aging_is_exponential():
 
 def test_update_rule_bmu2_tie_breaks_low_index():
     m = fresh_model()
-    m._append_node(np.array([20.0, 20.0]), set(), 3)
+    m._append_node(np.array([20.0, 20.0]), 3)
     # ties in the runner-up histogram resolve to the lowest position
     # (Scala maxBy returns the first maximum)
     st = {0: stats({1: 2, 2: 2}, 1.0, [1.0, 1.0], 4, [5])}
@@ -106,37 +108,44 @@ def test_remove_old_edges_nan_safe():
     assert m.edges[0, 0] == 0
 
 
-def test_remove_isolated_nodes_archives():
+def test_remove_isolated_nodes_drops_all_nan_rows():
     m = fresh_model()
-    m._append_node(np.array([5.0, 5.0]), {42}, 3)  # isolated (no edges)
+    m._append_node(np.array([5.0, 5.0]), 3)  # isolated: its ages row is all NaN
     m.remove_isolated_nodes()
-    assert m.n_nodes == 2
-    assert len(m.isolated_nodes) == 1
-    assert m.isolated_nodes[0].node_id == 3
-    assert m.isolated_nodes[0].ids == {42}
+    assert m.n_nodes == 2 and m.node_ids == [1, 2]
+    assert not m.outdated_nodes  # isolated nodes are not archived
     # square invariant still holds
     assert m.edges.shape == (2, 2) and m.ages.shape == (2, 2)
 
 
 def test_remove_isolated_nodes_invariant_check():
     m = fresh_model()
-    m.edges = np.zeros((3, 2), dtype=np.int64)
+    m.ages = np.full((3, 2), np.nan)
     with pytest.raises(ValueError, match="square"):
         m.remove_isolated_nodes()
 
 
-def test_up_global_errors_is_noop():
-    m = fresh_model()
-    st = {0: stats({1: 1}, 99.0, [1.0, 1.0], 1, [3])}
-    before = m.errors.copy()
-    m.up_global_errors(st)  # inverted guard (B6): must not change errors
-    np.testing.assert_array_equal(m.errors, before)
+def test_update_survives_isolated_removals_below_the_winner():
+    """The reference's upGlobalErrors (not ported) indexed errors(label)
+    with the winner's pre-removal position: once removeIsolatedNodes
+    deleted two nodes below it, that index ran past the end and the
+    batch died with an IndexError."""
+    m = fresh_model(max_age=250)
+    m._append_node(np.array([20.0, 20.0]), 3)
+    m._append_node(np.array([30.0, 30.0]), 4)
+    m.ages[2, 3] = m.ages[3, 2] = 0.0
+    m.ages[0, 1] = m.ages[1, 0] = 251.0  # over-age: 0 and 1 become isolated
+    st = {3: stats({2: 1}, 2.0, [30.0, 30.0], 1, [5])}
+    m.update(st, kk=1)
+    assert m.node_ids == [3, 4]
+    np.testing.assert_allclose(m.errors, [0.0, 2.0 * 0.99])
+    assert m.ages[0, 1] == 0.0
 
 
 def test_fading_removes_at_most_one():
     m = fresh_model(min_weight=1.0)
-    m._append_node(np.array([5.0, 5.0]), set(), 3)
-    m.edges[0, 2] = m.edges[2, 0] = 1
+    m._append_node(np.array([5.0, 5.0]), 3)
+    m.ages[0, 2] = m.ages[2, 0] = 0.0
     m.weights = np.array([0.2, 0.3, 2.0])
     m.fading()
     assert m.n_nodes == 2  # only the single smallest (node 0) faded
@@ -166,15 +175,14 @@ def test_add_new_nodes_global_indexof_quirk():
     """f is looked up by VALUE in the global error array: an equal-valued
     non-neighbor at a lower position wins (batchStreamModel.scala:272)."""
     m = fresh_model(nb_nodes_to_add=1, alpha_err=0.5)
-    m._append_node(np.array([20.0, 20.0]), set(), 3)
+    m._append_node(np.array([20.0, 20.0]), 3)
     # wire: 0-1 (from init), 1-2; q=1 (max err), neighbors {0,2}
-    m.edges[1, 2] = m.edges[2, 1] = 1
     m.ages[1, 2] = m.ages[2, 1] = 0.0
     # errors: node0=3.0, node1=9.0 (q), node2=3.0; max neighbor err value
     # = 3.0 -> indexOf finds position 0 first (here 0 IS a neighbor, so
     # set node0 NOT a neighbor by cutting 0-1 and wiring 0 elsewhere)
-    m.edges[0, 1] = m.edges[1, 0] = 0
-    m.edges[0, 2] = m.edges[2, 0] = 1  # keep 0 non-isolated
+    m.ages[0, 1] = m.ages[1, 0] = np.nan
+    m.ages[0, 2] = m.ages[2, 0] = 0.0  # keep 0 non-isolated
     m.errors = np.array([3.0, 9.0, 3.0])
     m.add_new_nodes()
     # q=1; neighbors of 1 = {2}; max neighbor err = 3.0; global indexOf
@@ -204,12 +212,9 @@ def _ring_model(n: int, **param_overrides) -> GStreamModel:
     m = GStreamModel(GStreamParams(**param_overrides))
     m.nodes = np.array([[float(i), float(i)] for i in range(n)])
     m.node_ids = list(range(1, n + 1))
-    m.point_ids = [set() for _ in range(n)]
-    m.edges = np.zeros((n, n), dtype=np.int64)
     m.ages = np.full((n, n), np.nan)
     for i in range(n):
         j = (i + 1) % n
-        m.edges[i, j] = m.edges[j, i] = 1
         m.ages[i, j] = m.ages[j, i] = 0.0
     m.weights = np.full(n, 5.0)
     m.errors = np.zeros(n)
@@ -267,12 +272,12 @@ def test_fading_gate_uses_count_captured_before_deletions():
     removal drops it to 100 first."""
     m = _ring_model(101, max_age=250)
     # node 100's ring edges are over-age -> remove_old_edges cuts both,
-    # remove_isolated_nodes archives it -> 100 nodes before the gate
+    # remove_isolated_nodes drops it -> 100 nodes before the gate
     m.ages[100, 0] = m.ages[0, 100] = 251.0
     m.ages[100, 99] = m.ages[99, 100] = 251.0
     m.weights[50] = 0.5
     m.update({}, kk=3)
-    assert len(m.isolated_nodes) == 1 and m.isolated_nodes[0].node_id == 101
+    assert 101 not in m.node_ids
     # fading still fired although only 100 nodes remained at gate time
     assert len(m.outdated_nodes) == 1 and m.outdated_nodes[0].node_id == 51
     assert m.n_nodes == 99
@@ -285,3 +290,38 @@ def test_snapshot_tables_shapes():
     assert set(t["edges"]) == {(0, 1), (1, 0)}
     assert t["weights"][0] == (1, 1.0)
     assert t["outdated_protos"] == []
+
+
+def test_driver_state_is_bounded_by_the_graph():
+    """300 windows of points with never-seen ids: every piece of model
+    state is sized by the node count (the graph is capped near 300
+    nodes), except the faded-node output, which keeps only (vector,
+    node_id) per node; no point id is retained anywhere."""
+    rng = np.random.default_rng(7)
+    tr = GStreamTrainer(None, GStreamParams(), nb_wind=300)
+    pid = 0
+    for kk in range(300):
+        # four blobs drifting across the plane, so old nodes fade
+        centers = np.array([[100.0, 100.0], [900.0, 100.0], [100.0, 900.0], [500.0, 500.0]])
+        centers += kk * np.array([2.0, 2.0])
+        x = centers[rng.integers(0, 4, 100)] + rng.uniform(-60.0, 60.0, (100, 2))
+        batch = pd.DataFrame({"features": list(x), "id": np.arange(pid, pid + 100)})
+        pid += 100
+        if kk == 0:
+            tr.init_from_seed(batch)
+        tr.step(batch)
+    m = tr.model
+    n, dim = m.n_nodes, m.nodes.shape[1]
+    assert m.outdated_nodes, "the drifting stream should fade nodes"
+    for name, value in vars(m).items():
+        if name in ("p", "outdated_nodes"):
+            continue
+        assert isinstance(value, (np.ndarray, list)) and len(value) == n, name
+        if isinstance(value, np.ndarray):
+            assert set(value.shape) <= {n, dim}, (name, value.shape)
+        else:
+            assert all(isinstance(v, int) for v in value), name  # one scalar per node
+    assert [f.name for f in dataclasses.fields(Prototype)] == ["vector", "node_id"]
+    assert all(p.vector.shape == (dim,) for p in m.outdated_nodes)
+    with pytest.raises(ValueError, match="read-only"):
+        m.edges[0, 1] = 0

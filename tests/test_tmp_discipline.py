@@ -9,7 +9,6 @@ scratch_dir must register its mkdtemp the same way."""
 from __future__ import annotations
 
 import os
-import time
 
 from spark_streaming_clustering_spark.sources import tables as T
 
@@ -84,40 +83,6 @@ def test_derived_layout_keeps_own_path_and_same_session_other_sf(
     # re-deriving a returns the identical path and leaves it intact
     assert T.derived_layout_path(spark, "probe3", "/root/testdata/sf0.001", "events") == a
     assert os.path.isdir(a)
-
-
-def test_one_time_sweep_reclaims_old_flat_scheme(spark, sf_dir, tmp_path, monkeypatch):
-    """Layouts from sessions that pre-date the per-prefix nesting live
-    flat under the tmp root ({prefix}_{appId}_{sfTag}...) where the
-    nested prune never looks (review finding r7) — the one-time sweep
-    must reclaim them, skip the live appId, and leave non-layout dirs."""
-    import tempfile
-
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    monkeypatch.setattr(T, "_FLAT_SCHEME_SWEPT", False)
-    tag = T.sf_tag(sf_dir)
-    old = tmp_path / f"events_local-1755200000000_{tag}_1_2"
-    old.mkdir()
-    stale = time.time() - 7200  # ADVICE r8: only >1h-old dirs are swept
-    os.utime(old, (stale, stale))
-    live_app = spark.sparkContext.applicationId
-    mine = tmp_path / f"events_{live_app}_{tag}_1_2"
-    mine.mkdir()
-    fresh = tmp_path / f"events_local-1755200000099_{tag}_1_2"
-    fresh.mkdir()  # another session's RECENT layout: age guard keeps it
-    unrelated = tmp_path / "pip-build-local-1755200000000"
-    unrelated.mkdir()
-    T.derived_layout_path(spark, "events", sf_dir, "events")
-    assert not old.exists()  # pre-nesting leak reclaimed
-    assert mine.exists()  # live session's appId never swept
-    assert fresh.exists()  # <1h mtime: possibly live elsewhere, kept
-    assert unrelated.exists()  # non-layout names untouched
-    # and the sweep is one-time per process: a new old-scheme dir
-    # appearing later is left for the next session
-    old2 = tmp_path / f"docs_local-1755200000001_{tag}"
-    old2.mkdir()
-    T.derived_layout_path(spark, "events", sf_dir, "events")
-    assert old2.exists()
 
 
 def test_scratch_dir_tracked_for_cleanup():
