@@ -27,7 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from ._idioms import _DK_HASH, _SW, STOPWORDS, _hash28, _tokens
+from ._idioms import (
+    _DK_HASH,
+    _DK_MINHASH_CTES,
+    _DK_SIG_AGREE,
+    _SW,
+    STOPWORDS,
+    _hash28,
+    _minhash_bands,
+    _sig_agree,
+    _signatures,
+    _tokens,
+)
 from ._text import QMICRO_DUCK, QMICRO_SPARK
 from .registry import register, register_plan_proxy
 
@@ -508,40 +519,20 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and appended per vintage; each increment shuffles only the
     incoming side's bands (one small equi-join against the index).
     """
-    from ._idioms import N_BANDS, NUM_HASHES, ROWS_PER_BAND, _signatures
-
     sig = _signatures(spark, sf_dir)
     incoming_flag = (
         _hash28(F.concat(F.lit("vin:"), F.col("doc_id").cast("string")))
         % INCR_VINTAGE_MOD
         == 0
     )
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ",", *[f"m{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    sig_arr = F.array(*[f"m{i}" for i in range(NUM_HASHES)])
-    bands = sig.select(
-        "doc_id",
-        incoming_flag.alias("incoming"),
-        sig_arr.alias("sig"),
-        F.posexplode(band_keys).alias("band", "bkey"),
-    )
+    bands = _minhash_bands(sig, incoming_flag.alias("incoming"))
     new_side = bands.filter(F.col("incoming")).select(
         F.col("doc_id").alias("new_doc"), "band", "bkey", F.col("sig").alias("nsig")
     )
     base_side = bands.filter(~F.col("incoming")).select(
         F.col("doc_id").alias("base_doc"), "band", "bkey", F.col("sig").alias("bsig")
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with("nsig", "bsig", lambda x, y: x == y), lambda v: v
-        )
-    ).cast("bigint")
+    agree = _sig_agree("nsig", "bsig").cast("bigint")
     return (
         new_side.join(base_side, ["band", "bkey"])
         .select("new_doc", "base_doc", agree.alias("agree"))
@@ -551,34 +542,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_oracle() -> str:
-    from ._idioms import (
-        MINHASH_AB,
-        N_BANDS,
-        NUM_HASHES,
-        P_MINHASH,
-        ROWS_PER_BAND,
-    )
-    from ._text import _DK_SHINGLES
-
-    h = _DK_HASH.format(c="sh")
-    mins = ",\n           ".join(
-        f"MIN(({a} * {h} + {b}) % {P_MINHASH}) AS m{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"concat_ws(',', m{b * ROWS_PER_BAND}, m{b * ROWS_PER_BAND + 1}) AS bkey FROM sig"
-        for b in range(N_BANDS)
-    )
     vin = _DK_HASH.format(c="concat('vin:', CAST(doc_id AS VARCHAR))")
-    eq = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
-    )
     return f"""
-    WITH sh AS (SELECT DISTINCT doc_id, sh FROM ({_DK_SHINGLES})),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    bands AS (
-{band_selects}),
+    WITH {_DK_MINHASH_CTES},
     vin AS (SELECT doc_id,
                    CASE WHEN {vin} % {INCR_VINTAGE_MOD} = 0 THEN 1 ELSE 0 END
                      AS incoming
@@ -589,11 +555,11 @@ def _incremental_oracle() -> str:
       JOIN vin vi ON i.doc_id = vi.doc_id AND vi.incoming = 1
       JOIN bands b ON i.band = b.band AND i.bkey = b.bkey
       JOIN vin vb ON b.doc_id = vb.doc_id AND vb.incoming = 0)
-    SELECT new_doc, base_doc, CAST(({eq}) AS BIGINT) AS agree
+    SELECT new_doc, base_doc, CAST(({_DK_SIG_AGREE}) AS BIGINT) AS agree
     FROM cand
     JOIN sig sa ON new_doc = sa.doc_id
     JOIN sig sb ON base_doc = sb.doc_id
-    WHERE ({eq}) >= {INCR_MIN_AGREE}
+    WHERE ({_DK_SIG_AGREE}) >= {INCR_MIN_AGREE}
     """
 
 

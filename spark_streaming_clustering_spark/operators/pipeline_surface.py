@@ -28,18 +28,28 @@ from ..functions import vec
 from ..sources.tables import load_table
 from .registry import register, register_plan_proxy
 from ._session_cache import session_cached
-from ._text import _DK_SHINGLES, _shingles, shared_tf  # noqa: F401  (shared shingle/tf relations)
+from ._text import _DK_SHINGLES, _shingles, shared_tf
 from ._text import Q_GATE_MICRO, QMICRO_DUCK as _QMICRO_DUCK, QMICRO_SPARK as _QMICRO_SPARK
 
-# --- deterministic constants: MinHash machinery lives in _idioms.py -------
-from ._idioms import (  # noqa: F401
-    MINHASH_AB,
-    N_BANDS,
+# House idioms, the MinHash machinery and the banded-LSH primitive live
+# in _idioms.py (leaf module, no registry cycle).
+from ._idioms import (
+    _DK_DOT,
+    _DK_DVEC,
+    _DK_HASH,
+    _DK_MINHASH_CTES,
+    _DK_NORM,
+    _DK_SIG_AGREE,
     NUM_HASHES,
-    P_MINHASH,
-    ROWS_PER_BAND,
-    _lcg,
+    STOPWORDS,
+    _cap_buckets,
+    _dk_capped,
+    _dk_minhash_scored,
+    _hash28,
+    _minhash_bands,
+    _minhash_pairs,
     _signatures,
+    _tokens,
 )
 
 # Multi-table random-hyperplane LSH: N_LSH_TABLES independent tables of
@@ -59,19 +69,6 @@ PLANES = [
     ]
     for p in range(N_PLANES)
 ]
-
-# House idioms live in _idioms.py (leaf module, no registry cycle);
-# re-exported here because tests and older surface modules import them
-# from this module.
-from ._idioms import (  # noqa: F401
-    _DK_DOT,
-    _DK_DVEC,
-    _DK_HASH,
-    _DK_NORM,
-    STOPWORDS,
-    _hash28,
-    _tokens,
-)
 
 
 def _duck_plane(p: int) -> str:
@@ -104,85 +101,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature -> banded LSH -> candidate pairs -> estimate.
 
     shingle -> 16 minhashes -> 8 bands x 2 rows; pairs sharing a band
-    bucket are candidates (equi-join, no O(n^2)); keep pairs whose
-    signature agreement >= 4/16.
+    bucket are candidates (in-bucket expansion, no O(n^2)); keep pairs
+    whose signature agreement >= 4/16.
     """
-    sig = _signatures(spark, sf_dir)
-    # One pass over the signatures: band keys via posexplode (no 8-way
-    # union re-running the signature aggregate per branch), signature
-    # carried along as an array so candidate pairs never join back.
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ",", *[f"m{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    sig_arr = F.array(*[f"m{i}" for i in range(NUM_HASHES)])
-    bands = sig.select(
-        "doc_id", sig_arr.alias("sig"), F.posexplode(band_keys).alias("band", "bkey")
-    )
-    # Candidate pairs WITHIN each bucket via collect_list — the signature
-    # pipeline runs once (a self-join would compute it for both sides).
-    # Buckets are tiny unless docs truly collide, so the in-bucket pair
-    # expansion is the standard O(sum bucket^2) LSH cost, never O(n^2).
-    buckets = (
-        bands.groupBy("band", "bkey")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "sig"))).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    ms = F.col("ms")
-    pairs = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.size(ms)), lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    p = F.col("p")
-    eq = F.size(
-        F.filter(F.zip_with(p["a"]["sig"], p["b"]["sig"], lambda x, y: x == y), lambda v: v)
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(
-            p["a"]["doc_id"].alias("doc_a"),
-            p["b"]["doc_id"].alias("doc_b"),
-            (eq / F.lit(float(NUM_HASHES))).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= 4.0 / NUM_HASHES)
-        .distinct()
-    )
+    return _minhash_pairs(_minhash_bands(_signatures(spark, sf_dir)))
 
 
 def _minhash_oracle() -> str:
-    h = _DK_HASH.format(c="sh")
-    mins = ",\n           ".join(
-        f"MIN(({a} * {h} + {b}) % {P_MINHASH}) AS m{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"concat_ws(',', m{b * ROWS_PER_BAND}, m{b * ROWS_PER_BAND + 1}) AS bkey FROM sig"
-        for b in range(N_BANDS)
-    )
-    eq = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
-    )
     return f"""
-    WITH sh AS (SELECT DISTINCT doc_id, sh FROM ({_DK_SHINGLES})),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    bands AS (
-{band_selects}),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-      WHERE a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b, ({eq}) / {float(NUM_HASHES)} AS est_jaccard
-    FROM pairs JOIN sig sa ON doc_a = sa.doc_id JOIN sig sb ON doc_b = sb.doc_id
-    WHERE ({eq}) / {float(NUM_HASHES)} >= {4.0 / NUM_HASHES}
+    WITH {_DK_MINHASH_CTES},
+    {_dk_minhash_scored("bands")}
+    SELECT doc_a, doc_b, est_jaccard FROM scored
     """
 
 
@@ -200,87 +129,18 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     of |bucket|^2.  Semantics: recall-bounded candidate generation; the
     oracle applies the identical cap, so results stay exact.
     """
-    sig = _signatures(spark, sf_dir)
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ",", *[f"m{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    sig_arr = F.array(*[f"m{i}" for i in range(NUM_HASHES)])
-    bands = sig.select(
-        "doc_id", sig_arr.alias("sig"), F.posexplode(band_keys).alias("band", "bkey")
-    )
-    w = Window.partitionBy("band", "bkey").orderBy("doc_id")
-    capped = bands.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= MAX_BUCKET
-    )
-    buckets = (
-        capped.groupBy("band", "bkey")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "sig"))).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    ms = F.col("ms")
-    pairs = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.size(ms)), lambda y: F.struct(x.alias("a"), y.alias("b"))
-            ),
-        )
-    )
-    p = F.col("p")
-    eq = F.size(
-        F.filter(F.zip_with(p["a"]["sig"], p["b"]["sig"], lambda x, y: x == y), lambda v: v)
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(
-            p["a"]["doc_id"].alias("doc_a"),
-            p["b"]["doc_id"].alias("doc_b"),
-            (eq / F.lit(float(NUM_HASHES))).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= 4.0 / NUM_HASHES)
-        .distinct()
-    )
+    bands = _minhash_bands(_signatures(spark, sf_dir))
+    return _minhash_pairs(_cap_buckets(bands, ["band", "bkey"], "doc_id", MAX_BUCKET))
 
 
 def _minhash_pairs_cte_body() -> str:
     """Shared CTE chain ending in ``scored`` (doc_a, doc_b, est_jaccard
     >= threshold) — used by the capped-LSH oracle and composed into the
-    connected-components oracle."""
-    h = _DK_HASH.format(c="sh")
-    mins = ",\n           ".join(
-        f"MIN(({a} * {h} + {b}) % {P_MINHASH}) AS m{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"concat_ws(',', m{b * ROWS_PER_BAND}, m{b * ROWS_PER_BAND + 1}) AS bkey FROM sig"
-        for b in range(N_BANDS)
-    )
-    eq = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
-    )
-    return f"""sh AS (SELECT DISTINCT doc_id, sh FROM ({_DK_SHINGLES})),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    bands AS (
-{band_selects}),
-    capped AS (
-      SELECT doc_id, band, bkey FROM (
-        SELECT doc_id, band, bkey,
-               row_number() OVER (PARTITION BY band, bkey ORDER BY doc_id) AS rk
-        FROM bands) WHERE rk <= {MAX_BUCKET}),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM capped a JOIN capped b ON a.band = b.band AND a.bkey = b.bkey
-      WHERE a.doc_id < b.doc_id),
-    scored AS (
-      SELECT doc_a, doc_b, ({eq}) / {float(NUM_HASHES)} AS est_jaccard
-      FROM pairs JOIN sig sa ON doc_a = sa.doc_id JOIN sig sb ON doc_b = sb.doc_id
-      WHERE ({eq}) / {float(NUM_HASHES)} >= {4.0 / NUM_HASHES})"""
+    connected-components and keep-best oracles."""
+    capped = _dk_capped("bands", "doc_id, band, bkey", "band, bkey", "doc_id", MAX_BUCKET)
+    return f"""{_DK_MINHASH_CTES},
+    {capped},
+    {_dk_minhash_scored("capped")}"""
 
 
 def _minhash_capped_oracle() -> str:
@@ -840,21 +700,12 @@ register(
 )
 
 
-def _table_bucket_expr(t: int):
-    """8-bit sign-pattern bucket id for LSH table ``t``."""
-    terms = []
-    for p in range(N_PLANES_PER_TABLE):
-        plane = F.array(*[F.lit(v) for v in PLANES[t * N_PLANES_PER_TABLE + p]])
-        terms.append(F.when(vec.dot("v", plane) > 0, F.lit(1 << p)).otherwise(0))
-    return sum(terms).cast("int")
-
-
 def _lsh_buckets_udf():
     """All N_LSH_TABLES bucket ids per vector in ONE Arrow-batched BLAS
-    matmul — semantically identical to ``_table_bucket_expr`` for every
-    table, and ~10x cheaper than evaluating 32 ``aggregate(zip_with)``
-    dot products per row in codegen (the bucket step dominated the LSH
-    keys' wall time at sf0.1).
+    matmul — semantically identical to summing the 8 sign bits of
+    ``vec.dot(v, plane) > 0`` per table, and ~10x cheaper than evaluating
+    32 ``aggregate(zip_with)`` dot products per row in codegen (the
+    bucket step dominated the LSH keys' wall time at sf0.1).
 
     Sign-exactness: numpy's pairwise summation can differ from the
     Catalyst/DuckDB sequential fold by ~1 ulp, but a bucket bit flips
@@ -884,6 +735,62 @@ def _lsh_buckets_udf():
     return pandas_udf("array<int>")(_buckets)
 
 
+def _lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, nrm, tbl, bkt): every embedding once per LSH table.
+
+    Norms are per-vector, so they are hoisted BEFORE any pair join:
+    each candidate pair then costs one dot() higher-order eval instead
+    of three (dot + 2 norms), and the norm work is O(n) not O(pairs).
+    """
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", vec.to_double_array("embedding").alias("v")
+    )
+    return emb.select(
+        "vec_id", "v", vec.norm2("v").alias("nrm"),
+        F.posexplode(_lsh_buckets_udf()("v")).alias("tbl", "bkt"),
+    )
+
+
+def _lsh_side(df: DataFrame, id_: str, v: str, n: str) -> DataFrame:
+    """One side of a candidate join: (tbl, bkt, <id_>, <v>, <n>)."""
+    return df.select(
+        "tbl", "bkt", F.col("vec_id").alias(id_), F.col("v").alias(v), F.col("nrm").alias(n)
+    )
+
+
+def _lsh_top3(cand: DataFrame) -> DataFrame:
+    """(q_id, n_id, cos, rank) top-3 by cosine from candidate rows
+    (q_id, qv, qn, n_id, nv, nn).
+
+    ONE shuffle from candidates to answer: per-query the candidate set
+    is bounded, so dedup + rank collapse into a single groupBy(q_id)
+    array aggregate — array_distinct removes cross-table pair
+    collisions (cos is computed identically in every table, so
+    duplicates are bitwise equal), sort_array on struct(-cos, n_id)
+    gives (cos DESC, n_id ASC), slice takes the top 3.  A
+    groupBy(q_id, n_id) + row_number window would cost two
+    differently-keyed exchanges for the same bounded result.
+    """
+    nn = F.col("qn") * F.col("nn")
+    cos = F.when(nn == 0, F.lit(0.0)).otherwise(vec.dot("qv", "nv") / nn)
+    top = F.array_distinct(
+        F.collect_list(F.struct((-F.col("cos")).alias("nc"), F.col("n_id").alias("n_id")))
+    )
+    return (
+        cand.filter(F.col("q_id") != F.col("n_id"))
+        .select("q_id", "n_id", F.round(cos, 6).alias("cos"))
+        .groupBy("q_id")
+        .agg(F.slice(F.sort_array(top), 1, 3).alias("top"))
+        .select("q_id", F.posexplode("top").alias("pos", "s"))
+        .select(
+            "q_id",
+            F.col("s.n_id").alias("n_id"),
+            (-F.col("s.nc")).alias("cos"),
+            (F.col("pos") + 1).alias("rank"),
+        )
+    )
+
+
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table random-hyperplane LSH ANN: candidates = same 8-bit
     sign-pattern bucket in ANY of the 4 tables, each (table, bucket)
@@ -895,91 +802,55 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard dedup_minhash_lsh_capped uses — while the table union keeps
     recall (a near neighbor only needs to agree on all 8 bits of ONE
     table).  Planes are LCG literals shared with the oracle; duplicate
-    candidates across tables collapse via groupBy before ranking.
+    candidates across tables collapse in the top-3 aggregate.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", vec.to_double_array("embedding").alias("v")
+    capped = _cap_buckets(_lsh_banded(spark, sf_dir), ["tbl", "bkt"], "vec_id", LSH_MAX_BUCKET)
+    a = _lsh_side(capped, "q_id", "qv", "qn")
+    b = _lsh_side(capped, "n_id", "nv", "nn")
+    return _lsh_top3(a.join(b, ["tbl", "bkt"]))
+
+
+def _lsh_bucket(t: int) -> str:
+    """DuckDB 8-bit sign-pattern bucket id of ``v`` in LSH table ``t``."""
+    return " + ".join(
+        f"CASE WHEN {_DK_DOT.format(a='v', b=_duck_plane(t * N_PLANES_PER_TABLE + p))}"
+        f" > 0 THEN {1 << p} ELSE 0 END"
+        for p in range(N_PLANES_PER_TABLE)
     )
-    # Norms are per-vector, so hoist them BEFORE the pair join: each
-    # candidate pair then costs one dot() higher-order eval instead of
-    # three (dot + 2 norms), and the norm work is O(n) not O(pairs).
-    banded = emb.select(
-        "vec_id", "v", vec.norm2("v").alias("nrm"),
-        F.posexplode(_lsh_buckets_udf()("v")).alias("tbl", "bkt"),
-    )
-    w_cap = Window.partitionBy("tbl", "bkt").orderBy("vec_id")
-    capped = banded.withColumn("rk", F.row_number().over(w_cap)).filter(
-        F.col("rk") <= LSH_MAX_BUCKET
-    )
-    a = capped.select(
-        "tbl", "bkt", F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    b = capped.select(
-        "tbl", "bkt", F.col("vec_id").alias("n_id"), F.col("v").alias("nv"),
-        F.col("nrm").alias("nn"),
-    )
-    nn = F.col("qn") * F.col("nn")
-    cos = F.when(nn == 0, F.lit(0.0)).otherwise(vec.dot("qv", "nv") / nn)
-    # ONE shuffle from candidates to answer: per-query the candidate set
-    # is bounded (N_LSH_TABLES * LSH_MAX_BUCKET entries), so dedup +
-    # rank collapse into a single groupBy(q_id) array aggregate —
-    # array_distinct removes cross-table pair collisions (cos is
-    # computed identically in every table, so duplicates are bitwise
-    # equal), sort_array on struct(-cos, n_id) gives (cos DESC, n_id
-    # ASC), slice takes the top 3.  The previous groupBy(q_id,n_id) +
-    # row_number window cost two differently-keyed exchanges for the
-    # same bounded result.
-    cand = F.array_distinct(
-        F.collect_list(F.struct((-F.col("cos")).alias("nc"), F.col("n_id").alias("n_id")))
-    )
+
+
+# DuckDB twins of _lsh_banded + _cap_buckets (the e / banded / capped
+# CTEs) and of _lsh_top3's ranking over a (q_id, n_id, cos) CTE named d.
+_DK_LSH_CTES = f"""e AS (SELECT vec_id, {_DK_DVEC} AS v FROM embeddings),
+    banded AS (
+""" + "\n      UNION ALL\n".join(
+    f"      SELECT vec_id, v, {t} AS tbl, CAST({_lsh_bucket(t)} AS INT) AS bkt FROM e"
+    for t in range(N_LSH_TABLES)
+) + f"""),
+    {_dk_capped("banded", "vec_id, v, tbl, bkt", "tbl, bkt", "vec_id", LSH_MAX_BUCKET)}"""
+_DK_LSH_TOP3 = """r AS (SELECT q_id, n_id, cos,
+                 row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
+          FROM d)
+    SELECT q_id, n_id, cos, rank FROM r WHERE rank <= 3"""
+
+
+def _dk_cos(a: str, b: str) -> str:
+    """DuckDB cosine of two vectors, rounded like _lsh_top3's."""
     return (
-        a.join(b, ["tbl", "bkt"])
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", F.round(cos, 6).alias("cos"))
-        .groupBy("q_id")
-        .agg(F.slice(F.sort_array(cand), 1, 3).alias("top"))
-        .select("q_id", F.posexplode("top").alias("pos", "s"))
-        .select(
-            "q_id",
-            F.col("s.n_id").alias("n_id"),
-            (-F.col("s.nc")).alias("cos"),
-            (F.col("pos") + 1).alias("rank"),
-        )
+        f"round({_DK_DOT.format(a=a, b=b)}\n"
+        f"                       / ({_DK_NORM.format(a=a)} * {_DK_NORM.format(a=b)}), 6)"
     )
 
 
 def _lsh_oracle() -> str:
-    def bucket(t: int) -> str:
-        return " + ".join(
-            f"CASE WHEN {_DK_DOT.format(a='v', b=_duck_plane(t * N_PLANES_PER_TABLE + p))}"
-            f" > 0 THEN {1 << p} ELSE 0 END"
-            for p in range(N_PLANES_PER_TABLE)
-        )
-
-    tables = "\n      UNION ALL\n".join(
-        f"      SELECT vec_id, v, {t} AS tbl, CAST({bucket(t)} AS INT) AS bkt FROM e"
-        for t in range(N_LSH_TABLES)
-    )
     return f"""
-    WITH e AS (SELECT vec_id, {_DK_DVEC} AS v FROM embeddings),
-    banded AS (
-{tables}),
-    capped AS (
-      SELECT vec_id, v, tbl, bkt FROM (
-        SELECT vec_id, v, tbl, bkt,
-               row_number() OVER (PARTITION BY tbl, bkt ORDER BY vec_id) AS rk
-        FROM banded) WHERE rk <= {LSH_MAX_BUCKET}),
+    WITH {_DK_LSH_CTES},
     d AS (SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-                 max(round({_DK_DOT.format(a='a.v', b='b.v')}
-                       / ({_DK_NORM.format(a='a.v')} * {_DK_NORM.format(a='b.v')}), 6)) AS cos
+                 max({_dk_cos("a.v", "b.v")}) AS cos
           FROM capped a JOIN capped b ON a.tbl = b.tbl AND a.bkt = b.bkt
           WHERE a.vec_id <> b.vec_id
           GROUP BY 1, 2),
-    r AS (SELECT q_id, n_id, cos,
-                 row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-          FROM d)
-    SELECT q_id, n_id, cos, rank FROM r WHERE rank <= 3
+    {_DK_LSH_TOP3}
     """
 
 
@@ -1846,21 +1717,9 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute, is the binding constraint: probes multiply query work
     only; tables multiply the stored index.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", vec.to_double_array("embedding").alias("v")
-    )
-    banded = emb.select(
-        "vec_id", "v", vec.norm2("v").alias("nrm"),
-        F.posexplode(_lsh_buckets_udf()("v")).alias("tbl", "bkt"),
-    )
-    w_cap = Window.partitionBy("tbl", "bkt").orderBy("vec_id")
-    data = (
-        banded.withColumn("rk", F.row_number().over(w_cap))
-        .filter(F.col("rk") <= LSH_MAX_BUCKET)
-        .select(
-            "tbl", "bkt", F.col("vec_id").alias("n_id"), F.col("v").alias("nv"),
-            F.col("nrm").alias("nn"),
-        )
+    banded = _lsh_banded(spark, sf_dir)
+    data = _lsh_side(
+        _cap_buckets(banded, ["tbl", "bkt"], "vec_id", LSH_MAX_BUCKET), "n_id", "nv", "nn"
     )
     probe_set = F.array(
         F.col("bkt"), *[F.expr(f"bkt ^ {1 << p}") for p in range(N_PLANES_PER_TABLE)]
@@ -1873,64 +1732,24 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(probe_set).alias("bkt"),
         )
     )
-    nn = F.col("qn") * F.col("nn")
-    cos = F.when(nn == 0, F.lit(0.0)).otherwise(vec.dot("qv", "nv") / nn)
-    cand = F.array_distinct(
-        F.collect_list(F.struct((-F.col("cos")).alias("nc"), F.col("n_id").alias("n_id")))
-    )
-    return (
-        data.join(F.broadcast(queries), ["tbl", "bkt"])
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", F.col("n_id").alias("n_id"), F.round(cos, 6).alias("cos"))
-        .groupBy("q_id")
-        .agg(F.slice(F.sort_array(cand), 1, 3).alias("top"))
-        .select("q_id", F.posexplode("top").alias("pos", "s"))
-        .select(
-            "q_id",
-            F.col("s.n_id").alias("n_id"),
-            (-F.col("s.nc")).alias("cos"),
-            (F.col("pos") + 1).alias("rank"),
-        )
-    )
+    return _lsh_top3(data.join(F.broadcast(queries), ["tbl", "bkt"]))
 
 
 def _multiprobe_oracle() -> str:
-    def bucket(t: int) -> str:
-        return " + ".join(
-            f"CASE WHEN {_DK_DOT.format(a='v', b=_duck_plane(t * N_PLANES_PER_TABLE + p))}"
-            f" > 0 THEN {1 << p} ELSE 0 END"
-            for p in range(N_PLANES_PER_TABLE)
-        )
-
-    tables = "\n      UNION ALL\n".join(
-        f"      SELECT vec_id, v, {t} AS tbl, CAST({bucket(t)} AS INT) AS bkt FROM e"
-        for t in range(N_LSH_TABLES)
-    )
     bits = ", ".join(f"({1 << p})" for p in range(N_PLANES_PER_TABLE))
     return f"""
-    WITH e AS (SELECT vec_id, {_DK_DVEC} AS v FROM embeddings),
-    banded AS (
-{tables}),
-    capped AS (
-      SELECT vec_id, v, tbl, bkt FROM (
-        SELECT vec_id, v, tbl, bkt,
-               row_number() OVER (PARTITION BY tbl, bkt ORDER BY vec_id) AS rk
-        FROM banded) WHERE rk <= {LSH_MAX_BUCKET}),
+    WITH {_DK_LSH_CTES},
     q AS (SELECT vec_id AS q_id, v AS qv, tbl, bkt FROM banded WHERE vec_id < 10),
     probes AS (
       SELECT q_id, qv, tbl, bkt FROM q
       UNION ALL
       SELECT q_id, qv, tbl, xor(bkt, bit) FROM q CROSS JOIN (VALUES {bits}) AS t(bit)),
     d AS (SELECT q_id, c.vec_id AS n_id,
-                 max(round({_DK_DOT.format(a='qv', b='c.v')}
-                       / ({_DK_NORM.format(a='qv')} * {_DK_NORM.format(a='c.v')}), 6)) AS cos
+                 max({_dk_cos("qv", "c.v")}) AS cos
           FROM capped c JOIN probes p ON c.tbl = p.tbl AND c.bkt = p.bkt
           WHERE c.vec_id <> p.q_id
           GROUP BY 1, 2),
-    r AS (SELECT q_id, n_id, cos,
-                 row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-          FROM d)
-    SELECT q_id, n_id, cos, rank FROM r WHERE rank <= 3
+    {_DK_LSH_TOP3}
     """
 
 
@@ -2015,25 +1834,9 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pretrain_e2e_oracle() -> str:
-    h = _DK_HASH.format(c="sh")
-    mins = ",\n           ".join(
-        f"MIN(({a} * {h} + {b}) % {P_MINHASH}) AS m{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, {b} AS band, "
-        f"concat_ws(',', m{b * ROWS_PER_BAND}, m{b * ROWS_PER_BAND + 1}) AS bkey FROM sig"
-        for b in range(N_BANDS)
-    )
-    eq = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
-    )
     min_eq = int(NEAR_DUP_T * NUM_HASHES)
     return f"""
-    WITH sh AS (SELECT DISTINCT doc_id, sh FROM ({_DK_SHINGLES})),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-    bands AS (
-{band_selects}),
+    WITH {_DK_MINHASH_CTES},
     near_pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
@@ -2042,7 +1845,7 @@ def _pretrain_e2e_oracle() -> str:
       SELECT DISTINCT doc_b AS doc_id
       FROM near_pairs JOIN sig sa ON doc_a = sa.doc_id
                       JOIN sig sb ON doc_b = sb.doc_id
-      WHERE ({eq}) >= {min_eq}),
+      WHERE ({_DK_SIG_AGREE}) >= {min_eq}),
     keepers AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
     tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
     stats AS (

@@ -30,10 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from ._idioms import _hash28
+from ._idioms import _cap_buckets, _dk_capped, _hash28
 from ._simhash import dedup_simhash, simhash_oracle as _simhash_oracle
 from .registry import register, register_plan_proxy
 
@@ -393,10 +392,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band", "val"),
     )
-    w_cap = Window.partitionBy("band", "val").orderBy("doc_id")
-    capped = bands.withColumn("rk", F.row_number().over(w_cap)).filter(
-        F.col("rk") <= SIMHAM_MAX_BUCKET
-    )
+    capped = _cap_buckets(bands, ["band", "val"], "doc_id", SIMHAM_MAX_BUCKET)
     a = capped.select("band", "val", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"))
     b = capped.select("band", "val", F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"))
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
@@ -411,17 +407,16 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simham_oracle() -> str:
+    capped = _dk_capped(
+        "bands", "doc_id, simhash, band, val", "band, val", "doc_id", SIMHAM_MAX_BUCKET
+    )
     return f"""
     WITH sim AS ({_simhash_oracle()}),
     bands AS (
       SELECT doc_id, simhash, b.band,
              (simhash >> (8 * b.band)) & 255 AS val
       FROM sim, (SELECT unnest(generate_series(0, 3)) AS band) b),
-    capped AS (
-      SELECT doc_id, simhash, band, val FROM (
-        SELECT doc_id, simhash, band, val,
-               row_number() OVER (PARTITION BY band, val ORDER BY doc_id) AS rk
-        FROM bands) WHERE rk <= {SIMHAM_MAX_BUCKET})
+    {capped}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            MIN(bit_count(xor(a.simhash, b.simhash))) AS hamming
     FROM capped a JOIN capped b ON a.band = b.band AND a.val = b.val

@@ -73,6 +73,18 @@ def _assign_top2(x: np.ndarray, cent: np.ndarray):
     return bmu1, bmu2, d2_min
 
 
+def _check_finite(x: np.ndarray, ids) -> None:
+    """Fail the batch on a null or non-finite feature (an empty CSV
+    field reads as null), naming the first offending point id.  Left
+    in, a NaN distance makes the winner's prototype NaN for the rest of
+    the run; the reference fails the batch too (``"".toDouble``)."""
+    bad = ~np.isfinite(x).all(axis=1)
+    if bad.any():
+        raise ValueError(
+            f"point id {int(ids[np.argmax(bad)])} has a null or non-finite feature"
+        )
+
+
 def _group_partials(x, ids, bmu1, bmu2, d2_min, n_cent):
     """Vectorized per-(bmu1, bmu2) partial aggregation — no per-row
     Python loop.  Yields (b1, b2, cnt, sum_d2, sum_vec, id_list)."""
@@ -125,6 +137,7 @@ def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[i
     dominate.
     """
     x = np.ascontiguousarray(x, dtype=np.float64)
+    _check_finite(x, ids)
     bmu1, bmu2, d2_min = _assign_top2(x, centroids)
     return _merge_partials(
         _group_partials(x, ids, bmu1, bmu2, d2_min, len(centroids)), x.shape[1]
@@ -149,6 +162,7 @@ def _partial_stats(pdf_iter, centroids_bc):
         # dimension mismatch instead of assigning on NaN distances
         x = feats.loc[:, feats.notna().any()].to_numpy(dtype=np.float64)
         ids = pdf["id"].to_numpy()
+        _check_finite(x, ids)
         bmu1, bmu2, d2_min = _assign_top2(x, cent)
         parts = list(_group_partials(x, ids, bmu1, bmu2, d2_min, len(cent)))
         yield pd.DataFrame(

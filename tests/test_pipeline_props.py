@@ -8,6 +8,10 @@ respect the packing rule, components that are a true fixpoint).
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
+from spark_streaming_clustering_spark import operators as operators_pkg
 from spark_streaming_clustering_spark.operators.pipeline_surface import (
     SHARD_TOKEN_BUDGET,
     dedup_connected_components,
@@ -155,6 +159,33 @@ def test_ann_recall_against_bruteforce(spark):
     # single-probe (measured 0.43 vs 0.17)
     assert multi >= 0.4, f"multi-probe recall@3 collapsed: {multi:.2f}"
     assert multi >= lsh + 0.15, f"multi-probe lift gone: {multi:.2f} vs {lsh:.2f}"
+
+
+# The banded-LSH spellings that live only in operators/_idioms.py.
+_BANDED_LSH_SPELLINGS = {
+    "MinHash band key": r"m\{b \* ROWS_PER_BAND",
+    "row_number() bucket cap": r"\brk\b\W*<=\s*\{?(cap\b|\w*MAX_BUCKET)|\bw_cap\b",
+    "in-bucket pair expansion": r'collect_list\(F\.struct\("doc_id", "sig"\)\)',
+    "SQL band union": r"band_selects|AS bkey FROM sig",
+}
+
+
+def test_banded_lsh_is_spelled_once():
+    """MinHash banding, the bucket cap, the in-bucket pair expansion and
+    the DuckDB band union are written once, in ``_idioms.py``: every
+    banded key (MinHash, SimHash byte bands, hyperplane tables) and its
+    oracle call those helpers instead of carrying a copy."""
+    pkg_dir = Path(operators_pkg.__file__).parent
+    home = (pkg_dir / "_idioms.py").read_text()
+    assert [w for w, rx in _BANDED_LSH_SPELLINGS.items() if not re.search(rx, home)] == []
+    offenders = sorted(
+        (p.name, what)
+        for p in pkg_dir.glob("*.py")
+        if p.name != "_idioms.py"
+        for what, rx in _BANDED_LSH_SPELLINGS.items()
+        if re.search(rx, p.read_text())
+    )
+    assert offenders == []
 
 
 def test_minhash_estimate_tracks_true_jaccard(spark):

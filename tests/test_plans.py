@@ -59,7 +59,10 @@ def test_flagship_plan_shape(spark):
     assert "l_orderkey:bigint,l_extendedprice:double,l_discount:double" in plan
 
 
-def test_minhash_lsh_single_pipeline(spark):
+@pytest.mark.parametrize(
+    "key", ["dedup_minhash_lsh", "dedup_minhash_lsh_capped", "dedup_incremental"]
+)
+def test_minhash_lsh_single_pipeline(spark, key):
     import re
 
     # The shared signature relation is session-cached (_idioms._signatures);
@@ -71,16 +74,17 @@ def test_minhash_lsh_single_pipeline(spark):
     )
 
     clear_all()
-    plan = _plan(spark, "dedup_minhash_lsh")
-    # "(n) Node" detail headers count each physical node exactly once
-    scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
-    exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
-    # the signature aggregate + bucket aggregate + distinct: at most 3
-    # shuffle exchanges, and the corpus is scanned exactly once
-    assert len(scans) == 1
-    assert len(exchanges) <= 3
-    # md5 hoisted below the aggregate: the hash appears in a Project
-    assert "md5" in plan
+    plan = _plan(spark, key)
+    # "(n) Node" detail headers count each physical node exactly once:
+    # the corpus is scanned exactly once
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
+    # md5 hoisted below the signature aggregate: the shingle hash is
+    # computed once per row in a Project, not in each of the 16 min()s
+    assert re.search(r"^\(\d+\) Project\nOutput [^\n]*md5\(cast\(sh#", plan, re.M)
+    if key == "dedup_minhash_lsh":
+        # the signature aggregate + bucket aggregate + distinct: at most
+        # 3 shuffle exchanges
+        assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 3
 
 
 def test_ann_queries_broadcast_the_small_side(spark):

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import copy
 import glob
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -533,6 +535,37 @@ def test_estep_distributed_releases_its_broadcast_on_failure(spark):
     with pytest.raises(PythonException, match="matmul"):
         compute_point_stats(batch, np.zeros((2, 3)))
     assert _broadcast_files(spark) == before
+
+
+@pytest.mark.parametrize(
+    "n_rows, small_batch_rows", [(50, 5000), (500, 50)], ids=["driver_local", "distributed"]
+)
+def test_step_rejects_a_null_feature(spark, tmp_path, n_rows, small_batch_rows):
+    """An empty CSV field reads as a null feature.  Both E-step paths
+    fail the batch with an error naming the point, and the model and
+    ``kk`` stay as they were: before the check, the driver-local path
+    turned a prototype into NaN for the rest of the run and the
+    distributed one died in the partial merge with a TypeError."""
+    from pyspark.errors import PythonException
+
+    rng = np.random.default_rng(3)
+    p = tmp_path / "pts.csv"
+    p.write_text(
+        "".join(
+            f"{x0!r},{'' if i == 17 else repr(x1)},0,{i}\n"
+            for i, (x0, x1) in enumerate(rng.random((n_rows, 2)).tolist())
+        )
+    )
+    batch = read_points(spark, str(p), dim=2)
+    tr = GStreamTrainer(spark, GStreamParams(), small_batch_rows=small_batch_rows)
+    tr.init_from_seed(pd.DataFrame({"features": [[0.2, 0.2], [0.8, 0.8]]}))
+    before = {k: copy.deepcopy(v) for k, v in vars(tr.model).items() if k != "p"}
+    error = ValueError if n_rows <= small_batch_rows else PythonException
+    with pytest.raises(error, match="point id 17 has a null or non-finite feature"):
+        tr.step(batch)
+    assert tr.kk == 1
+    for k, v in before.items():
+        np.testing.assert_array_equal(getattr(tr.model, k), v, err_msg=k)
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
