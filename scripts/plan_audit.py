@@ -10,8 +10,7 @@ creeping in) on keys no hand-written test happens to cover.
 
 Plans are built lazily (``explain`` only, nothing executes), so the
 sweep costs seconds per key; streaming/eager keys that cannot be
-explained as one lazy plan are skipped, mirroring
-tests/test_plans.py::EAGER.
+explained as one lazy plan are skipped (``registry.EAGER``).
 
 Usage:
     python scripts/plan_audit.py [--sf-dir /root/testdata/sf0.01] \
@@ -35,22 +34,6 @@ import time
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
-
-# keys whose builders execute work eagerly (streaming queries, trainers,
-# ML fits) — not explainable as a single lazy plan.  Kept in lockstep
-# with tests/test_plans.py::EAGER (asserted by test_plan_audit_sweep).
-EAGER = {
-    "gstream_epoch",
-    "streaming_file_source",
-    "streaming_window_agg",
-    "stateful_running_agg",
-    "mllib_kmeans_baseline",
-    "streaming_chained_windows",
-    "streaming_rocksdb_state",
-    "stream_idempotent_sink",
-    "stream_fanout_sinks",
-}
-
 
 def fingerprint(plan: str) -> dict:
     """Node-type counts that matter at scale, from a formatted plan."""
@@ -97,6 +80,7 @@ def main() -> int:
             prev = json.load(fh).get("keys", {})
 
     from spark_streaming_clustering_spark.operators.registry import (
+        EAGER,
         PLAN_PROXIES,
         QUERIES,
     )

@@ -1614,6 +1614,11 @@ def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _kcore_nodes(sym: DataFrame) -> DataFrame:
+    """Initial survivor set: every node of the edge relation."""
+    return sym.select(F.col("u").alias("node")).distinct()
+
+
 def _kcore_peel_round(sym: DataFrame, surv: DataFrame) -> DataFrame:
     """One peel application: survivors = nodes whose degree WITHIN the
     current survivor set is >= K (two broadcast semi-joins + one count
@@ -1661,7 +1666,7 @@ def graph_kcore_richclub(spark: SparkSession, sf_dir: str) -> DataFrame:
     every per-round join broadcasts the node-sized side explicitly.
     """
     sym = _kcore_edges(spark, sf_dir).localCheckpoint(eager=True)
-    surv = sym.select(F.col("u").alias("node")).distinct()
+    surv = _kcore_nodes(sym)
     prev_n = None
     for _ in range(_KCORE_ROUNDS):
         surv = _kcore_peel_round(sym, surv).localCheckpoint(eager=True)
@@ -1700,14 +1705,9 @@ graph_kcore_richclub.__doc__ = graph_kcore_richclub.__doc__.format(
 
 
 def graph_kcore_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: the executed operator localCheckpoints
-    (its returned plan truncates to an RDD scan, invisible to the
-    drift gate — the ``dedup_cc_iteration_plan`` precedent), so this
-    proxy rebuilds edge derivation + ONE peel round lazily for
-    PLANS.json / test_plan_drift to fingerprint."""
+    """Plan proxy: edge derivation + one peel round."""
     sym = _kcore_edges(spark, sf_dir)
-    surv = sym.select(F.col("u").alias("node")).distinct()
-    return _kcore_peel_round(sym, surv)
+    return _kcore_peel_round(sym, _kcore_nodes(sym))
 
 
 def _kcore_graph_ctes() -> str:
@@ -1861,6 +1861,15 @@ def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lpa_labels(sym: DataFrame) -> DataFrame:
+    """Singleton initialization: every node starts with its own id."""
+    return (
+        sym.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lbl"))
+    )
+
+
 def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     """One synchronous label-propagation step: every node adopts the
     most frequent label among its NEIGHBORS, ties to the smallest
@@ -1914,11 +1923,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate-once shape).
     """
     sym = _lpa_edges(spark, sf_dir).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-    )
+    labels = _lpa_labels(sym)
     for start in range(0, _LPA_ROUNDS, _LPA_FUSE):
         for _ in range(start, min(start + _LPA_FUSE, _LPA_ROUNDS)):
             labels = _lpa_round(sym, labels)
@@ -1948,16 +1953,9 @@ graph_label_propagation.__doc__ = graph_label_propagation.__doc__.format(
 
 
 def graph_lpa_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: edge derivation + ONE synchronous round
-    (the executed operator localCheckpoints, truncating its plan to an
-    RDD scan — the ``graph_kcore_iteration_plan`` precedent)."""
+    """Plan proxy: edge derivation + one synchronous round."""
     sym = _lpa_edges(spark, sf_dir)
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-    )
-    return _lpa_round(sym, labels)
+    return _lpa_round(sym, _lpa_labels(sym))
 
 
 def _lpa_oracle() -> str:
@@ -2049,6 +2047,13 @@ _CORE_ROUNDS = 20
 _CORE_FUSE = 5
 
 
+def _coreness_degrees(sym: DataFrame) -> DataFrame:
+    """c_0 = degree: the h-index iteration's starting value per node."""
+    return sym.groupBy(F.col("u").alias("node")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
+    )
+
+
 def _coreness_round(sym: DataFrame, c: DataFrame) -> DataFrame:
     """One h-index update: for each node, rank neighbor values
     descending and take max r with value_r >= r — one broadcast join +
@@ -2109,9 +2114,7 @@ def graph_coreness_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same update.  All integers.
     """
     sym = _kcore_edges(spark, sf_dir).localCheckpoint(eager=True)
-    c = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
+    c = _coreness_degrees(sym)
     for start in range(0, _CORE_ROUNDS, _CORE_FUSE):
         for _ in range(start, min(start + _CORE_FUSE, _CORE_ROUNDS)):
             c = _coreness_round(sym, c)
@@ -2136,13 +2139,9 @@ graph_coreness_decomposition.__doc__ = (
 def graph_coreness_iteration_plan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Audit-only lazy plan: edge derivation + ONE h-index round (the
-    executed operator localCheckpoints — the kcore/LPA precedent)."""
+    """Plan proxy: edge derivation + one h-index round."""
     sym = _kcore_edges(spark, sf_dir)
-    c = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    return _coreness_round(sym, c)
+    return _coreness_round(sym, _coreness_degrees(sym))
 
 
 def _coreness_oracle() -> str:
@@ -2209,6 +2208,48 @@ def _wsp_weight(src, dst):
     ).cast("bigint") % 9
 
 
+def _wsp_start(spark: SparkSession, sf_dir: str):
+    """Weighted edges plus one zero-weight SELF-LOOP per node, and the
+    seed distances (customer nodes below ``_WSP_SEED_MAX`` at 0).
+
+    The self-loops fold the old ``dist UNION ALL relaxed`` carry-over
+    branch into the join itself (min(dist + 0) == dist; customers are
+    even, suppliers odd, so no real edge is a self-loop), making each
+    round reference the distance state exactly ONCE — the union-shape
+    doubled the plan tree per round (2^6 recomputations, measured 64 s
+    at sf0.1) and forced a checkpoint per round; the single-reference
+    shape is linear, so _WSP_FUSE rounds fuse per checkpoint (r13-opt;
+    result provably identical — same candidate multiset per node per
+    round)."""
+    edges, deg = _trade_edges(spark, sf_dir)
+    nodes = edges.select("src").distinct()
+    wedges = edges.select(
+        "src", "dst", _wsp_weight(F.col("src"), F.col("dst")).alias("w")
+    ).unionAll(
+        nodes.select(
+            "src", F.col("src").alias("dst"), F.lit(0).cast("bigint").alias("w")
+        )
+    )
+    dist = (
+        deg.select(F.col("src").alias("node"))
+        .filter((F.col("node") < _WSP_SEED_MAX) & (F.col("node") % 2 == 0))
+        .select("node", F.lit(0).cast("bigint").alias("dist"))
+    )
+    return wedges, dist
+
+
+def _wsp_round(wedges: DataFrame, dist: DataFrame) -> DataFrame:
+    """One relaxation round: broadcast the node-sized distance relation
+    into the edge-sized join (post-checkpoint stats are gone, so the
+    hint is explicit — the WSP/Borůvka rule), then re-MIN per node."""
+    return (
+        F.broadcast(dist)
+        .join(wedges, dist.node == wedges.src)
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
+    )
+
+
 def graph_weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE single-source-set weighted shortest paths (Bellman-Ford run
     to its fixpoint) on the customer-supplier trade graph — the
@@ -2242,49 +2283,14 @@ def graph_weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side (batchStreamModel.scala:17-18 adjacency matrices);
     this is the distributed counterpart for graphs that outgrow it.
     """
-    edges, deg = _trade_edges(spark, sf_dir)
-    # weights + one zero-weight SELF-LOOP per node, materialized ONCE
-    # (localCheckpoint): six rounds re-read a sealed edge relation
-    # instead of re-deriving orders ⋈ lineitem ⋈ distinct per round
-    # (the kcore/LPA precedent).  The self-loops fold the old
-    # ``dist UNION ALL relaxed`` carry-over branch into the join itself
-    # (min(dist + 0) == dist; customers are even, suppliers odd, so no
-    # real edge is a self-loop), making each round reference the
-    # distance state exactly ONCE — the union-shape doubled the plan
-    # tree per round (2^6 recomputations, measured 64 s at sf0.1) and
-    # forced a checkpoint per round; the single-reference shape is
-    # linear, so _WSP_FUSE rounds fuse per checkpoint (r13-opt; result
-    # provably identical — same candidate multiset per node per round).
-    nodes = edges.select("src").distinct()
-    wedges = (
-        edges.select(
-            "src", "dst", _wsp_weight(F.col("src"), F.col("dst")).alias("w")
-        )
-        .unionAll(
-            nodes.select(
-                "src",
-                F.col("src").alias("dst"),
-                F.lit(0).cast("bigint").alias("w"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        deg.select(F.col("src").alias("node"))
-        .filter((F.col("node") < _WSP_SEED_MAX) & (F.col("node") % 2 == 0))
-        .select("node", F.lit(0).cast("bigint").alias("dist"))
-    )
+    # the weighted edges are materialized ONCE (localCheckpoint): six
+    # rounds re-read a sealed edge relation instead of re-deriving
+    # orders ⋈ lineitem ⋈ distinct per round (the kcore/LPA precedent)
+    wedges, dist = _wsp_start(spark, sf_dir)
+    wedges = wedges.localCheckpoint(eager=True)
     for start in range(0, _WSP_ROUNDS, _WSP_FUSE):
         for _ in range(start, min(start + _WSP_FUSE, _WSP_ROUNDS)):
-            # broadcast the node-sized distance relation into the
-            # edge-sized join (post-checkpoint stats are gone, so the
-            # hint is explicit — the WSP/Borůvka rule)
-            dist = (
-                F.broadcast(dist)
-                .join(wedges, dist.node == wedges.src)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-            )
+            dist = _wsp_round(wedges, dist)
         dist = dist.localCheckpoint(eager=True)
     return dist.select(
         "node",
@@ -2301,28 +2307,8 @@ graph_weighted_shortest_path.__doc__ = (
 
 
 def graph_wsp_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: edge derivation + ONE relaxation round
-    (self-loop shape — the executed operator's per-round plan)."""
-    edges, deg = _trade_edges(spark, sf_dir)
-    nodes = edges.select("src").distinct()
-    wedges = edges.select(
-        "src", "dst", _wsp_weight(F.col("src"), F.col("dst")).alias("w")
-    ).unionAll(
-        nodes.select(
-            "src", F.col("src").alias("dst"), F.lit(0).cast("bigint").alias("w")
-        )
-    )
-    dist = (
-        deg.select(F.col("src").alias("node"))
-        .filter((F.col("node") < _WSP_SEED_MAX) & (F.col("node") % 2 == 0))
-        .select("node", F.lit(0).cast("bigint").alias("dist"))
-    )
-    return (
-        F.broadcast(dist)
-        .join(wedges, dist.node == wedges.src)
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-    )
+    """Plan proxy: edge derivation + one relaxation round."""
+    return _wsp_round(*_wsp_start(spark, sf_dir))
 
 
 def _wsp_oracle() -> str:
@@ -2389,13 +2375,71 @@ def _msf_wkey(w, lo, hi):
     Kruskal pin agree edge-for-edge with no tie-break ambiguity.
     Precondition: node ids < 2^25 (~33.5M — holds with three orders of
     magnitude of margin at every committed fixture; pinned by
-    tests/test_round13.py so a larger fixture fails loudly, the
+    tests/test_analytics_props.py so a larger fixture fails loudly, the
     events-ts-monotone precedent)."""
     return (
         w * F.lit(1 << 50).cast("bigint")
         + lo * F.lit(1 << 25).cast("bigint")
         + hi
     ).cast("bigint")
+
+
+def _msf_start(spark: SparkSession, sf_dir: str):
+    """The canonical weighted edge list (lo < hi, weight, composite
+    key) and the identity component map (every node its own component)."""
+    edges, deg = _trade_edges(spark, sf_dir)
+    live = (
+        edges.filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
+        .withColumn("w", _wsp_weight(F.col("lo"), F.col("hi")))
+    )
+    live = live.withColumn(
+        "wkey", _msf_wkey(F.col("w"), F.col("lo"), F.col("hi"))
+    )
+    comp = deg.select(F.col("src").alias("node"), F.col("src").alias("c"))
+    return live, comp
+
+
+def _msf_cross(live: DataFrame, comp: DataFrame) -> DataFrame:
+    """The live edges whose endpoints lie in different components, each
+    tagged with both component labels (``comp`` is node-sized and
+    broadcast into the edge join)."""
+    ca = comp.select(F.col("node").alias("lo"), F.col("c").alias("ca"))
+    cb = comp.select(F.col("node").alias("hi"), F.col("c").alias("cb"))
+    return (
+        live.join(F.broadcast(ca), "lo")
+        .join(F.broadcast(cb), "hi")
+        .filter(F.col("ca") != F.col("cb"))
+        .select("lo", "hi", "w", "wkey", "ca", "cb")
+    )
+
+
+def _msf_choose(cross: DataFrame) -> DataFrame:
+    """Borůvka selection: every component's minimum-wkey incident cross
+    edge, with the neighbour component ``d`` it hooks to.  Both
+    incidence directions come from one map-side explode instead of a
+    self-union, so the cross relation is scanned ONCE per selection
+    round (r14; §2.4 — same aggregate input, one scan)."""
+    incid = cross.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("ca").alias("c"), F.col("cb").alias("d"),
+                    F.col("lo"), F.col("hi"), F.col("w"), F.col("wkey"),
+                ),
+                F.struct(
+                    F.col("cb").alias("c"), F.col("ca").alias("d"),
+                    F.col("lo"), F.col("hi"), F.col("w"), F.col("wkey"),
+                ),
+            )
+        ).alias("e")
+    ).select("e.c", "e.d", "e.lo", "e.hi", "e.w", "e.wkey")
+    return incid.groupBy("c").agg(
+        F.min_by("d", "wkey").alias("d"),
+        F.min_by("lo", "wkey").alias("lo"),
+        F.min_by("hi", "wkey").alias("hi"),
+        F.min_by("w", "wkey").alias("w"),
+    )
 
 
 def boruvka_msf_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2426,7 +2470,7 @@ def boruvka_msf_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining unrolled rounds run empty) and is capped at {R} rounds —
     the probed fixpoint (4 rounds at sf0.1) plus 2 slack; the output
     is pinned edge-for-edge against an independent driver-side Kruskal
-    at all three fixtures (tests/test_round13.py, the Dijkstra-pin
+    at all three fixtures (tests/test_analytics_props.py, the Dijkstra-pin
     precedent).
 
     Scale shape: the live edge relation starts as the checkpointed
@@ -2448,19 +2492,12 @@ def boruvka_msf_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency matrix (batchStreamModel.scala:17-18); this is the
     distributed counterpart for graphs that outgrow one machine.
     """
-    edges, deg = _trade_edges(spark, sf_dir)
-    live = (
-        edges.filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
-        .withColumn("w", _wsp_weight(F.col("lo"), F.col("hi")))
-    )
-    live = live.withColumn(
-        "wkey", _msf_wkey(F.col("w"), F.col("lo"), F.col("hi"))
-    ).localCheckpoint(eager=True)
-    # Identity component map: referenced ONCE (the end-of-round-0 comp
-    # update) over the persisted deg relation, so a checkpoint here paid
-    # a job for lineage the single reference never re-executes (r13-opt).
-    comp = deg.select(F.col("src").alias("node"), F.col("src").alias("c"))
+    live, comp = _msf_start(spark, sf_dir)
+    live = live.localCheckpoint(eager=True)
+    # The identity component map is referenced ONCE (the end-of-round-0
+    # comp update) over the persisted deg relation, so a checkpoint on
+    # it paid a job for lineage the single reference never re-executes
+    # (r13-opt).
     sel = None
     for rnd in range(_MSF_ROUNDS):
         if rnd == 0:
@@ -2476,43 +2513,9 @@ def boruvka_msf_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("lo").alias("ca"), F.col("hi").alias("cb"),
             )
         else:
-            ca = comp.select(F.col("node").alias("lo"), F.col("c").alias("ca"))
-            cb = comp.select(F.col("node").alias("hi"), F.col("c").alias("cb"))
-            cross = (
-                live.join(F.broadcast(ca), "lo")
-                .join(F.broadcast(cb), "hi")
-                .filter(F.col("ca") != F.col("cb"))
-                .select("lo", "hi", "w", "wkey", "ca", "cb")
-                .localCheckpoint(eager=True)
-            )
+            cross = _msf_cross(live, comp).localCheckpoint(eager=True)
             live = cross.select("lo", "hi", "w", "wkey")  # sealed survivors
-        # Both incidence directions via one map-side explode instead of
-        # a self-union: the sealed cross relation is scanned ONCE per
-        # selection round (r14; §2.4 — same aggregate input, one scan).
-        incid = cross.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("ca").alias("c"), F.col("cb").alias("d"),
-                        F.col("lo"), F.col("hi"), F.col("w"), F.col("wkey"),
-                    ),
-                    F.struct(
-                        F.col("cb").alias("c"), F.col("ca").alias("d"),
-                        F.col("lo"), F.col("hi"), F.col("w"), F.col("wkey"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e.c", "e.d", "e.lo", "e.hi", "e.w", "e.wkey")
-        chosen = (
-            incid.groupBy("c")
-            .agg(
-                F.min_by("d", "wkey").alias("d"),
-                F.min_by("lo", "wkey").alias("lo"),
-                F.min_by("hi", "wkey").alias("hi"),
-                F.min_by("w", "wkey").alias("w"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        chosen = _msf_choose(cross).localCheckpoint(eager=True)
         # Convergence probe PIGGYBACKS on the sealed selection result
         # (r14; §5 — one fewer action per round): chosen is empty iff
         # cross found no cut edges, so the former cross.isEmpty() job
@@ -2565,33 +2568,8 @@ boruvka_msf_trade.__doc__ = boruvka_msf_trade.__doc__.format(
 
 
 def boruvka_msf_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: edge derivation + ONE selection round (the
-    executed operator localCheckpoints per round, WSP precedent)."""
-    edges, deg = _trade_edges(spark, sf_dir)
-    live = (
-        edges.filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
-        .withColumn("w", _wsp_weight(F.col("lo"), F.col("hi")))
-    )
-    live = live.withColumn(
-        "wkey", _msf_wkey(F.col("w"), F.col("lo"), F.col("hi"))
-    )
-    comp = deg.select(F.col("src").alias("node"), F.col("src").alias("c"))
-    ca = comp.select(F.col("node").alias("lo"), F.col("c").alias("ca"))
-    cb = comp.select(F.col("node").alias("hi"), F.col("c").alias("cb"))
-    cross = (
-        live.join(F.broadcast(ca), "lo")
-        .join(F.broadcast(cb), "hi")
-        .filter(F.col("ca") != F.col("cb"))
-    )
-    incid = cross.select(
-        F.col("ca").alias("c"), "lo", "hi", "w", "wkey"
-    ).unionAll(cross.select(F.col("cb").alias("c"), "lo", "hi", "w", "wkey"))
-    return incid.groupBy("c").agg(
-        F.min_by("lo", "wkey").alias("lo"),
-        F.min_by("hi", "wkey").alias("hi"),
-        F.min_by("w", "wkey").alias("w"),
-    )
+    """Plan proxy: edge derivation + one cross-edge selection round."""
+    return _msf_choose(_msf_cross(*_msf_start(spark, sf_dir)))
 
 
 def _msf_oracle() -> str:

@@ -915,6 +915,32 @@ def _kcen_qvec_expr() -> object:
     )
 
 
+def _kcen_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, q): the quantized embedding table."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _kcen_qvec_expr().alias("q")
+    )
+
+
+def _kcen_d2(center_q) -> object:
+    """Exact squared L2 distance from ``q`` to one center, the center's
+    integer vector inlined as an array literal (a map-side expression,
+    no join)."""
+    vec = "array(" + ",".join(f"{int(x)}L" for x in center_q) + ")"
+    return F.expr(_KCEN_D2_SPARK.format(c=vec))
+
+
+def _kcen_state(emb: DataFrame, seed_q) -> DataFrame:
+    """(vec_id, q, mind): every point's distance to the seed center."""
+    return emb.withColumn("mind", _kcen_d2(seed_q))
+
+
+def _kcen_farthest(state: DataFrame) -> DataFrame:
+    """The round's pick: largest min-distance, ties to the lowest
+    vec_id — one TakeOrdered(1)."""
+    return state.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1)
+
+
 def kcenter_diversity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Farthest-first traversal (greedy k-center) over the embedding
     table — DIVERSITY-driven coreset selection, the submodular
@@ -943,27 +969,14 @@ def kcenter_diversity_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce; at 1B vectors each round is one distributed pass, the
     textbook distributed k-center.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _kcen_qvec_expr().alias("q")
-    )
+    emb = _kcen_points(spark, sf_dir)
     seed = emb.orderBy("vec_id").limit(1).collect()[0]  # bounded: 1 row
     picks = [(1, int(seed.vec_id), 0)]
-
-    def lit_vec(v) -> str:
-        return "array(" + ",".join(f"{int(x)}L" for x in v) + ")"
-
-    state = emb.withColumn(
-        "mind", F.expr(_KCEN_D2_SPARK.format(c=lit_vec(seed.q)))
-    ).localCheckpoint(eager=True)
+    state = _kcen_state(emb, seed.q).localCheckpoint(eager=True)
     for r in range(2, _KCEN_K + 1):
-        top = (
-            state.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1).collect()[0]
-        )  # bounded: 1 row per round
+        top = _kcen_farthest(state).collect()[0]  # bounded: 1 row per round
         picks.append((r, int(top.vec_id), int(top.mind)))
-        state = state.withColumn(
-            "mind",
-            F.least("mind", F.expr(_KCEN_D2_SPARK.format(c=lit_vec(top.q)))),
-        )
+        state = state.withColumn("mind", F.least("mind", _kcen_d2(top.q)))
     return spark.createDataFrame(
         picks, "sel_round bigint, vec_id bigint, maxmin_d2q bigint"
     )
@@ -1047,6 +1060,18 @@ def _gsc_doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gsc_best(state: DataFrame) -> DataFrame:
+    """The round's pick: the document covering the most still-uncovered
+    bigrams, ties to the lowest doc_id — one count aggregate +
+    TakeOrdered(1)."""
+    return (
+        state.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("gain"))
+        .orderBy(F.desc("gain"), F.asc("doc_id"))
+        .limit(1)
+    )
+
+
 def greedy_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy maximum-coverage document selection: {K} rounds, each
     picking the document whose bigram set covers the MOST still-
@@ -1077,13 +1102,7 @@ def greedy_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks = []
     total = 0
     for r in range(1, _GSC_K + 1):
-        top = (
-            state.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .orderBy(F.desc("gain"), F.asc("doc_id"))
-            .limit(1)
-            .collect()[0]
-        )  # bounded: 1 row per round
+        top = _gsc_best(state).collect()[0]  # bounded: 1 row per round
         total += int(top.gain)
         picks.append((r, int(top.doc_id), int(top.gain), total))
         ptoks = [
@@ -1141,28 +1160,15 @@ register("greedy_set_cover", greedy_set_cover, _gsc_oracle())
 
 
 def kcenter_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: quantized scan + one min-distance update +
-    the TakeOrdered(1) round reduce (the executed operator's per-round
-    shape; the driver loop collects, so the full key is not a single
-    lazy plan — k-core/WSP proxy precedent)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _kcen_qvec_expr().alias("q")
-    )
-    zero = "array(" + ",".join(["0L"] * 64) + ")"
-    state = emb.withColumn("mind", F.expr(_KCEN_D2_SPARK.format(c=zero)))
-    return state.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1)
+    """Plan proxy: quantized scan + one min-distance update + the
+    round's TakeOrdered(1); a zero vector stands in for the center the
+    key collects."""
+    return _kcen_farthest(_kcen_state(_kcen_points(spark, sf_dir), [0] * 64))
 
 
 def gsc_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: bigram derivation + one greedy round
-    (gain aggregate + TakeOrdered(1))."""
-    state = _gsc_doc_bigrams(spark, sf_dir)
-    return (
-        state.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("gain"))
-        .orderBy(F.desc("gain"), F.asc("doc_id"))
-        .limit(1)
-    )
+    """Plan proxy: bigram derivation + one greedy round."""
+    return _gsc_best(_gsc_doc_bigrams(spark, sf_dir))
 
 
 register_plan_proxy("kcenter_diversity_select", kcenter_iteration_plan)

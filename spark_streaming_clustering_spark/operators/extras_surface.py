@@ -105,6 +105,8 @@ golden constants.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -6725,6 +6727,46 @@ _EQB_PCTS = (25, 50, 75, 90, 99)
 _EQB_BUCKETS = 4096
 
 
+def _eqb_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``o_totalprice`` as integer cents."""
+    return load_table(spark, sf_dir, "orders").select(
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents")
+    )
+
+
+def _eqb_histogram(cents: DataFrame, brackets: list) -> DataFrame:
+    """One round's bucket counts (g, b, c): rows inside any of the
+    ``brackets`` (the OR of the ranges is the pushed scan filter) are
+    tagged with their bracket index g and one of ``_EQB_BUCKETS``
+    equal sub-ranges b, then counted by a map-side-combining hash
+    aggregate."""
+    B = _EQB_BUCKETS
+    scan = cents.filter(
+        functools.reduce(
+            lambda a, b: a | b,
+            [
+                (F.col("cents") >= F.lit(lo)) & (F.col("cents") <= F.lit(hi))
+                for lo, hi in brackets
+            ],
+        )
+    )
+    structs = [
+        F.when(
+            (F.col("cents") >= F.lit(lo)) & (F.col("cents") <= F.lit(hi)),
+            F.struct(
+                F.lit(gi).alias("g"),
+                F.expr(f"((cents - {lo}L) * {B}) div {hi - lo + 1}L").alias("b"),
+            ),
+        )
+        for gi, (lo, hi) in enumerate(brackets)
+    ]
+    return (
+        scan.select(F.explode(F.array_compact(F.array(*structs))).alias("gb"))
+        .groupBy(F.col("gb.g").alias("g"), F.col("gb.b").alias("b"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 def exact_quantile_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT multi-quantile selection over ``o_totalprice`` (integer
     cents) by bisecting the VALUE DOMAIN — the selection-without-sort
@@ -6757,11 +6799,7 @@ def exact_quantile_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
     bracket (the bounded-collect class of the kmeans/gstream M-step),
     vs a global sort's full repartition of 100 TB.
     """
-    cents = (
-        load_table(spark, sf_dir, "orders")
-        .select(F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"))
-        .persist()
-    )
+    cents = _eqb_cents(spark, sf_dir).persist()
     try:
         row = cents.agg(
             F.count(F.lit(1)).alias("n"),
@@ -6772,8 +6810,6 @@ def exact_quantile_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
         ks = {p: max(1, (n * p) // 100) for p in _EQB_PCTS}
         brackets = {p: (int(row["lo"]), int(row["hi"])) for p in _EQB_PCTS}
         base = {p: 0 for p in _EQB_PCTS}  # count(<= lo-1), exact
-        import functools
-
         B = _EQB_BUCKETS
         while any(lo < hi for lo, hi in brackets.values()):
             # Distinct active brackets; quantiles whose brackets
@@ -6784,37 +6820,8 @@ def exact_quantile_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if lo < hi:
                     groups.setdefault((lo, hi), []).append(p)
             glist = list(groups)
-            scan = cents.filter(
-                functools.reduce(
-                    lambda a, b: a | b,
-                    [
-                        (F.col("cents") >= F.lit(lo))
-                        & (F.col("cents") <= F.lit(hi))
-                        for lo, hi in glist
-                    ],
-                )
-            )
-            structs = [
-                F.when(
-                    (F.col("cents") >= F.lit(lo))
-                    & (F.col("cents") <= F.lit(hi)),
-                    F.struct(
-                        F.lit(gi).alias("g"),
-                        F.expr(
-                            f"((cents - {lo}L) * {B}) div {hi - lo + 1}L"
-                        ).alias("b"),
-                    ),
-                )
-                for gi, (lo, hi) in enumerate(glist)
-            ]
-            hist = (
-                scan.select(
-                    F.explode(F.array_compact(F.array(*structs))).alias("gb")
-                )
-                .groupBy(F.col("gb.g").alias("g"), F.col("gb.b").alias("b"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .collect()
-            )  # bounded: <= len(glist) * B rows per round
+            # bounded: <= len(glist) * B rows per round
+            hist = _eqb_histogram(cents, glist).collect()
             counts = {(int(r["g"]), int(r["b"])): int(r["c"]) for r in hist}
             for gi, (lo, hi) in enumerate(glist):
                 span = hi - lo + 1
@@ -6852,25 +6859,9 @@ exact_quantile_bisect.__doc__ = exact_quantile_bisect.__doc__.format(
 
 
 def _eqb_round_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Representative one-round plan for the drift gate: the pushed
-    range filter + the map-side-combining bucket histogram the loop
-    repeats (single-bracket round; multi-bracket rounds add the
-    array_compact/explode tagging)."""
-    cents = load_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents")
-    )
-    lo, hi = 100000, 25000000
-    return (
-        cents.filter(
-            (F.col("cents") >= F.lit(lo)) & (F.col("cents") <= F.lit(hi))
-        )
-        .groupBy(
-            F.expr(
-                f"((cents - {lo}L) * {_EQB_BUCKETS}) div {hi - lo + 1}L"
-            ).alias("b")
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    """Plan proxy: one histogram round over a fixed stand-in bracket
+    (the key derives its brackets from collected counts)."""
+    return _eqb_histogram(_eqb_cents(spark, sf_dir), [(100000, 25000000)])
 
 
 register(
@@ -6905,6 +6896,27 @@ def _tdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
+def _ols_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fit's 9 exact sufficient statistics over ``documents``, as
+    one map-side-combined aggregate (one row)."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        F.col("n_chars").cast("bigint").alias("x1"),
+        F.size(F.split("text", " ")).cast("bigint").alias("x2"),
+        F.size(F.array_distinct(F.split("text", " "))).cast("bigint").alias("y"),
+    )
+    return docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x1").alias("s1"),
+        F.sum("x2").alias("s2"),
+        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
+        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
+        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
+    )
+
+
 def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-feature least squares by NORMAL EQUATIONS — the closed-
     form distributed model-fit class: ``regression_agg_q`` is the
@@ -6931,22 +6943,7 @@ def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the d(d+3)/2 sums are still one pass, and exactness rests on
     integer inputs, not on float summation order.
     """
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("bigint").alias("x1"),
-        F.size(F.split("text", " ")).cast("bigint").alias("x2"),
-        F.size(F.array_distinct(F.split("text", " "))).cast("bigint").alias("y"),
-    )
-    s = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-    ).collect()[0]  # bounded: the 9 sufficient statistics, 1 row
+    s = _ols_sums(spark, sf_dir).collect()[0]  # bounded: 9 statistics, 1 row
     n, s1, s2 = int(s["n"]), int(s["s1"]), int(s["s2"])
     s11, s12, s22 = int(s["s11"]), int(s["s12"]), int(s["s22"])
     sy, s1y, s2y = int(s["sy"]), int(s["s1y"]), int(s["s2y"])
@@ -6976,21 +6973,6 @@ def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         [(n, betas[0], betas[1], betas[2])],
         "n bigint, beta0_micro bigint, beta1_micro bigint, beta2_micro bigint",
-    )
-
-
-def _ols_sums_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Representative plan for the drift gate: the one map-side-
-    combined sufficient-statistics aggregate the fit executes."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("bigint").alias("x1"),
-        F.size(F.split("text", " ")).cast("bigint").alias("x2"),
-        F.size(F.array_distinct(F.split("text", " "))).cast("bigint").alias("y"),
-    )
-    return docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
     )
 
 
@@ -7031,4 +7013,4 @@ register(
     FROM dets
     """,
 )
-register_plan_proxy("ols_normal_equations", _ols_sums_plan)
+register_plan_proxy("ols_normal_equations", _ols_sums)

@@ -395,6 +395,38 @@ _SNM_PLEN = 8
 _SNM_JT = 0.5
 
 
+def _snm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked-window candidate pairs (doc_a < doc_b, wdist): within
+    each ``_SNM_PLEN``-char prefix block, ordered by (text, doc_id),
+    every doc pairs with its next ``_SNM_W`` neighbours — ONE window
+    exec evaluates all W leads."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", F.substring("text", 1, _SNM_PLEN).alias("blk")
+    )
+    w = Window.partitionBy("blk").orderBy("text", "doc_id")
+    leads = docs.select(
+        "doc_id",
+        *[
+            F.lead("doc_id", k).over(w).alias(f"nbr{k}")
+            for k in range(1, _SNM_W + 1)
+        ],
+    )
+    return (
+        leads.select(
+            "doc_id",
+            F.posexplode(
+                F.array(*[F.col(f"nbr{k}") for k in range(1, _SNM_W + 1)])
+            ).alias("kidx", "nbr"),
+        )
+        .filter(F.col("nbr").isNotNull())
+        .select(
+            F.least("doc_id", "nbr").alias("doc_a"),
+            F.greatest("doc_id", "nbr").alias("doc_b"),
+            (F.col("kidx") + 1).cast("bigint").alias("wdist"),
+        )
+    )
+
+
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood (SNM) near-dup detection: the SORT-based
     candidate-generation class the dedup family lacks — every other
@@ -421,31 +453,6 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-block misses are the quantified recall cost of that choice
     (zero at every fixture).
     """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.substring("text", 1, _SNM_PLEN).alias("blk")
-    )
-    w = Window.partitionBy("blk").orderBy("text", "doc_id")
-    leads = docs.select(
-        "doc_id",
-        *[
-            F.lead("doc_id", k).over(w).alias(f"nbr{k}")
-            for k in range(1, _SNM_W + 1)
-        ],
-    )
-    cand = (
-        leads.select(
-            "doc_id",
-            F.posexplode(
-                F.array(*[F.col(f"nbr{k}") for k in range(1, _SNM_W + 1)])
-            ).alias("kidx", "nbr"),
-        )
-        .filter(F.col("nbr").isNotNull())
-        .select(
-            F.least("doc_id", "nbr").alias("doc_a"),
-            F.greatest("doc_id", "nbr").alias("doc_b"),
-            (F.col("kidx") + 1).cast("bigint").alias("wdist"),
-        )
-    )
     # Verify-side pruning (r13-opt): every shingle consumer below only
     # ever looks at CANDIDATE docs, so seal the candidate pairs (one
     # bounded window job), semi-join the shingle stream down to those
@@ -456,7 +463,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate-bounded subset (plan: 5 documents scans -> 2).  The
     # per-doc shingle sets of candidate docs are untouched, so sizes/
     # intersections — and the result — are identical.
-    cand = cand.localCheckpoint(eager=True)
+    cand = _snm_candidates(spark, sf_dir).localCheckpoint(eager=True)
     cdocs = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
@@ -491,41 +498,6 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def snm_candidate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan for ``dedup_sorted_neighborhood``: the
-    executed operator seals the candidate pairs and the pruned shingle
-    relation (r13-opt), so its RETURNED plan is a join over bare RDD
-    scans — the all-zero-fingerprint blind spot the
-    ``dedup_cc_iteration_plan`` precedent exists for.  This proxy
-    rebuilds the blocked-window candidate generation (the corpus-scale
-    pass the key actually pays) without the checkpoint."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.substring("text", 1, _SNM_PLEN).alias("blk")
-    )
-    w = Window.partitionBy("blk").orderBy("text", "doc_id")
-    leads = docs.select(
-        "doc_id",
-        *[
-            F.lead("doc_id", k).over(w).alias(f"nbr{k}")
-            for k in range(1, _SNM_W + 1)
-        ],
-    )
-    return (
-        leads.select(
-            "doc_id",
-            F.posexplode(
-                F.array(*[F.col(f"nbr{k}") for k in range(1, _SNM_W + 1)])
-            ).alias("kidx", "nbr"),
-        )
-        .filter(F.col("nbr").isNotNull())
-        .select(
-            F.least("doc_id", "nbr").alias("doc_a"),
-            F.greatest("doc_id", "nbr").alias("doc_b"),
-            (F.col("kidx") + 1).cast("bigint").alias("wdist"),
-        )
-    )
-
-
 register(
     "dedup_sorted_neighborhood",
     dedup_sorted_neighborhood,
@@ -555,7 +527,7 @@ register(
     WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= {_SNM_JT}
     """,
 )
-register_plan_proxy("dedup_sorted_neighborhood", snm_candidate_plan)
+register_plan_proxy("dedup_sorted_neighborhood", _snm_candidates)
 
 
 N_EMB_BLOCKS = 8

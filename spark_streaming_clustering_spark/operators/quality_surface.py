@@ -443,6 +443,25 @@ register("dedup_simhash_hamming", dedup_simhash_hamming, _simham_oracle())
 _MIS_ROUNDS = 8
 
 
+def _mis_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric (u, v) view of the ``dedup_simhash_hamming`` pairs."""
+    pairs = dedup_simhash_hamming(spark, sf_dir).select("doc_a", "doc_b")
+    return pairs.unionAll(
+        pairs.select(
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+        )
+    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+
+
+def _mis_live(sym: DataFrame) -> DataFrame:
+    """Every node live, with its md5-prefix priority h."""
+    return (
+        sym.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", _hash28(F.col("node").cast("string")).alias("h"))
+    )
+
+
 def _mis_chosen(sym: DataFrame, live: DataFrame) -> DataFrame:
     """Luby selection step: the live nodes whose (hash, id) priority is
     a LOCAL MINIMUM among live neighbors — one join + one anti-join
@@ -495,18 +514,8 @@ def dedup_mis_max_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT-EXISTS blockers.  Priorities are the house 28-bit md5 prefix
     of the doc id — identical integers on both engines.
     """
-    pairs = dedup_simhash_hamming(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.unionAll(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    sym = sym.localCheckpoint(eager=True)
-    live = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", _hash28(F.col("node").cast("string")).alias("h"))
-    ).localCheckpoint(eager=True)
+    sym = _mis_graph(spark, sf_dir).localCheckpoint(eager=True)
+    live = _mis_live(sym).localCheckpoint(eager=True)
     kept = []
     for _ in range(_MIS_ROUNDS):
         chosen = _mis_chosen(sym, live).localCheckpoint(eager=True)
@@ -550,21 +559,9 @@ dedup_mis_max_retention.__doc__ = dedup_mis_max_retention.__doc__.format(
 
 
 def dedup_mis_iteration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-only lazy plan: pair graph + ONE Luby selection round (the
-    executed operator localCheckpoints — the
-    ``graph_kcore_iteration_plan`` precedent)."""
-    pairs = dedup_simhash_hamming(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.unionAll(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    live = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", _hash28(F.col("node").cast("string")).alias("h"))
-    )
-    return _mis_chosen(sym, live)
+    """Plan proxy: pair graph + one Luby selection round."""
+    sym = _mis_graph(spark, sf_dir)
+    return _mis_chosen(sym, _mis_live(sym))
 
 
 def _mis_oracle() -> str:

@@ -21,14 +21,34 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Lazy stand-in plans for keys whose BUILT result cannot be audited:
-# an operator that localCheckpoints internally returns a plan truncated
-# to an RDD scan (all-zero fingerprint — the drift gate was blind to
-# dedup_connected_components, review finding r7).  The proxy builds the
-# representative inner plan (e.g. one propagation iteration) WITHOUT
-# the truncation, so plan_audit / test_plan_drift fingerprint the shape
-# that actually executes.
+# Lazy stand-in plans for keys whose BUILT result cannot be audited: a
+# key that localCheckpoints (or collects) internally returns a plan
+# truncated to an RDD scan or a local relation, which fingerprints as
+# all zeros (the drift gate was blind to dedup_connected_components,
+# review finding r7).  The rule: a proxy COMPOSES the unsealed helpers
+# its key executes — input derivation, initial state, one round — and
+# never re-spells them, so it cannot drift from what runs.  The key
+# seals those helpers' output itself; a helper that sealed inside would
+# turn the proxy back into an RDD scan.  A value the key collects on the
+# driver (a center vector, a bracket) becomes a fixed literal here.
 PLAN_PROXIES: dict[str, QueryFn] = {}
+
+# Keys whose builders execute work eagerly (streaming queries, trainers,
+# ML fits): the returned DataFrame is only a memory-sink/file read-back,
+# so it is not explainable as one lazy plan.  Every plan sweep
+# (tests/test_plans.py, tests/test_plan_drift.py, scripts/plan_audit.py)
+# skips this one set.
+EAGER = frozenset({
+    "gstream_epoch",
+    "streaming_file_source",
+    "streaming_window_agg",
+    "stateful_running_agg",
+    "mllib_kmeans_baseline",
+    "streaming_chained_windows",
+    "streaming_rocksdb_state",
+    "stream_idempotent_sink",
+    "stream_fanout_sinks",
+})
 
 
 def register(key: str, fn: QueryFn, oracle: str | None = None) -> None:

@@ -33,6 +33,7 @@ SURVEY.md section 2's "complete analytics engine" contract.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.tables import register_views
 from .registry import register, register_plan_proxy
@@ -551,43 +552,20 @@ _JACCARD_NEIGHBORS = """
     ORDER BY jaccard_milli DESC, s_a, s_b
 """
 
-def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> "DataFrame":
-    """Neighbor-set Jaccard similarity over the supplier-part
-    bipartite graph — the link-prediction / entity-similarity
-    primitive (suppliers are 'similar' when their part catalogs
-    overlap).  Candidate pairs come ONLY from suppliers sharing a
-    part, which the fixture bounds at 4 suppliers per part — the same
-    bounded-candidates discipline as the dedup family: no all-pairs
-    expansion, ever.  The n_inter >= 3 floor prunes noise pairs before
-    the degree join; jaccard_milli = floor(1000*|A∩B| / |A∪B|) stays
-    integer-exact.
 
-    r14 one-pass rewrite (§6 read-once, §2.3): the shared-SQL shape
-    scanned partsupp THREE times (the deg COUNT DISTINCT plus both
-    sides of the ps_partkey self-join) and paid two count-distinct
-    exchanges plus a join exchange.  Instead, ONE aggregate builds the
-    sealed (part -> sorted distinct supplier set) relation; degrees
-    are an explode+count over it (count(*) = COUNT(DISTINCT part)
-    because each part contributes a supplier at most once via the
-    set), and candidate pairs are the per-part unordered combinations
-    (each (s_a < s_b, part) appears exactly once, so count(*) =
-    COUNT(DISTINCT part) there too — the self-join's distinct-count
-    multiset, row for row).  The final expression text is byte-
-    identical to the shared SQL's, so the floor-division semantics
-    match the oracle exactly.  At 100 TB: one partsupp-derivation
-    pass, one part-keyed exchange, two tiny pair/degree aggregates,
-    two supplier-dimension broadcast joins (bounded by the supplier
-    dimension — safe to hint).
-    """
-    from pyspark.sql import functions as F
-
+def _jaccard_part_sets(spark: SparkSession, sf_dir: str) -> "DataFrame":
+    """(ps_partkey, ss): each part's sorted distinct supplier set."""
     register_ext_views(spark, sf_dir)
-    plist = (
+    return (
         spark.table("partsupp")
         .groupBy("ps_partkey")
         .agg(F.array_sort(F.collect_set("ps_suppkey")).alias("ss"))
-        .localCheckpoint(eager=True)  # sealed: feeds degrees AND pairs
     )
+
+
+def _jaccard_from_sets(plist: "DataFrame") -> "DataFrame":
+    """Degrees and candidate pairs off the (part -> supplier set)
+    relation, joined into the scored, ordered result."""
     deg = (
         plist.select(F.explode("ss").alias("s"))
         .groupBy("s")
@@ -627,43 +605,44 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> "DataFrame":
     )
 
 
-def _jaccard_onepass_plan(spark: SparkSession, sf_dir: str) -> "DataFrame":
-    """Audit-only LAZY plan for the drift gate (the snm_candidate_plan
-    precedent): the executed operator localCheckpoints the (part ->
-    supplier set) relation, hiding everything upstream behind the
-    seal, so this proxy pins the same shape unsealed.  The lazy twin
-    derives partsupp twice (both consumers inline the aggregate); the
-    EXECUTED operator derives it once off the sealed relation."""
-    from pyspark.sql import functions as F
+def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> "DataFrame":
+    """Neighbor-set Jaccard similarity over the supplier-part
+    bipartite graph — the link-prediction / entity-similarity
+    primitive (suppliers are 'similar' when their part catalogs
+    overlap).  Candidate pairs come ONLY from suppliers sharing a
+    part, which the fixture bounds at 4 suppliers per part — the same
+    bounded-candidates discipline as the dedup family: no all-pairs
+    expansion, ever.  The n_inter >= 3 floor prunes noise pairs before
+    the degree join; jaccard_milli = floor(1000*|A∩B| / |A∪B|) stays
+    integer-exact.
 
-    register_ext_views(spark, sf_dir)
-    plist = (
-        spark.table("partsupp")
-        .groupBy("ps_partkey")
-        .agg(F.array_sort(F.collect_set("ps_suppkey")).alias("ss"))
+    r14 one-pass rewrite (§6 read-once, §2.3): the shared-SQL shape
+    scanned partsupp THREE times (the deg COUNT DISTINCT plus both
+    sides of the ps_partkey self-join) and paid two count-distinct
+    exchanges plus a join exchange.  Instead, ONE aggregate builds the
+    sealed (part -> sorted distinct supplier set) relation; degrees
+    are an explode+count over it (count(*) = COUNT(DISTINCT part)
+    because each part contributes a supplier at most once via the
+    set), and candidate pairs are the per-part unordered combinations
+    (each (s_a < s_b, part) appears exactly once, so count(*) =
+    COUNT(DISTINCT part) there too — the self-join's distinct-count
+    multiset, row for row).  The final expression text is byte-
+    identical to the shared SQL's, so the floor-division semantics
+    match the oracle exactly.  At 100 TB: one partsupp-derivation
+    pass, one part-keyed exchange, two tiny pair/degree aggregates,
+    two supplier-dimension broadcast joins (bounded by the supplier
+    dimension — safe to hint).
+    """
+    return _jaccard_from_sets(
+        # sealed: feeds degrees AND pairs
+        _jaccard_part_sets(spark, sf_dir).localCheckpoint(eager=True)
     )
-    deg = (
-        plist.select(F.explode("ss").alias("s"))
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    pairs = (
-        plist.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ss, (x, i) ->"
-                    " transform(slice(ss, i + 2, size(ss)),"
-                    " y -> struct(x AS s_a, y AS s_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.s_a").alias("s_a"), F.col("p.s_b").alias("s_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .filter(F.col("n_inter") >= 3)
-    )
-    da = deg.select(F.col("s").alias("s_a"), F.col("n").alias("n_a"))
-    db = deg.select(F.col("s").alias("s_b"), F.col("n").alias("n_b"))
-    return pairs.join(F.broadcast(da), "s_a").join(F.broadcast(db), "s_b")
+
+
+def _jaccard_onepass_plan(spark: SparkSession, sf_dir: str) -> "DataFrame":
+    """Plan proxy: the key's plan with the supplier-set relation left
+    unsealed (so both consumers inline its aggregate)."""
+    return _jaccard_from_sets(_jaccard_part_sets(spark, sf_dir))
 
 
 register(

@@ -44,12 +44,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor (region /
-# nation are fixed-cardinality; customer/supplier/part grow with SF but stay
-# far below fact-table size — still broadcastable at sf<=1; at 100 TB the
-# planner's autoBroadcastJoinThreshold makes the call via AQE runtime stats).
-ALWAYS_BROADCAST = ("region", "nation")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:

@@ -73,11 +73,22 @@ def _assign_top2(x: np.ndarray, cent: np.ndarray):
     return bmu1, bmu2, d2_min
 
 
-def _check_finite(x: np.ndarray, ids) -> None:
-    """Fail the batch on a null or non-finite feature (an empty CSV
-    field reads as null), naming the first offending point id.  Left
-    in, a NaN distance makes the winner's prototype NaN for the rest of
-    the run; the reference fails the batch too (``"".toDouble``)."""
+def _check_points(x: np.ndarray, widths, ids, dim: int) -> None:
+    """Fail the batch, naming the first offending point id, on a point
+    whose feature count differs from the model's dimension, then on a
+    null or non-finite feature (an empty CSV field reads as null).
+    Left in, a NaN distance makes the winner's prototype NaN for the
+    rest of the run; the reference fails the batch too
+    (``"".toDouble``).  A null ``widths`` entry (a null features array)
+    is left to the finite check: its projected features are null."""
+    widths = np.asarray(widths, dtype=np.float64)
+    bad = np.isfinite(widths) & (widths != dim)
+    if bad.any():
+        i = np.argmax(bad)
+        raise ValueError(
+            f"point id {int(ids[i])} has {int(widths[i])} features,"
+            f" the model has {dim}"
+        )
     bad = ~np.isfinite(x).all(axis=1)
     if bad.any():
         raise ValueError(
@@ -137,7 +148,7 @@ def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[i
     dominate.
     """
     x = np.ascontiguousarray(x, dtype=np.float64)
-    _check_finite(x, ids)
+    _check_points(x, np.full(len(x), x.shape[1]), ids, centroids.shape[1])
     bmu1, bmu2, d2_min = _assign_top2(x, centroids)
     return _merge_partials(
         _group_partials(x, ids, bmu1, bmu2, d2_min, len(centroids)), x.shape[1]
@@ -147,22 +158,19 @@ def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[i
 def _partial_stats(pdf_iter, centroids_bc):
     """Executor side: vectorized top-2 assignment + partial aggregation.
 
-    Each batch holds one scalar double column per dimension, then
-    ``id``: the matrix is a cheap 2-D ``to_numpy`` over contiguous Arrow
-    buffers, where an array<double> column would materialize one Python
-    object per row.
+    Each batch holds one scalar double column per dimension, then the
+    point's width ``n`` and ``id`` (see ``_estep_input``): the matrix is
+    a cheap 2-D ``to_numpy`` over contiguous Arrow buffers, where an
+    array<double> column would materialize one Python object per row.
     """
     cent = centroids_bc.value  # (n, dim) float64
+    dim = cent.shape[1]
     for pdf in pdf_iter:
         if len(pdf) == 0:
             continue
-        feats = pdf.iloc[:, :-1]
-        # Catalyst folds features[i] past the end of a narrower array(...)
-        # to null: drop the all-null columns so the matmul rejects the
-        # dimension mismatch instead of assigning on NaN distances
-        x = feats.loc[:, feats.notna().any()].to_numpy(dtype=np.float64)
+        x = pdf.iloc[:, :dim].to_numpy(dtype=np.float64)
         ids = pdf["id"].to_numpy()
-        _check_finite(x, ids)
+        _check_points(x, pdf["n"].to_numpy(dtype=np.float64), ids, dim)
         bmu1, bmu2, d2_min = _assign_top2(x, cent)
         parts = list(_group_partials(x, ids, bmu1, bmu2, d2_min, len(cent)))
         yield pd.DataFrame(
@@ -179,13 +187,19 @@ def _partial_stats(pdf_iter, centroids_bc):
         )
 
 
-def _estep_input(batch_df: DataFrame, dim: int) -> DataFrame:
+def _estep_input(batch_df: DataFrame, dim: int, width: bool = False) -> DataFrame:
     """The E-step's input projection: ``features[0] .. features[dim-1]``
-    as scalar columns, then ``id``.  When ``features`` is built with
-    ``array(x0, x1, ...)`` (``sources.points.read_points``), Catalyst
-    folds each ``features[i]`` back to its source column, so the scan
-    feeds Arrow scalar columns and no array is ever built."""
-    return batch_df.select(*(F.col("features")[i] for i in range(dim)), "id")
+    as scalar columns, then (with ``width``) ``size(features) AS n``,
+    then ``id``.  When ``features`` is built with ``array(x0, x1, ...)``
+    (``sources.points.read_points``), Catalyst folds each
+    ``features[i]`` back to its source column and ``n`` to a literal,
+    so the scan feeds Arrow scalar columns and no array is ever built.
+    ``get`` yields null past the end of a narrower array (where ANSI
+    ``features[i]`` would raise), so the width check in the executor
+    names the point."""
+    feats = [F.get("features", i).alias(f"features[{i}]") for i in range(dim)]
+    n = [F.size("features").alias("n")] if width else []
+    return batch_df.select(*feats, *n, "id")
 
 
 def compute_point_stats(batch_df: DataFrame, centroids: np.ndarray) -> dict[int, PointStats]:
@@ -197,7 +211,7 @@ def compute_point_stats(batch_df: DataFrame, centroids: np.ndarray) -> dict[int,
     spark = batch_df.sparkSession
     centroids_bc = spark.sparkContext.broadcast(np.ascontiguousarray(centroids))
     try:
-        rows = _estep_input(batch_df, centroids.shape[1]).mapInPandas(
+        rows = _estep_input(batch_df, centroids.shape[1], width=True).mapInPandas(
             lambda it: _partial_stats(it, centroids_bc), PARTIAL_SCHEMA
         ).collect()
     finally:

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from spark_streaming_clustering_spark.operators.analytics_surface import (
@@ -21,7 +23,9 @@ from spark_streaming_clustering_spark.operators.analytics_surface import (
 from spark_streaming_clustering_spark.operators.pipeline_surface import (
     dedup_ngram_jaccard,
 )
+from spark_streaming_clustering_spark.operators.registry import ORACLES
 from spark_streaming_clustering_spark.sources.tables import load_table
+from tests.util_oracle import compare, duck_con
 
 
 def test_funnel_is_monotone(spark, sf_dir):
@@ -553,3 +557,136 @@ def test_wsp_bellman_ford_converges_within_unroll():
         # hop for many nodes (uniform weights would pin dist = w*hop)
         diverse = sum(1 for v in want if want[v] != hop[v] and want[v] != 9 * hop[v])
         assert diverse >= max(1, len(want) // 100), sf
+
+
+# --------------------------------------------------------------------------
+# graph_weighted_shortest_path, boruvka_msf_trade
+# --------------------------------------------------------------------------
+
+
+def test_wsp_oracle_compare(spark, sf_dir):
+    """Driver-shaped oracle compare for the weighted-shortest-path key."""
+    from spark_streaming_clustering_spark.operators.analytics_surface import (
+        graph_weighted_shortest_path,
+    )
+
+    compare(
+        graph_weighted_shortest_path(spark, sf_dir),
+        duck_con(sf_dir),
+        ORACLES["graph_weighted_shortest_path"],
+        "graph_weighted_shortest_path",
+    )
+
+
+SFS = ("sf0.001", "sf0.01", "sf0.1")
+
+
+def _edges(sf: str):
+    """Canonical weighted trade edges (lo, hi, w) straight from parquet
+    — independent of both the Spark builder and the registered oracle
+    (only the weight FORMULA is shared, by contract)."""
+    return duckdb.connect().execute(
+        f"""
+        WITH pairs AS (
+          SELECT DISTINCT o_custkey*2 AS c, l_suppkey*2+1 AS s
+          FROM read_parquet('/root/testdata/{sf}/orders.parquet') o
+          JOIN read_parquet('/root/testdata/{sf}/lineitem.parquet') l
+            ON o_orderkey = l_orderkey)
+        SELECT LEAST(c,s) AS lo, GREATEST(c,s) AS hi,
+               1 + CAST(('0x' || substr(md5(CAST(LEAST(c,s) AS VARCHAR)
+                     || '#' || CAST(GREATEST(c,s) AS VARCHAR)),1,7))
+                   AS BIGINT) % 9 AS w
+        FROM pairs
+        """
+    ).fetchall()
+
+
+def _kruskal(rows):
+    """Exact MSF by Kruskal + union-find over the (w, lo, hi) total
+    order — a different algorithm from the distributed Borůvka."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    msf = set()
+    for w, lo, hi in sorted((w, lo, hi) for lo, hi, w in rows):
+        ra, rb = find(lo), find(hi)
+        if ra != rb:
+            parent[ra] = rb
+            msf.add((lo, hi, w))
+    return msf
+
+
+def test_msf_wkey_preconditions_all_fixtures():
+    """PRECONDITION of the single-bigint composite key
+    (w * 2^50 + lo * 2^25 + hi): node ids < 2^25 and every undirected
+    edge distinct — at EVERY committed fixture.  A larger fixture must
+    re-establish this or wkey collides silently (the events-ts-monotone
+    precedent)."""
+    for sf in SFS:
+        rows = _edges(sf)
+        assert max(max(lo, hi) for lo, hi, _ in rows) < 1 << 25, sf
+        assert len({(lo, hi) for lo, hi, _ in rows}) == len(rows), sf
+
+
+def test_msf_probe_facts_naive_model_disproved():
+    """The r13 feasibility-probe facts the key's contract rests on:
+    the per-node min-incident-edge forest (round-1 Borůvka, the naive
+    model) is NOT the MSF at any fixture, so the multi-round machinery
+    is load-bearing; and the trade graph is connected, so the MSF has
+    exactly n-1 edges."""
+    for sf in SFS:
+        rows = _edges(sf)
+        msf = _kruskal(rows)
+        nodes = {x for lo, hi, _ in rows for x in (lo, hi)}
+        assert len(msf) == len(nodes) - 1, sf  # connected -> spanning tree
+        best: dict[int, tuple] = {}
+        for lo, hi, w in rows:
+            for nd in (lo, hi):
+                k = (w, lo, hi)
+                if nd not in best or k < best[nd]:
+                    best[nd] = k
+        naive = {(k[1], k[2], k[0]) for k in best.values()}
+        assert naive != msf, sf
+        assert naive < msf or not naive <= msf  # genuinely different set
+
+
+@pytest.mark.parametrize("sf", SFS)
+def test_msf_matches_exact_kruskal(spark, sf):
+    """Edge-for-edge replay pin at every committed fixture: the
+    distributed Borůvka (bounded rounds + partial contraction + early
+    break) returns EXACTLY the unique MSF an independent Kruskal
+    computes — proving the _MSF_ROUNDS cap covers the fixpoint with
+    margin (WSP-Dijkstra precedent; re-run before trusting any new
+    fixture scale, ADVICE r11 unroll-margin rule)."""
+    from spark_streaming_clustering_spark.operators.analytics_surface import (
+        boruvka_msf_trade,
+    )
+
+    got = {
+        (r.lo, r.hi, r.w)
+        for r in boruvka_msf_trade(spark, f"/root/testdata/{sf}").collect()
+    }
+    assert got == _kruskal(_edges(sf)), sf
+
+
+def test_msf_oracle_compare(spark, sf_dir):
+    """Driver-shaped oracle compare (rows + schema + dtypes + values),
+    mirroring CORRECTNESS at the smoke fixture."""
+    from spark_streaming_clustering_spark.operators.analytics_surface import (
+        boruvka_msf_trade,
+    )
+
+    compare(
+        boruvka_msf_trade(spark, sf_dir),
+        duck_con(sf_dir),
+        ORACLES["boruvka_msf_trade"],
+        "boruvka_msf_trade",
+    )

@@ -27,10 +27,14 @@ import os
 import pytest
 
 from spark_streaming_clustering_spark.operators._session_cache import clear_all
-from spark_streaming_clustering_spark.operators.registry import PLAN_PROXIES, QUERIES
+from spark_streaming_clustering_spark.operators.registry import (
+    EAGER,
+    PLAN_PROXIES,
+    QUERIES,
+)
 from spark_streaming_clustering_spark.plans import formatted_plan
 from tests.conftest import SF_ORACLE
-from tests.test_plans import EAGER
+from tests.test_tables import _jobs_run
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -82,3 +86,18 @@ def test_shuffle_heaviest_keys_have_not_regressed(spark):
         "broadcast / extra scan / cartesian). If intentional, regenerate "
         f"with `python scripts/plan_audit.py`: {regressions}"
     )
+
+
+@pytest.mark.parametrize("key", sorted(PLAN_PROXIES))
+def test_plan_proxy_is_lazy_and_unsealed(spark, key):
+    """A proxy composes the unsealed helpers its key executes: once
+    built, a second build runs no Spark job, and its plan still reads a
+    table (a parquet scan, or a session-cached relation).  A helper that
+    localCheckpointed inside would run a job here and turn the proxy
+    back into an all-zero RDD scan the drift gate cannot see through."""
+    audit = _plan_audit_module()
+    PLAN_PROXIES[key](spark, SF_ORACLE)
+    df, jobs = _jobs_run(spark, lambda: PLAN_PROXIES[key](spark, SF_ORACLE))
+    assert jobs == 0
+    fp = audit.fingerprint(formatted_plan(df))
+    assert fp["scans"] + fp["in_memory_scans"] >= 1, fp

@@ -9,26 +9,9 @@ from __future__ import annotations
 
 import pytest
 
-from spark_streaming_clustering_spark.operators.registry import QUERIES
+from spark_streaming_clustering_spark.operators.registry import EAGER, QUERIES
 from spark_streaming_clustering_spark.plans import formatted_plan
 from tests.conftest import SF_ORACLE
-
-# keys whose builders execute work eagerly (streaming queries, trainers,
-# ML fits) — not explainable as a single lazy plan
-EAGER = {
-    "gstream_epoch",
-    "streaming_file_source",
-    "streaming_window_agg",
-    "stateful_running_agg",
-    "mllib_kmeans_baseline",
-    # round-4 batch: each runs a real streaming query eagerly; the
-    # returned DataFrame is only the memory-sink/file read-back, so a
-    # plan assertion on it is vacuous while costing ~10-40 s apiece
-    "streaming_chained_windows",
-    "streaming_rocksdb_state",
-    "stream_idempotent_sink",
-    "stream_fanout_sinks",
-}
 
 
 def _plan(spark, key: str) -> str:
@@ -493,9 +476,9 @@ def test_ngram_counts_takeordered_top20(spark):
 
 
 def test_plan_audit_eager_set_in_lockstep():
-    """scripts/plan_audit.py sweeps every key tests/test_plans.py does;
-    its skip-set must stay identical to EAGER here or the inventory
-    silently loses (or double-counts) keys."""
+    """scripts/plan_audit.py skips the same keys as the sweeps here (both
+    read ``registry.EAGER``, so they cannot diverge), and its
+    fingerprint() counts the node types the drift gate compares."""
     import importlib.util
     import os
 
@@ -505,7 +488,6 @@ def test_plan_audit_eager_set_in_lockstep():
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    assert mod.EAGER == EAGER
     # fingerprint() parses a representative formatted plan
     fp = mod.fingerprint(
         "(1) Scan parquet t\n(2) Exchange\n(3) BroadcastExchange\n"

@@ -499,6 +499,20 @@ def test_estep_input_of_read_points_folds_to_scan_columns(spark, tmp_path):
     assert [tuple(r) for r in df.orderBy("id").collect()] == [(1.5, 2.5, 1), (3.5, 4.5, 2)]
 
 
+def test_estep_width_column_of_read_points_folds_to_a_literal(spark, tmp_path):
+    """The executed projection adds size(features) AS n for the width
+    check; over read_points it folds to a literal, so a 3-D model over
+    2-D points still reads only the scan columns (no array built)."""
+    from spark_streaming_clustering_spark.streaming.estep import _estep_input
+
+    p = tmp_path / "pts.csv"
+    p.write_text("1.5,2.5,1,1\n")
+    df = _estep_input(read_points(spark, str(p), dim=2), 3, width=True)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "array(" not in plan and "size(" not in plan, plan
+    assert [tuple(r) for r in df.collect()] == [(1.5, 2.5, None, 2, 1)]
+
+
 def _broadcast_files(spark) -> int:
     return len(os.listdir(spark.sparkContext._temp_dir))
 
@@ -532,9 +546,47 @@ def test_estep_distributed_releases_its_broadcast_on_failure(spark):
         F.array(F.col("id").cast("double"), F.lit(0.0)).alias("features"), "id"
     )
     before = _broadcast_files(spark)
-    with pytest.raises(PythonException, match="matmul"):
+    with pytest.raises(PythonException, match="has 2 features, the model has 3"):
         compute_point_stats(batch, np.zeros((2, 3)))
     assert _broadcast_files(spark) == before
+
+
+def test_estep_distributed_names_a_feature_null_in_every_row(spark, tmp_path):
+    """A feature that is null in every row of an Arrow batch is still a
+    null feature, not a narrower point: the executor names the point
+    (it used to drop the all-null column and die in the matmul)."""
+    from pyspark.errors import PythonException
+
+    from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
+
+    p = tmp_path / "pts.csv"
+    p.write_text("0.5,,0,7\n")
+    with pytest.raises(
+        PythonException, match="point id 7 has a null or non-finite feature"
+    ):
+        compute_point_stats(read_points(spark, str(p), dim=2), np.zeros((2, 2)))
+
+
+@pytest.mark.parametrize("width, dim", [(2, 3), (3, 2)])
+def test_estep_width_mismatch_names_the_point_on_both_paths(spark, width, dim):
+    """A point narrower or wider than the model fails the batch with the
+    same message on the driver-local and the distributed path (a real
+    array column, which Catalyst cannot fold)."""
+    from pyspark.errors import PythonException
+
+    from spark_streaming_clustering_spark.streaming.estep import (
+        compute_point_stats,
+        estep_local,
+    )
+
+    feats = [0.5 * (i + 1) for i in range(width)]
+    cent = np.zeros((2, dim))
+    msg = f"point id 7 has {width} features, the model has {dim}"
+    with pytest.raises(ValueError, match=msg):
+        estep_local(np.array([feats]), np.array([7]), cent)
+    batch = spark.createDataFrame([(feats, 7)], "features array<double>, id long")
+    with pytest.raises(PythonException, match=msg):
+        compute_point_stats(batch, cent)
 
 
 @pytest.mark.parametrize(
