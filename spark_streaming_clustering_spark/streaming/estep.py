@@ -187,10 +187,10 @@ def _partial_stats(pdf_iter, centroids_bc):
         )
 
 
-def _estep_input(batch_df: DataFrame, dim: int, width: bool = False) -> DataFrame:
+def _estep_input(batch_df: DataFrame, dim: int) -> DataFrame:
     """The E-step's input projection: ``features[0] .. features[dim-1]``
-    as scalar columns, then (with ``width``) ``size(features) AS n``,
-    then ``id``.  When ``features`` is built with ``array(x0, x1, ...)``
+    as scalar columns, then ``size(features) AS n``, then ``id``.  When
+    ``features`` is built with ``array(x0, x1, ...)``
     (``sources.points.read_points``), Catalyst folds each
     ``features[i]`` back to its source column and ``n`` to a literal,
     so the scan feeds Arrow scalar columns and no array is ever built.
@@ -198,8 +198,7 @@ def _estep_input(batch_df: DataFrame, dim: int, width: bool = False) -> DataFram
     ``features[i]`` would raise), so the width check in the executor
     names the point."""
     feats = [F.get("features", i).alias(f"features[{i}]") for i in range(dim)]
-    n = [F.size("features").alias("n")] if width else []
-    return batch_df.select(*feats, *n, "id")
+    return batch_df.select(*feats, F.size("features").alias("n"), "id")
 
 
 def compute_point_stats(batch_df: DataFrame, centroids: np.ndarray) -> dict[int, PointStats]:
@@ -211,7 +210,7 @@ def compute_point_stats(batch_df: DataFrame, centroids: np.ndarray) -> dict[int,
     spark = batch_df.sparkSession
     centroids_bc = spark.sparkContext.broadcast(np.ascontiguousarray(centroids))
     try:
-        rows = _estep_input(batch_df, centroids.shape[1], width=True).mapInPandas(
+        rows = _estep_input(batch_df, centroids.shape[1]).mapInPandas(
             lambda it: _partial_stats(it, centroids_bc), PARTIAL_SCHEMA
         ).collect()
     finally:

@@ -485,32 +485,23 @@ def _regen_golden_drift():
 
 
 def test_estep_input_of_read_points_folds_to_scan_columns(spark, tmp_path):
-    """The distributed E-step projects features[i] per dimension; over a
-    read_points frame (features = array(x0, x1)) Catalyst folds each
-    projection back to its CSV column, so no array is built per row and
+    """The distributed E-step projects features[i] per model dimension and
+    size(features) AS n; over a read_points frame (features = array(x0, x1))
+    Catalyst folds each features[i] back to its CSV column (null past the
+    points' width) and n to a literal, so no array is built per row and
     Arrow ships scalar columns to the executor kernel."""
     from spark_streaming_clustering_spark.streaming.estep import _estep_input
 
     p = tmp_path / "pts.csv"
     p.write_text("1.5,2.5,1,1\n3.5,4.5,2,2\n")
-    df = _estep_input(read_points(spark, str(p), dim=2), 2)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "array(" not in plan, plan
-    assert [tuple(r) for r in df.orderBy("id").collect()] == [(1.5, 2.5, 1), (3.5, 4.5, 2)]
-
-
-def test_estep_width_column_of_read_points_folds_to_a_literal(spark, tmp_path):
-    """The executed projection adds size(features) AS n for the width
-    check; over read_points it folds to a literal, so a 3-D model over
-    2-D points still reads only the scan columns (no array built)."""
-    from spark_streaming_clustering_spark.streaming.estep import _estep_input
-
-    p = tmp_path / "pts.csv"
-    p.write_text("1.5,2.5,1,1\n")
-    df = _estep_input(read_points(spark, str(p), dim=2), 3, width=True)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "array(" not in plan and "size(" not in plan, plan
-    assert [tuple(r) for r in df.collect()] == [(1.5, 2.5, None, 2, 1)]
+    for dim, want in [
+        (2, [(1.5, 2.5, 2, 1), (3.5, 4.5, 2, 2)]),
+        (3, [(1.5, 2.5, None, 2, 1), (3.5, 4.5, None, 2, 2)]),
+    ]:
+        df = _estep_input(read_points(spark, str(p), dim=2), dim)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "array(" not in plan and "size(" not in plan, plan
+        assert [tuple(r) for r in df.orderBy("id").collect()] == want
 
 
 def _broadcast_files(spark) -> int:
