@@ -17,10 +17,18 @@ Two comparisons against BASELINE.md:
 * per-query wall-clock for a representative, shuffle/join/agg-heavy
   subset of the registry, each forced with a noop write so the full
   plan executes without driver-side collection.
+
+Every row is the minimum of ``SAMPLES`` (5) samples.  The headline keys
+are sampled in 5 passes over ``HEADLINE``, one sample per key per pass,
+so each key's samples are spread across the run; the two G-Stream rows
+then take 5 trials each the same way.  Nothing from earlier runs'
+records decides what is sampled or reported.  Every raw sample, with
+the host's CPU-steal ticks across it, goes to ``BENCH_SELF_r{N}.json``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -37,6 +45,9 @@ from spark_streaming_clustering_spark.streaming.params import GStreamParams  # n
 from spark_streaming_clustering_spark.streaming.train import GStreamTrainer  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Every row reports the minimum of this many samples.
+SAMPLES = 5
 
 # Representative headline subset: every execution shape the engine has
 # (multi-join star query, hash aggregate, window, cross-join top-k,
@@ -140,7 +151,7 @@ HEADLINE = [
     # rounds on the rich-club graph)
     "graph_coreness_decomposition",
     # round-12: 6-round checkpointed Bellman-Ford weighted shortest
-    # path on the trade graph (driver-paced loop, see median5);
+    # path on the trade graph (driver-paced loop);
     # delta-join view maintenance (2 broadcast joins + bounded merge)
     "graph_weighted_shortest_path",
     "join_ivm_delta",
@@ -148,8 +159,7 @@ HEADLINE = [
     # single-scan six-measure OHLC hash aggregate
     "spearman_corr",
     "ohlc_resample",
-    # round-12: greedy submodular selection pair (driver-paced rounds,
-    # see median5)
+    # round-12: greedy submodular selection pair (driver-paced rounds)
     "kcenter_diversity_select",
     "greedy_set_cover",
     # round-12: one-pass map-side-combine Gram reduction (constant
@@ -160,7 +170,7 @@ HEADLINE = [
     "boruvka_msf_trade",
     # round-13: sort-blocked SNM candidate window + bounded verify
     # join; 26-round domain-bisection exact quantile selection
-    # (driver-paced, see median5)
+    # (driver-paced)
     "dedup_sorted_neighborhood",
     "exact_quantile_bisect",
     # round-13: one map-side-combined sufficient-statistics aggregate
@@ -174,57 +184,51 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _bench_files() -> list[str]:
-    """Committed BENCH_r*.json paths sorted by PARSED round number —
-    lexicographic filename sort breaks at r100 ('BENCH_r100' <
-    'BENCH_r11'), silently pointing the median-of-5 derivation and the
-    1.25x escalation at the wrong round (review finding r6)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    def rnum(p: str) -> int:
-        m = re.search(r"BENCH_r(\d+)", os.path.basename(p))
-        return int(m.group(1)) if m else -1
-
-    return sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), key=rnum)
+def _wall(spark, key: str) -> float:
+    """Seconds to build one headline key's plan and force it."""
+    t0 = time.monotonic()
+    _force(QUERIES[key](spark, SF_DIR))
+    return time.monotonic() - t0
 
 
-def _round_records() -> list[tuple[int, dict]]:
-    """Ordered (round, per-key walls) for every committed round with a
-    USABLE record.  Each round has up to two artifacts: the driver's
-    BENCH_r{N}.json (bench.py's stdout line under "parsed" — can be
-    truncated by the driver's stdout-tail capture, observed r7:
-    "parsed": null) and bench.py's own BENCH_SELF_r{N}.json (the full
-    record, written directly to a file so no capture window applies).
-    The self-artifact is preferred; a round whose only artifact is
-    truncated is skipped entirely so the round-over-round comparisons
-    fall back to the newest round that actually parsed (VERDICT r7
-    item 1)."""
-    import glob
-    import re
+def _cpu_steal_ticks():
+    """Aggregate steal ticks from /proc/stat (field 8 after 'cpu'), or
+    None where unavailable — raw counter; a DELTA across a burst > 0
+    means the hypervisor stole CPU during it."""
+    try:
+        with open("/proc/stat") as f:
+            parts = f.readline().split()
+        return int(parts[8])
+    except (OSError, IndexError, ValueError):
+        return None
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds: dict[int, dict[str, str]] = {}
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")) + glob.glob(
-        os.path.join(here, "BENCH_SELF_r*.json")
-    ):
-        base = os.path.basename(p)
-        m = re.search(r"BENCH(_SELF)?_r(\d+)", base)
-        if not m:
-            continue
-        kind = "self" if m.group(1) else "driver"
-        rounds.setdefault(int(m.group(2)), {})[kind] = p
-    out: list[tuple[int, dict]] = []
-    for r in sorted(rounds):
-        for kind in ("self", "driver"):
-            if kind in rounds[r]:
-                q = _bench_queries(rounds[r][kind])
-                if q:
-                    out.append((r, q))
-                    break
-    return out
+
+def _min_of_passes(rows: dict) -> tuple[dict, dict]:
+    """Sample every row ``SAMPLES`` times, pass-major, and report each
+    row's minimum.
+
+    ``rows`` maps a row name to a zero-argument callable that runs the
+    row once and returns its sample.  Pass p samples every row, in
+    order, before pass p+1 starts, so a row's samples are spread across
+    the run and one host CPU-steal burst lands on one sample of each
+    row it overlaps instead of on every sample of one row.  Returns
+    ``(times, methods)``: the minimum sample per row, and per row its
+    samples with the steal-tick delta across each (None where the
+    counter is unavailable)."""
+    samples: dict[str, list] = {k: [] for k in rows}
+    steal: dict[str, list] = {k: [] for k in rows}
+    for _ in range(SAMPLES):
+        for key, run in rows.items():
+            s0 = _cpu_steal_ticks()
+            samples[key].append(round(run(), 3))
+            s1 = _cpu_steal_ticks()
+            steal[key].append(None if s0 is None or s1 is None else s1 - s0)
+    times = {k: min(v) for k, v in samples.items()}
+    methods = {
+        k: {"method": f"min{SAMPLES}", "samples": samples[k], "steal": steal[k]}
+        for k in rows
+    }
+    return times, methods
 
 
 def _latest_driver_round() -> int:
@@ -278,93 +282,6 @@ def _next_round() -> int:
         n += 1
 
 
-def _auto_median5_keys() -> set[str]:
-    """Derive the median-of-5 set from the committed record instead of a
-    hand-maintained list (VERDICT r5 item 2: 15 keys moved >25% r4->r5
-    with provably unchanged plans and only 4 had noise controls).
-
-    Rule: any key whose wall-clock moved more than +-25% between the two
-    most recent BENCH_r*.json files runs median-of-5 this round — a real
-    plan regression stays visible in the median, while a steal-hit burst
-    at a fixed bench position is discarded with both tails.  The set
-    self-clears: once a key's median is stable across two rounds it
-    drops back to adaptive best-of-3.
-    """
-    records = _round_records()
-    if len(records) < 2:
-        return set()
-    prev, last = records[-2][1], records[-1][1]
-    movers = set()
-    for key, cur in last.items():
-        old = prev.get(key)
-        if (
-            isinstance(old, (int, float))
-            and isinstance(cur, (int, float))
-            and old > 0
-            and abs(cur - old) / old > 0.25
-        ):
-            movers.add(key)
-    return movers
-
-
-def _recorded_floors() -> dict:
-    """Per-key FLOOR (minimum wall) across every usable committed round
-    record — the burst-adjudication base (VERDICT r9 item 5): a median
-    still admits a burst-dominated value when 2 of 5 samples are
-    steal-hit (embed_pq_codes r9: driver samples [2.1, 15.9, 14.2,
-    7.2, 2.4] -> median 7.2 s on unchanged code with an isolated floor
-    ~1.0 s).  The floor only ever reflects code that actually ran, so
-    a key whose median lands >= 5x above it is burst-dominated, not
-    regressed — a REAL regression moves the fast samples too."""
-    floors: dict[str, float] = {}
-    for _rnd, q in _round_records():
-        for key, v in q.items():
-            if isinstance(v, (int, float)) and v > 0:
-                floors[key] = min(v, floors.get(key, v))
-    return floors
-
-
-def _robust_center(samples: list[float], floor: float | None) -> tuple[float, str]:
-    """Median-of-N, downgraded to the mean of the 3 smallest samples
-    when the median sits >= 5x above the key's recorded floor (burst
-    domination).  When samples are tight the two statistics coincide,
-    so the guard can never hide a real uniform slowdown."""
-    med = sorted(samples)[len(samples) // 2]
-    if floor is not None and floor > 0 and med >= 5 * floor:
-        low3 = sorted(samples)[:3]
-        return round(sum(low3) / len(low3), 3), "trimmed3of5-floorguard"
-    return med, "median5"
-
-
-def _cpu_steal_ticks():
-    """Aggregate steal ticks from /proc/stat (field 8 after 'cpu'), or
-    None where unavailable — raw counter; a DELTA across a burst > 0
-    means the hypervisor stole CPU during it."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8])
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _load_stamp() -> dict:
-    """Host-load stamp (1-min loadavg + steal ticks) recorded at the
-    start and end of each key's sample burst so a committed artifact is
-    self-adjudicating about host noise (VERDICT r11 item 2: BENCH_r11
-    shipped steal-corrupted walls an isolated probe disproved — the
-    stamp makes that adjudication readable from the artifact alone)."""
-    stamp: dict = {}
-    try:
-        stamp["load1"] = round(os.getloadavg()[0], 2)
-    except OSError:
-        pass
-    steal = _cpu_steal_ticks()
-    if steal is not None:
-        stamp["steal"] = steal
-    return stamp
-
-
 # Worst-case per-key stdout budget: len('"<name>":0.99,') = name + 8.
 # The driver's stdout-tail window is ~2000 chars (r7's overflow lost
 # that round's driver artifact); the constant fields cost ~160, so cap
@@ -385,7 +302,7 @@ def _capped_stdout_queries(
     is driver-witnessed at least once in any two consecutive rounds.
     The newest 5 headline keys and the two derived gstream rows are
     never shed; the full map + raw samples always live in the
-    self-artifact (which _round_records and auditors prefer)."""
+    self-artifact."""
     if budget is None:
         budget = _STDOUT_QUERIES_BUDGET
     out = {k: _slim_wall(v) for k, v in times.items()}
@@ -417,86 +334,6 @@ def _slim_wall(v: float):
     # sub-10s wall at 4 chars so the worst-case line width is closed
     return int(f) if f == int(f) else f
 
-
-def _bench_queries(path: str) -> dict:
-    """Per-key walls from a committed BENCH_r*.json (the round driver
-    wraps bench.py's JSON line under "parsed")."""
-    try:
-        with open(path) as f:
-            d = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    if "queries" not in d and isinstance(d.get("parsed"), dict):
-        d = d["parsed"]
-    q = d.get("queries")
-    return q if isinstance(q, dict) else {}
-
-
-def _previous_bench_times() -> dict:
-    """Per-key walls from the newest USABLE record of a PRIOR round —
-    the comparison base the verdict's +-25% rule is evaluated against
-    (self-artifact preferred, truncated driver files skipped).
-
-    Prior-round, not newest-overall: a same-round trial refresh leaves
-    this round's own BENCH_SELF on disk, and comparing against it lets
-    a round-over-round mover ship on a thin best-of-N because the
-    FIRST trial already absorbed the jump (observed r13:
-    bloom_join_prune best2 at +33% vs r12 slipped past escalation
-    because trial 2 compared against trial 1).  The verdict rule is
-    round-over-round, so the base must exclude the current round."""
-    base = _latest_driver_round()
-    records = [r for r in _round_records() if r[0] <= base]
-    return records[-1][1] if records else {}
-
-
-def _quiet_retry_plan(
-    times: dict, prev_times: dict, budget_s: float | None = None
-) -> tuple[list[str], list[str]]:
-    """Plan the capped end-of-run quiet retry (ADVICE r12): movers
-    (>25% over their previous committed wall) ordered worst-ratio-first,
-    split into (retry, skipped) by a total estimated-retry-time budget
-    of ``budget_s`` seconds at 5 samples per mover.  The worst mover is
-    ALWAYS retried even if its estimate alone exceeds the budget — the
-    cap bounds the tail, it must not silence the headline regression.
-
-    The default budget SCALES with the run (VERDICT r13 item 1: the
-    fixed 120 s cap left 39 storm-hit movers un-adjudicated where the
-    r12 run retried all of them): max(300 s, 0.4x the measured headline
-    wall) — a storm that inflates many keys inflates the budget with
-    them, so broad-contamination runs still self-correct, while a quiet
-    run with few movers never comes near the cap."""
-    if budget_s is None:
-        budget_s = max(300.0, 0.5 * sum(times.values()))
-    movers = sorted(
-        (
-            k
-            for k, t in times.items()
-            if prev_times.get(k) and prev_times[k] > 0
-            and t > prev_times[k] * 1.25
-        ),
-        key=lambda k: times[k] / prev_times[k],
-        reverse=True,
-    )
-    retry: list[str] = []
-    skipped: list[str] = []
-    est = 0.0
-    for k in movers:
-        cost = _retry_samples(times[k]) * times[k]
-        if retry and est + cost > budget_s:
-            skipped.append(k)
-        else:
-            retry.append(k)
-            est += cost
-    return retry, skipped
-
-
-def _retry_samples(wall_s: float) -> int:
-    """Retry sample count per mover: 5 for expensive keys (a storm-hit
-    center needs both tails discarded), 3 for sub-2 s keys — a cheap
-    key's 3-sample median already sits on its floor, and the smaller
-    estimate lets ~40% more movers fit the same retry budget (VERDICT
-    r13 item 1: cheap movers were the bulk of the 39 skipped)."""
-    return 3 if wall_s <= 2.0 else 5
 
 
 def bench_gstream(spark, sf_dir: str, batch_points: int = 100, n_batches: int = 20) -> float:
@@ -540,10 +377,10 @@ def bench_gstream(spark, sf_dir: str, batch_points: int = 100, n_batches: int = 
     return total_ms / max(batches_run, 1)
 
 
-def bench_estep_distributed(spark, sf_dir: str, n_nodes: int = 50):
-    """Distributed E-step throughput on one LARGE batch (the 100 TB
-    path): all lineitem rows as 4-d points against a 50-node model via
-    mapInPandas + broadcast.  Returns (seconds, points/sec)."""
+def bench_estep_distributed(spark, sf_dir: str, n_nodes: int = 50) -> float:
+    """Distributed E-step wall on one LARGE batch (the 100 TB path): all
+    lineitem rows as 4-d points against a 50-node model via mapInPandas
+    + broadcast.  Returns seconds."""
     import numpy as np
 
     from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
@@ -560,7 +397,7 @@ def bench_estep_distributed(spark, sf_dir: str, n_nodes: int = 50):
     stats = compute_point_stats(li, cent)
     dt = time.monotonic() - t0
     assert sum(s.count for s in stats.values()) == n_points
-    return dt, n_points / dt
+    return dt
 
 
 def main() -> None:
@@ -587,187 +424,33 @@ def main() -> None:
         .mapInPandas(lambda it: it, "id long")
     )
 
-    # Best-of-3 per query: the container's host occasionally steals CPU
-    # mid-burst (observed: a 3-expression JSON projection ranging 2.8 s to
-    # 49 s across identical runs), so a single sample conflates operator
-    # cost with host noise.  Adaptive early-exit keeps total wall-clock
-    # bounded: once a query's best run is under FAST_SEC it is already at
-    # its steady-state floor (further runs can only shave fractions), so
-    # only slow-or-steal-hit queries pay the full three runs.
-    fast_sec = float(os.environ.get("SPARK_GRAFT_BENCH_FAST_SEC", "2.0"))
-    # Keys whose round-over-round delta exceeded +-25% run ALL three
-    # samples regardless of the fast-exit: a single sub-2 s sample can't
-    # distinguish host CPU steal from a real plan regression (VERDICT r3
-    # measurement gap — tf_idf_topk "+113%" was one noisy sample).
-    force_full = {
-        "tf_idf_topk",
-        "dedup_embed_cosine",
-        "flagship_revenue",
-        # in-round delta >25% vs r3 on a 2-sample best while an
-        # isolated 4-sample repro (plans unchanged) sat on the r3
-        # floor (0.35 s vs bench's 1.39 s) — classic host steal at a
-        # fixed bench position; full 3 samples each
-        "vector_sum_agg",
-        "topk_q",
-        "shard_by_token_budget",
-    }
-    # Keys whose round-over-round delta exceeded +-25% in TWO separate
-    # rounds with an unchanged plan (VERDICT r4 item 5): best-of-N still
-    # tracks the floor, but the floor itself jitters when every sample
-    # in a burst is steal-hit.  Median of 5 discards both tails instead.
-    median5 = {
-        "token_count",  # 0.216 -> 0.435 s across r3/r4 on a pure map-side plan
-        # r5 calibration: two back-to-back identical-code runs flipped
-        # these >25% in OPPOSITE directions (host steal at fixed bench
-        # positions, plans unchanged) — medians, not minima, for them
-        "flagship_revenue",
-        "groupby_agg_sums",
-        "join_bucketed",
-        # r5 verdict item 2: the one driver-paced loop in the headline
-        # set — most steal-sensitive row (0.71 -> 2.05 s r4->r5 with
-        # unchanged code); input prep is now session-cached so 5
-        # samples cost one bounded collect + 5 trainer loops
-        "gstream_epoch",
-        # r11 adjudication (VERDICT r10 item 8): isolated-quiet samples
-        # [5.53, 2.90, 2.55, 2.71, 2.53] — the 2.5 s floor IS the cost
-        # of building/executing three broadcast-NL DP levels each run
-        # (plan-build-bound, data-independent); the 2.5-5.5 s spread is
-        # intrinsic, so a 3-sample best is never representative
-        "v_optimal_histogram",
-        # r11: 8 driver-paced checkpointed peel rounds (the gstream_epoch
-        # precedent — driver-paced loops are the most steal-sensitive rows)
-        "graph_kcore_richclub",
-        "graph_label_propagation",
-        "dedup_mis_max_retention",
-        "graph_coreness_decomposition",
-        # r12: 6 driver-paced checkpointed Bellman-Ford rounds
-        "graph_weighted_shortest_path",
-        # r12: 8/6 driver-paced greedy selection rounds (one bounded
-        # collect per round — the most steal-sensitive shape)
-        "kcenter_diversity_select",
-        "greedy_set_cover",
-        # r13: driver-paced loops (the gstream_epoch precedent) — 26
-        # bisection rounds of one bounded collect each / up to 6
-        # Borůvka rounds with per-round localCheckpoint
-        "exact_quantile_bisect",
-        "boruvka_msf_trade",
-    } | _auto_median5_keys()
-    # Previous committed round's per-key walls, for in-run escalation:
-    # a key that gets steal-hit for the FIRST time this round isn't in
-    # the derived median5 set yet (that set lags one round), so any key
-    # whose best-of-3 still exceeds 1.25x its previous value escalates
-    # to median-of-5 within the same run — no >25% mover ships on a
-    # 3-sample best (VERDICT r5 item 2's actual requirement).
-    prev_times = _previous_bench_times()
-    floors = _recorded_floors()
-    times: dict[str, float] = {}
-    # Per-key sampling provenance, committed alongside the walls so a
-    # mover is self-adjudicating from the artifact: an auditor reading
-    # BENCH_rN.json alone can tell an escalated median from a raw
-    # minimum and see every raw sample (VERDICT r6 item 3).
-    methods: dict[str, dict] = {}
-    for key in HEADLINE:
-        samples: list[float] = []
-        stamp0 = _load_stamp()
-
-        def _sample() -> None:
-            t0 = time.monotonic()
-            _force(QUERIES[key](spark, SF_DIR))
-            samples.append(round(time.monotonic() - t0, 3))
-
-        if key in median5:
-            for _run in range(5):
-                _sample()
-            times[key], how = _robust_center(samples, floors.get(key))
-            methods[key] = {"method": how, "samples": samples}
-        else:
-            for _run in range(3):
-                _sample()
-                # Fast-exit needs >= 2 samples: the FIRST run of a key
-                # pays one-time plan compilation/codegen, which for
-                # sub-second queries is up to 3x the steady-state floor
-                # while still under fast_sec (measured: vector_sum_agg
-                # 0.96 s cold vs 0.33 s warm — a single sample reported
-                # that as a fake +317% regression).  The second run is
-                # the floor.
-                if _run >= 1 and min(samples) <= fast_sec and key not in force_full:
-                    break
-            best = min(samples)
-            prev = prev_times.get(key)
-            # SYMMETRIC escalation (r14): a >25% move in EITHER
-            # direction on a thin best-of-N is weak evidence — the r13
-            # freeze shipped dedup_simhash_hamming at -66% on best2 and
-            # the standing median5-or-converged contract
-            # (test_bench_noise_rules) flagged it; an improvement claim
-            # deserves the same 5-sample robustness a regression does.
-            if (
-                prev is not None
-                and prev > 0
-                and (best > prev * 1.25 or best < prev * 0.75)
-            ):
-                while len(samples) < 5:
-                    _sample()
-                times[key], how = _robust_center(samples, floors.get(key))
-                methods[key] = {"method": f"escalated-{how}", "samples": samples}
-            else:
-                times[key] = best
-                methods[key] = {"method": f"best{len(samples)}", "samples": samples}
-        methods[key]["load"] = {"start": stamp0, "end": _load_stamp()}
-
-    # End-of-run quiet retry (VERDICT r11 item 2): a key can be
-    # steal-hit for its WHOLE burst — even median-of-5 then ships a
-    # corrupted wall (BENCH_r11's join_size_estimate: every sample
-    # 3.4-20.4 s against a 1.7 s isolated floor).  After the full pass,
-    # any key still >25% over its previous committed wall is re-sampled
-    # once more; the better center wins and BOTH bursts (with their
-    # load stamps) land in the artifact so the mover self-adjudicates.
-    # ADVICE r12: the pass is CAPPED — a genuine broad regression
-    # (many movers) otherwise pays 5 extra full runs per mover, an
-    # unbounded wall-clock tail on driver-paced keys.  Movers are
-    # retried worst-ratio-first within a total retry-time budget; what
-    # is skipped is recorded in the artifact so coverage stays honest.
-    _retry_keys, _retry_skipped = _quiet_retry_plan(
-        {k: times[k] for k in HEADLINE}, prev_times
+    # One rule for every row: the minimum of SAMPLES samples.  Host CPU
+    # steal only ever adds wall time (a 3-expression JSON projection
+    # once ranged 2.8 s to 49 s across identical runs), so a row's
+    # minimum is the sample closest to its cost, and interleaving the
+    # samples in passes keeps one steal burst from owning all of them.
+    times, methods = _min_of_passes(
+        {key: functools.partial(_wall, spark, key) for key in HEADLINE}
     )
-    for key in _retry_keys:
-        stamp0 = _load_stamp()
-        retry: list[float] = []
-        for _run in range(_retry_samples(times[key])):
-            t0 = time.monotonic()
-            _force(QUERIES[key](spark, SF_DIR))
-            retry.append(round(time.monotonic() - t0, 3))
-        center, how = _robust_center(retry, floors.get(key))
-        methods[key]["retry"] = {
-            "method": how,
-            "samples": retry,
-            "load": {"start": stamp0, "end": _load_stamp()},
+
+    # The G-Stream rows take the same rule after the passes.
+    # bench_gstream's sample is mean model-update ms per ~100-point
+    # batch (the baseline metric); the 20-batch epoch row is derived
+    # from its minimum.
+    g_times, g_methods = _min_of_passes(
+        {
+            "gstream_epoch_20x100": lambda: bench_gstream(spark, SF_DIR),
+            "gstream_estep_distributed": lambda: bench_estep_distributed(
+                spark, SF_DIR
+            ),
         }
-        if center < times[key]:
-            times[key] = center
-            methods[key]["method"] = f"{methods[key]['method']}+retry-{how}"
-
-    # Median-of-3 trials for the baseline-defined latency metric; the
-    # raw per-trial mean-ms values ARE the samples, so the derived
-    # wall-clock row self-adjudicates from raw measurements, not from
-    # its own post-derivation output (review finding r7).
-    gstream_ms_samples = [round(bench_gstream(spark, SF_DIR), 3) for _ in range(3)]
-    gstream_ms = sorted(gstream_ms_samples)[1]
+    )
+    gstream_ms = g_times["gstream_epoch_20x100"]
     times["gstream_epoch_20x100"] = round(gstream_ms * 20 / 1000.0, 3)
-    methods["gstream_epoch_20x100"] = {
-        "method": "derived-median3: 20 batches x median mean-ms-per-batch / 1000",
-        "samples": gstream_ms_samples,
-    }
-
-    # Best-of-3: this was the last "single"-method row and the only r7
-    # >25% mover (+59% on one sample, plan unchanged — host noise the
-    # methods field exists to adjudicate; VERDICT r7 item 4).
-    estep_trials = [bench_estep_distributed(spark, SF_DIR) for _ in range(3)]
-    estep_sec, estep_pps = min(estep_trials, key=lambda t: t[0])
-    times["gstream_estep_distributed"] = round(estep_sec, 3)
-    methods["gstream_estep_distributed"] = {
-        "method": "best3",
-        "samples": [round(t[0], 3) for t in estep_trials],
-    }
+    times["gstream_estep_distributed"] = g_times["gstream_estep_distributed"]
+    g_methods["gstream_epoch_20x100"]["unit"] = "ms per batch"
+    methods.update(g_methods)
+    estep_points = load_table(spark, SF_DIR, "lineitem").count()
 
     total = round(sum(times.values()), 3)
     record = {
@@ -782,31 +465,22 @@ def main() -> None:
         # round-over-round record is self-describing.
         "gstream_ms_per_batch": round(gstream_ms, 1),
         "gstream_ms_per_batch_budget": 116.0,
-        "estep_points_per_sec": int(estep_pps),
+        "estep_points_per_sec": int(
+            estep_points / times["gstream_estep_distributed"]
+        ),
     }
-    if _retry_skipped:
-        # Honest-coverage marker (ADVICE r12): movers the capped quiet
-        # retry did NOT re-sample — their times[] walls are the
-        # uncorrected burst centers and must be read alongside load
-        # stamps, not as adjudicated floors.
-        record["retry_skipped"] = _retry_skipped
-    # Per-key steal deltas across each key's sample burst (VERDICT r13
+    # Per-key steal ticks summed over the key's samples (VERDICT r13
     # item 1: make the driver-visible line self-adjudicating about host
-    # noise) — a wall whose burst saw thousands of stolen ticks is
-    # storm-contaminated, not regressed.  Full stamps live in the
+    # noise) — a wall whose samples saw thousands of stolen ticks is
+    # storm-contaminated, not regressed.  Per-sample deltas live in the
     # self-artifact; stdout carries only the worst offenders so the
     # tail-window budget is bounded (<= 8 entries, >= 1000 ticks).
-    steal_deltas = {}
-    for k, m in methods.items():
-        ld = m.get("load", {})
-        d = ld.get("end", {}).get("steal", 0) - ld.get("start", {}).get("steal", 0)
-        rd = m.get("retry", {}).get("load", {})
-        if rd:
-            d += rd.get("end", {}).get("steal", 0) - rd.get("start", {}).get("steal", 0)
-        if d >= 1000:
-            steal_deltas[k] = int(d)
+    steal_sums = {k: sum(d or 0 for d in m["steal"]) for k, m in methods.items()}
     top_steal = dict(
-        sorted(steal_deltas.items(), key=lambda kv: -kv[1])[:8]
+        sorted(
+            ((k, d) for k, d in steal_sums.items() if d >= 1000),
+            key=lambda kv: -kv[1],
+        )[:8]
     )
     # Full record — per-key sampling method + every raw sample — goes to
     # a repo file bench.py owns: the round driver captures only a tail
@@ -814,8 +488,7 @@ def main() -> None:
     # outgrew that window at r7 (BENCH_r07.json "parsed": null, the
     # round's one red pytest row).  Stdout stays a compact summary line
     # the tail window always fits (r6's methods-free line was 1592
-    # chars and parsed fine); auditors and the in-repo readers
-    # (_round_records) prefer the self-artifact.
+    # chars and parsed fine); auditors read the self-artifact.
     here = os.path.dirname(os.path.abspath(__file__))
     self_name = f"BENCH_SELF_r{_next_round():02d}.json"
     with open(os.path.join(here, self_name), "w") as f:
@@ -836,12 +509,6 @@ def main() -> None:
     # the full queries budget; a storm round trades a few shed keys
     # (rotation recovers them next round) for the steal evidence.
     extras: dict = {}
-    if _retry_skipped:
-        # stdout carries the count + worst 5 names; the full list lives
-        # in the self-artifact (r13's 39-name list cost ~900 tail-window
-        # chars — the chars the shed queries needed).
-        extras["retry_skipped"] = _retry_skipped[:5]
-        extras["retry_skipped_n"] = len(_retry_skipped)
     if top_steal:
         extras["steal"] = top_steal
     extras_len = len(json.dumps(extras, separators=(",", ":"))) if extras else 0

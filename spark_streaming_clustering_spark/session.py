@@ -24,10 +24,31 @@ executors; local[32] only verifies correctness):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _master_and_cpus(master: str | None, cpus: int | None) -> tuple[str, int]:
+    """The master URL and the task-thread count that sizes
+    ``spark.sql.shuffle.partitions``.  Only ``local[N]`` and
+    ``local[N,F]`` name a thread count; ``local[*]``, ``local-cluster``
+    and cluster masters use ``DEFAULT_CPUS``.  ``cpus`` wins when given."""
+    local = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master or "")
+    cpus = cpus or (int(local.group(1)) if local else 0) or DEFAULT_CPUS
+    return master or f"local[{cpus}]", cpus
+
+
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM, at most
+    48g: a heap larger than the host lets the driver JVM grow until the
+    kernel kills it instead of collecting."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(ram // 2 >> 20, 48 << 10)}m"
 
 
 def get_spark(
@@ -40,19 +61,10 @@ def get_spark(
 
     ``master`` (when given) is passed through verbatim — a CLI user
     handing us ``spark://...`` or ``yarn`` gets exactly that cluster,
-    not a silent local fallback.  For ``local[n]`` masters the thread
-    count also sizes ``spark.sql.shuffle.partitions``.
+    not a silent local fallback.  For ``local[n]`` and ``local[n,f]``
+    masters the thread count also sizes ``spark.sql.shuffle.partitions``.
     """
-    if master is not None:
-        if master.startswith("local") and "[" in master:
-            inner = master[master.index("[") + 1 : -1]
-            if cpus is None and inner not in ("*", ""):
-                cpus = int(inner)
-        master_url = master
-        cpus = cpus or DEFAULT_CPUS
-    else:
-        cpus = cpus or DEFAULT_CPUS
-        master_url = f"local[{cpus}]"
+    master_url, cpus = _master_and_cpus(master, cpus)
     builder = (
         SparkSession.builder.master(master_url)
         .appName(app_name)
@@ -60,7 +72,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

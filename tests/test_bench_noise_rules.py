@@ -1,14 +1,14 @@
-"""bench.py noise-control rules (VERDICT r5 item 2).
+"""bench.py sampling and stdout rules.
 
-The median-of-5 set must derive from the two newest committed BENCH
-files — in BOTH formats that exist on disk (bench.py's raw JSON line
-and the round driver's wrapper with the line under "parsed") — and
-_previous_bench_times must read the newest PRIOR-ROUND file for the
-in-run escalation rule (a same-round trial refresh must not become
-its own comparison base).  Pure unit tests (no Spark)."""
+Every row is the minimum of 5 samples taken in interleaved passes, and
+no sampling decision reads a committed BENCH_* / CORRECTNESS_* record:
+only the self-artifact naming does.  The stdout summary line stays
+inside the ~2000-char stdout tail its consumer captures.  Pure unit
+tests (no Spark)."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import json
 import os
@@ -20,82 +20,6 @@ def _bench_module():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
-
-
-def test_auto_median5_flags_both_directions(tmp_path, monkeypatch):
-    m = _bench_module()
-    raw = {"queries": {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0}}
-    wrapped = {
-        "n": "5",
-        "parsed": {"queries": {"a": 1.3, "b": 0.7, "c": 1.1, "e": 9.9}},
-    }
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps(raw))
-    (tmp_path / "BENCH_r02.json").write_text(json.dumps(wrapped))
-    monkeypatch.setattr(
-        os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    got = m._auto_median5_keys()
-    # a regressed +30%, b improved -30% -> both flagged; c moved 10% ->
-    # not flagged; d/e lack a pair -> not flagged
-    assert got == {"a", "b"}
-
-
-def test_previous_bench_times_reads_newest_wrapped(tmp_path, monkeypatch):
-    m = _bench_module()
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps({"queries": {"x": 5.0}}))
-    (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"parsed": {"queries": {"x": 2.0}}})
-    )
-    monkeypatch.setattr(os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
-    assert m._previous_bench_times() == {"x": 2.0}
-
-
-def test_bench_queries_tolerates_garbage(tmp_path):
-    m = _bench_module()
-    p = tmp_path / "BENCH_bad.json"
-    p.write_text("{not json")
-    assert m._bench_queries(str(p)) == {}
-    assert m._bench_queries(str(tmp_path / "missing.json")) == {}
-    p2 = tmp_path / "BENCH_list.json"
-    p2.write_text(json.dumps({"queries": [1, 2]}))
-    assert m._bench_queries(str(p2)) == {}
-
-
-def test_bench_files_sort_by_round_number(tmp_path, monkeypatch):
-    """Lexicographic filename sort breaks at r100 ('BENCH_r100' <
-    'BENCH_r11'); the newest-round pick must use the parsed round
-    number (review finding r6)."""
-    m = _bench_module()
-    for r, x in [(9, 1.0), (11, 2.0), (100, 3.0)]:
-        (tmp_path / f"BENCH_r{r:02d}.json").write_text(
-            json.dumps({"queries": {"x": x}})
-        )
-    monkeypatch.setattr(os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
-    assert m._previous_bench_times() == {"x": 3.0}  # r100 is newest
-    # median5 derivation compares r100 vs r11 (x: 2.0 -> 3.0 = +50%)
-    assert m._auto_median5_keys() == {"x"}
-
-
-def test_round_records_prefer_self_and_skip_truncated(tmp_path, monkeypatch):
-    """A round whose driver artifact was tail-truncated ("parsed": null,
-    observed r7) must not poison the comparisons: its self-artifact is
-    preferred when present, and the round is skipped entirely when not
-    (VERDICT r7 item 1)."""
-    m = _bench_module()
-    (tmp_path / "BENCH_r06.json").write_text(json.dumps({"queries": {"x": 1.0}}))
-    # r7: driver truncated, no self-artifact -> round skipped
-    (tmp_path / "BENCH_r07.json").write_text(json.dumps({"parsed": None, "tail": "{bro"}))
-    # r8: driver truncated BUT self-artifact present -> self wins
-    (tmp_path / "BENCH_r08.json").write_text(json.dumps({"parsed": None}))
-    (tmp_path / "BENCH_SELF_r08.json").write_text(
-        json.dumps({"queries": {"x": 2.0}, "methods": {"x": {"method": "best3"}}})
-    )
-    monkeypatch.setattr(os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
-    assert m._round_records() == [(6, {"x": 1.0}), (8, {"x": 2.0})]
-    assert m._previous_bench_times() == {"x": 2.0}
-    # +-25% rule compares r8's self record against r6 (r7 unusable)
-    assert m._auto_median5_keys() == {"x"}
-    assert m._next_round() == 9
 
 
 def test_stdout_summary_line_fits_tail_capture():
@@ -117,16 +41,11 @@ def test_stdout_summary_line_fits_tail_capture():
     times = {k: 0.99 for k in m.HEADLINE}
     times["gstream_epoch_20x100"] = 0.99
     times["gstream_estep_distributed"] = 0.99
-    # Model the variable-width storm extras at their widest (8 steal
-    # entries on the longest key names, 5 truncated retry names +
-    # count) — main() debits their serialized length from the queries
-    # budget, so the modeled line must carry both at worst case.
+    # Model the variable-width steal extra at its widest (8 entries on
+    # the longest key names) — main() debits its serialized length from
+    # the queries budget, so the modeled line must carry it.
     long_names = sorted(m.HEADLINE, key=len, reverse=True)
-    extras = {
-        "retry_skipped": long_names[:5],
-        "retry_skipped_n": 99,
-        "steal": {k: 99999999 for k in long_names[5:13]},
-    }
+    extras = {"steal": {k: 99999999 for k in long_names[:8]}}
     extras_len = len(json.dumps(extras, separators=(",", ":")))
     capped = m._capped_stdout_queries(
         times, budget=m._STDOUT_QUERIES_BUDGET - extras_len
@@ -202,173 +121,115 @@ def test_slim_wall_two_significant_digits():
     )
 
 
-def test_trimmed_tier_guards_burst_dominated_medians(tmp_path, monkeypatch):
-    """The r9 exhibit: embed_pq_codes' driver samples [2.1, 15.9, 14.2,
-    7.2, 2.4] put a 7.2 s median on a key whose recorded floor is
-    ~0.64 s — >= 5x apart, so the robust center must downgrade to the
-    mean of the 3 smallest samples.  Tight samples (real uniform
-    slowdowns) must keep the plain median, and a key with no recorded
-    floor must too."""
-    m = _bench_module()
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"queries": {"embed_pq_codes": 0.64}})
-    )
-    monkeypatch.setattr(os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
-    floors = m._recorded_floors()
-    assert floors == {"embed_pq_codes": 0.64}
-
-    burst = [2.1, 15.9, 14.2, 7.2, 2.4]
-    v, how = m._robust_center(burst, floors.get("embed_pq_codes"))
-    assert how == "trimmed3of5-floorguard"
-    assert v == round((2.1 + 2.4 + 7.2) / 3, 3)  # well below the 7.2 median
-    # tight samples: median survives even with an old fast floor,
-    # because a REAL regression moves the fast samples too -> median
-    # only trips the guard when >= 5x the floor
-    v2, how2 = m._robust_center([1.5, 1.4, 1.6, 1.5, 1.5], 0.64)
-    assert (v2, how2) == (1.5, "median5")
-    # genuinely 5x-slower across ALL samples: trimmed mean ~= median,
-    # so the guard cannot hide a real uniform slowdown
-    v3, how3 = m._robust_center([3.3, 3.2, 3.4, 3.3, 3.3], 0.64)
-    assert how3 == "trimmed3of5-floorguard"
-    assert abs(v3 - 3.3) < 0.05
-    # no recorded floor -> plain median
-    v4, how4 = m._robust_center(burst, None)
-    assert (v4, how4) == (7.2, "median5")
-
-
-def test_recorded_floors_take_min_across_rounds(tmp_path, monkeypatch):
-    m = _bench_module()
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps({"queries": {"x": 2.0}}))
-    (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"parsed": {"queries": {"x": 0.5, "y": 3.0}}})
-    )
-    (tmp_path / "BENCH_r03.json").write_text(json.dumps({"queries": {"x": 1.0}}))
-    monkeypatch.setattr(os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
-    assert m._recorded_floors() == {"x": 0.5, "y": 3.0}
-
-
-def test_committed_bench_files_parse():
-    """The newest USABLE committed round record must yield per-key walls
-    (driver-truncated artifacts are tolerated — the reader skips them,
-    VERDICT r7 item 1 — but at least one round must be recoverable)."""
-    m = _bench_module()
-    records = m._round_records()
-    assert records, "no usable committed BENCH records"
-    rnd, q = records[-1]
-    assert isinstance(q, dict) and len(q) > 10
-    assert all(isinstance(v, (int, float)) for v in q.values())
-
-
 def test_load_stamp_shape():
-    """The host-load stamp (VERDICT r11 item 2) must expose loadavg and
-    steal ticks on this Linux container so committed artifacts are
-    self-adjudicating about host noise."""
+    """The steal-tick counter each sample's delta is taken from exists
+    on Linux and is a monotone raw counter."""
     m = _bench_module()
-    s = m._load_stamp()
-    assert "load1" in s and isinstance(s["load1"], float)
-    # /proc/stat steal field exists on Linux; value is a raw counter
-    assert "steal" in s and isinstance(s["steal"], int) and s["steal"] >= 0
-    # deltas across a burst are computable (monotone counter)
-    assert m._cpu_steal_ticks() >= s["steal"]
+    first = m._cpu_steal_ticks()
+    assert isinstance(first, int) and first >= 0
+    assert m._cpu_steal_ticks() >= first
 
 
-def test_r11_steal_movers_are_median5_or_converged():
-    """VERDICT r11 item 2's standing contract: every r10->r11 >25%
-    mover is EITHER measured median-of-5-class in the newest committed
-    self-artifact (the derivation fired) OR its two newest usable
-    records agree within 25% (the documented self-clear: once a key's
-    value is stable across two rounds it drops back to adaptive
-    best-of-N).  A key that is neither would mean a steal-suspect
-    wall shipped on a thin sample — the exact failure BENCH_r11
-    exhibited."""
-    import glob
-    import re
-
+def test_min_of_passes_interleaves_headline_and_reports_min():
+    """Pass-major over HEADLINE: every key runs once per pass, so each
+    key's 5 samples are spread over the run; each row reports the
+    minimum of exactly 5 samples and carries 5 steal deltas."""
     m = _bench_module()
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    selfs = glob.glob(os.path.join(here, "BENCH_SELF_r*.json"))
-    assert selfs
-    newest = max(
-        selfs,
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
+    assert m.SAMPLES == 5
+    calls: list[str] = []
+
+    def row(i, key):
+        def run():
+            calls.append(key)
+            p = calls.count(key) - 1
+            return float((p + i) % 5 + 1)
+
+        return run
+
+    times, methods = m._min_of_passes(
+        {k: row(i, k) for i, k in enumerate(m.HEADLINE)}
     )
-    with open(newest) as f:
-        methods = json.load(f)["methods"]
-    records = m._round_records()
-    assert len(records) >= 2
-    prev, last = records[-2][1], records[-1][1]
-    for key in (
-        "ann_lsh_bucketed",
-        "join_size_estimate",
-        "bloom_join_prune",
-        "dedup_simhash_hamming",
-        "table_content_checksum",
-        "quality_repetition",
-        "vector_sum_agg",
-    ):
-        method = methods[key]["method"]
-        robust = "median5" in method or "trimmed" in method
-        converged = (
-            key in prev
-            and key in last
-            and prev[key] > 0
-            and abs(last[key] - prev[key]) / prev[key] <= 0.25
-        )
-        assert robust or converged, (key, method, prev.get(key), last.get(key))
+    assert calls == list(m.HEADLINE) * 5
+    assert list(times) == list(m.HEADLINE)
+    for i, k in enumerate(m.HEADLINE):
+        assert methods[k]["method"] == "min5"
+        assert methods[k]["samples"] == [float((p + i) % 5 + 1) for p in range(5)]
+        assert times[k] == min(methods[k]["samples"]) == 1.0
+        steal = methods[k]["steal"]
+        assert len(steal) == 5 and all(d is None or d >= 0 for d in steal)
 
 
-def test_quiet_retry_plan_caps_and_orders(tmp_path):
-    """ADVICE r12: the end-of-run quiet retry is budget-capped,
-    worst-ratio-first, always retries the headline mover, and reports
-    the skipped tail instead of silently dropping it."""
+def test_self_artifact_round_naming(tmp_path, monkeypatch):
+    """BENCH_SELF_r{N} is one past the newest round with a BENCH_r* or
+    CORRECTNESS_r* record; a same-round refresh reuses its slot, and a slot
+    written under an older round base is a committed record and is
+    skipped."""
     m = _bench_module()
-    prev = {"a": 1.0, "b": 1.0, "c": 10.0, "d": 1.0, "e": 1.0}
-    times = {"a": 2.0, "b": 1.5, "c": 40.0, "d": 1.1, "e": 0.9}
-    # movers: c (4.0x), a (2.0x), b (1.5x); d (+10%) and e (improved)
-    # are not movers.  Budget 120s: c costs 5*40=200 > 120 but is the
-    # worst mover so it is retried anyway; a and b are then over
-    # budget and skipped, in mover order.
-    retry, skipped = m._quiet_retry_plan(times, prev, budget_s=120.0)
-    assert retry == ["c"]
-    assert skipped == ["a", "b"]
-    # Ample budget: everyone retries, worst-first, nothing skipped.
-    retry, skipped = m._quiet_retry_plan(times, prev, budget_s=1e9)
-    assert retry == ["c", "a", "b"] and skipped == []
-    # No previous record (first round): no movers, no retries.
-    assert m._quiet_retry_plan(times, {}) == ([], [])
-    # Partial budget (cheap movers cost 3 samples, VERDICT r13 item 1):
-    # c costs 5*40=200, a 3*2=6 (fits at 206 <= 208), b 3*1.5=4.5
-    # (210.5 > 208 -> skipped).
-    retry, skipped = m._quiet_retry_plan(times, prev, budget_s=208.0)
-    assert retry == ["c", "a"] and skipped == ["b"]
-    # The DEFAULT budget scales with the run: max(300, 0.5 * total
-    # wall), so a storm that inflates many keys inflates the budget
-    # with them instead of silencing the retry pass.
-    big = {k: 100.0 for k in ("a", "b", "c", "d", "e", "f", "g", "h")}
-    prev_big = {k: 1.0 for k in big}
-    retry, skipped = m._quiet_retry_plan(big, prev_big)  # budget 400
-    assert retry == ["a", "b", "c", "d", "e", "f", "g", "h"][: len(retry)]
-    assert len(retry) == 1 or sum(5 * 100.0 for _ in retry) <= 400.0
-    assert m._retry_samples(0.5) == 3 and m._retry_samples(9.0) == 5
-
-
-def test_previous_bench_times_excludes_same_round_trial(tmp_path, monkeypatch):
-    """r13 escalation gap: with a same-round BENCH_SELF trial on disk
-    (the refresh protocol), the +-25% comparison base must STILL be the
-    newest prior-round record — otherwise a round-over-round mover
-    whose first trial already absorbed the jump ships on best-of-N
-    (bloom_join_prune, +33% vs r12, method best2)."""
-    m = _bench_module()
-    (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"queries": {"a": 1.0, "b": 2.0}})
-    )
-    # current round's own trial refresh: round 3 self-artifact
-    (tmp_path / "BENCH_SELF_r03.json").write_text(
-        json.dumps({"_round_base": 2, "queries": {"a": 1.6, "b": 2.1}})
-    )
-    monkeypatch.setattr(
-        os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
+    monkeypatch.setattr(os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps({"queries": {"a": 1.0}}))
     assert m._latest_driver_round() == 2
-    prev = m._previous_bench_times()
-    assert prev["a"] == 1.0  # prior round, NOT the same-round trial
+    assert m._next_round() == 3
+    (tmp_path / "BENCH_SELF_r03.json").write_text(json.dumps({"_round_base": 2}))
+    assert m._next_round() == 3
+    (tmp_path / "BENCH_SELF_r03.json").write_text(json.dumps({"_round_base": 1}))
+    assert m._next_round() == 4
+    (tmp_path / "CORRECTNESS_r04.json").write_text("{}")
+    assert m._latest_driver_round() == 4
+    assert m._next_round() == 5
+
+
+_LISTERS = {"glob", "iglob", "rglob", "listdir", "scandir", "walk"}
+_HISTORY = ("BENCH_", "CORRECTNESS_")
+
+
+def _reads_files(node) -> bool:
+    """Whether ``node`` lists a directory, reads a file through pathlib,
+    or opens for reading a path other than a literal that names no
+    BENCH_* / CORRECTNESS_* file."""
+    for call in (n for n in ast.walk(node) if isinstance(n, ast.Call)):
+        f = call.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name in _LISTERS or name in ("read_text", "read_bytes"):
+            return True
+        if name != "open" or not call.args:
+            continue
+        mode = call.args[1] if len(call.args) > 1 else next(
+            (k.value for k in call.keywords if k.arg == "mode"), None
+        )
+        if isinstance(mode, ast.Constant) and set(str(mode.value)) & set("wax"):
+            continue
+        path = call.args[0]
+        literal = isinstance(path, ast.Constant) and isinstance(path.value, str)
+        if not literal or any(h in path.value for h in _HISTORY):
+            return True
+    return False
+
+
+def _history_readers(source: str) -> set[str]:
+    """Top-level functions (and ``<module>`` code) of ``source`` that
+    may read a committed run record."""
+    found = set()
+    for node in ast.parse(source).body:
+        name = getattr(node, "name", "<module>")
+        if not isinstance(node, ast.ClassDef) and _reads_files(node):
+            found.add(name)
+    return found
+
+
+def test_only_round_naming_reads_committed_records():
+    """What bench.py samples and reports must not depend on earlier
+    runs: only the self-artifact naming may glob or read a BENCH_* /
+    CORRECTNESS_* file."""
+    probe = (
+        "import glob\n"
+        "def a():\n    return glob.glob('BENCH_r*.json')\n"
+        "def b(path):\n    with open(path) as f:\n        return f.read()\n"
+        "def c():\n    return open('CORRECTNESS_r01.json').read()\n"
+        "def d():\n    return open('/proc/stat').readline()\n"
+        "def e(path):\n    open(path, 'w').write('{}')\n"
+    )
+    assert _history_readers(probe) == {"a", "b", "c"}
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(here, "bench.py")) as f:
+        source = f.read()
+    assert _history_readers(source) == {"_latest_driver_round", "_next_round"}

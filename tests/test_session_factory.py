@@ -19,6 +19,7 @@ import pyspark.errors.utils as pyspark_error_utils
 import pytest
 
 import spark_streaming_clustering_spark as package
+from spark_streaming_clustering_spark import session
 from spark_streaming_clustering_spark.operators.registry import QUERIES
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -88,3 +89,40 @@ def test_get_spark_is_the_only_session_builder():
         str(p.relative_to(ROOT)) for p in sources if "SparkSession.builder" in p.read_text()
     )
     assert users == ["spark_streaming_clustering_spark/session.py"]
+
+
+@pytest.mark.parametrize(
+    "master, cpus, expected",
+    [
+        (None, None, (f"local[{session.DEFAULT_CPUS}]", session.DEFAULT_CPUS)),
+        (None, 3, ("local[3]", 3)),
+        ("local[4]", None, ("local[4]", 4)),
+        ("local[4,2]", None, ("local[4,2]", 4)),
+        ("local[4]", 2, ("local[4]", 2)),
+        ("local[*]", None, ("local[*]", session.DEFAULT_CPUS)),
+        ("local[*,3]", None, ("local[*,3]", session.DEFAULT_CPUS)),
+        ("local", None, ("local", session.DEFAULT_CPUS)),
+        ("local-cluster[2,1,1024]", None, ("local-cluster[2,1,1024]", session.DEFAULT_CPUS)),
+        ("spark://host:7077", None, ("spark://host:7077", session.DEFAULT_CPUS)),
+    ],
+)
+def test_master_passes_through_and_only_local_n_sets_cpus(master, cpus, expected):
+    """Every valid master is passed through verbatim; only ``local[N]``
+    and ``local[N,F]`` size the session by their thread count."""
+    assert session._master_and_cpus(master, cpus) == expected
+
+
+def test_driver_memory_default_is_half_of_ram_at_most_48g(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = 4096
+
+    def host(gib):
+        pages = gib * (1 << 30) // page
+        return lambda name: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[name]
+
+    monkeypatch.setattr(session.os, "sysconf", host(16))
+    assert session._driver_memory() == "8192m"
+    monkeypatch.setattr(session.os, "sysconf", host(512))
+    assert session._driver_memory() == "49152m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_memory() == "3g"
