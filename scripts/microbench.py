@@ -15,8 +15,12 @@ result plan where the key is a single lazy plan) to
 Each sample records, next to its wall time and job count, the driver's
 own Python CPU (``py_cpu_s``, user + system from ``getrusage``) and the
 py4j commands it sent to the JVM (``py4j_calls``), so driver chatter
-shows up beside the Spark-side work.  ``build_jobs`` counts the jobs
-that ran while the key only BUILT its DataFrame, before the noop force
+shows up beside the Spark-side work.  ``compiles`` counts the generated
+classes Janino compiled during the sample (the delta of the driver
+JVM's ``CodegenMetrics.METRIC_COMPILATION_TIME`` count, which on a
+local master includes the task threads): 0 on a warm call whose plans
+all hit the codegen class cache.  ``build_jobs`` counts the jobs that
+ran while the key only BUILT its DataFrame, before the noop force
 (eager work in a builder: layout writes, driver-paced loops, schema
 inference); ``jobs`` counts build plus execution.
 """
@@ -81,6 +85,8 @@ def main() -> None:
     _force(spark.range(256).repartition(32).mapInPandas(lambda it: it, "id long"))
 
     sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_time = codegen.METRIC_COMPILATION_TIME()
 
     def _group_jobs(grp: str) -> int:
         # job starts reach the status store through the listener bus
@@ -104,10 +110,12 @@ def main() -> None:
         build_jobs: list[int] = []
         py_cpu_s: list[float] = []
         py4j_calls: list[int] = []
+        compiles: list[int] = []
         st0 = _steal()
         for i in range(args.n):
             build_grp, force_grp = f"mb_{key}_{i}_build", f"mb_{key}_{i}_force"
             sc.setJobGroup(build_grp, f"microbench:{key}")
+            compiles0 = compile_time.getCount()
             calls0, cpu0, t0 = _PY4J_CALLS, _py_cpu_s(), time.monotonic()
             df = QUERIES[key](spark, args.sf_dir)
             sc.setJobGroup(force_grp, f"microbench:{key}")
@@ -115,6 +123,7 @@ def main() -> None:
             samples.append(round(time.monotonic() - t0, 3))
             py_cpu_s.append(round(_py_cpu_s() - cpu0, 3))
             py4j_calls.append(_PY4J_CALLS - calls0)
+            compiles.append(compile_time.getCount() - compiles0)
             build_jobs.append(_group_jobs(build_grp))
             jobs_per_sample.append(build_jobs[-1] + _group_jobs(force_grp))
         st1 = _steal()
@@ -122,13 +131,13 @@ def main() -> None:
         njobs = jobs_per_sample[-1] if jobs_per_sample else None
         out[key] = {"median": med, "samples": samples, "jobs": njobs,
                     "jobs_per_sample": jobs_per_sample, "build_jobs": build_jobs,
-                    "py_cpu_s": py_cpu_s, "py4j_calls": py4j_calls,
+                    "py_cpu_s": py_cpu_s, "py4j_calls": py4j_calls, "compiles": compiles,
                     "steal_ticks": (st1 - st0) if st0 is not None else None}
         print(
             f"{key}: median={med} jobs={njobs} steal={out[key]['steal_ticks']}"
             f" samples={samples} jobs_per_sample={jobs_per_sample}"
             f" build_jobs={build_jobs}"
-            f" py_cpu_s={py_cpu_s} py4j_calls={py4j_calls}",
+            f" py_cpu_s={py_cpu_s} py4j_calls={py4j_calls} compiles={compiles}",
             flush=True,
         )
         if args.plans:

@@ -196,7 +196,7 @@ def main() -> int:
         only = set(args.only.split(","))
         keys = [k for k in keys if k in only]
 
-    spark = get_spark("selfcheck", cpus=16, extra_conf={"spark.driver.memory": "16g"})
+    spark = get_spark("selfcheck", cpus=16)
     con = duck_con(args.sf_dir)
 
     out, n_bad = {}, 0

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Single place where execution configuration lives so tests, the driver
-contract (``__spark_entry__``) and ``bench.py`` all run with the same,
-scale-aware settings.
+Single place where execution configuration lives so tests,
+``bench.py``, perfbench, the scripts and the CLI all run with the same,
+scale-aware settings.  The driver contract (``__spark_entry__.entry``)
+is handed the caller's own session, so none of these pins reach it.
 
 Design notes for cluster scale (the real target is ~100 TB on O(1000)
 executors; local[32] only verifies correctness):
@@ -19,6 +20,12 @@ executors; local[32] only verifies correctness):
   and costs driver CPU, py4j round trips and memory on every ``Column``
   built.  ``extra_conf`` can turn it back on, but only for the first
   session of a process (PySpark reads the flag once per process).
+* Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``)
+  holds 8192 classes, not 100: the engine's working sets are larger, so
+  at 100 the LRU cycles and repeated plans pay Janino compilation again.
+  More compiled classes stay live (measured at the pin).  It is a static
+  conf read once per JVM, so ``extra_conf`` can resize it only in a
+  JVM's first session.
 """
 
 from __future__ import annotations
@@ -111,6 +118,21 @@ def get_spark(
         # per process at the first Column built under an active session,
         # so re-enabling it via extra_conf only works before that point.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Every generated class (whole-stage code, projections,
+        # predicates, orderings) is compiled by Janino and kept in a
+        # JVM-wide LRU cache of this many entries (default 100).  Classes
+        # generated at sf0.01 (CodegenMetrics.METRIC_COMPILATION_TIME,
+        # pyspark 4.1.2, local[2], 4-core host): ~160 for perfbench's
+        # six-key mix, 4,435 for one pass over the 342 keys.  At 100
+        # every warm mix round compiled 144 classes again, ~1.9 s of
+        # task-thread CPU per round against ~0.7 s at 8192, where it
+        # compiles none; a surface pass compiled 6,194.  8192 still
+        # bounds the cache where a key's generated code changes from
+        # call to call (a second surface pass added 176 classes).  Cost
+        # after one surface pass: Metaspace 234 -> 267 MB, heap after GC
+        # 249 -> 370 MB.  Static conf: the cache is built once per JVM,
+        # so extra_conf can resize it only in the JVM's first session.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,11 +1,16 @@
-"""``session.get_spark`` is the one session factory, and its sessions run
-without PySpark's DataFrame call-site capture.
+"""``session.get_spark`` is the one session factory, its sessions run
+without PySpark's DataFrame call-site capture, and they compile each
+generated class once.
 
 With ``spark.python.sql.dataFrameDebugging.enabled`` on (PySpark's
 default), every ``F.col`` and ``Column`` method walks the Python stack,
 imports IPython and makes ~10 py4j round trips to label error contexts
 with a Python ``file:line``.  PySpark reads the flag once per process,
 so the IPython check runs in a fresh interpreter.
+
+Spark's generated-class cache holds 100 classes by default; perfbench's
+six-key mix alone generates ~160, so at that size every repeated round
+compiled its classes again with Janino.
 """
 
 from __future__ import annotations
@@ -19,11 +24,13 @@ import pyspark.errors.utils as pyspark_error_utils
 import pytest
 
 import spark_streaming_clustering_spark as package
+from perfbench.queries import KEYS as MIX
 from spark_streaming_clustering_spark import session
 from spark_streaming_clustering_spark.operators.registry import QUERIES
 
 ROOT = Path(__file__).resolve().parent.parent
 CAPTURE_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 
 def test_session_turns_call_site_capture_off(spark):
@@ -43,6 +50,26 @@ def test_building_a_key_captures_no_call_sites(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(pyspark_error_utils, "_capture_call_site", counted)
     QUERIES["flagship_revenue"](spark, sf_dir)
     assert calls == []
+
+
+def test_session_sizes_the_codegen_class_cache(spark):
+    assert spark.conf.get(CODEGEN_CACHE_CONF) == "8192"
+
+
+def test_repeated_mix_compiles_no_generated_class(spark, sf_dir):
+    """A second round over perfbench's six-key mix finds every generated
+    class in the cache: Janino compiles nothing (at 100 entries, ~120)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_time = codegen.METRIC_COMPILATION_TIME()
+
+    def mix_round():
+        for key in MIX:
+            QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    mix_round()
+    before = compile_time.getCount()
+    mix_round()
+    assert compile_time.getCount() - before == 0
 
 
 _PROBE = """
