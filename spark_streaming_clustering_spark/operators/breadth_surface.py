@@ -15,12 +15,16 @@ shapes) or a single hash/window exchange on the grouping key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, read_stable_parquet, register_views
+from ..sources.tables import (
+    derived_layout_path,
+    load_table,
+    read_stable_parquet,
+    register_views,
+    write_once,
+)
 from .registry import register
 
 # ==========================================================================
@@ -1095,20 +1099,7 @@ def range_partition_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # Key = (session, sf_dir, source fingerprint): app id isolates
-    # concurrent sessions, the orders.parquet size+mtime invalidates a
-    # stale layout if the fixture is regenerated (review finding, r4).
-    # derived_layout_path prunes dead-session siblings and atexit-cleans
-    # this session's copy (review finding, r5: appId keying otherwise
-    # leaks one parquet copy of orders per session).
-    from ..sources.tables import derived_layout_path
-
-    out = derived_layout_path(spark, "orders_by_price", sf_dir, "orders")
-    # Layout content is deterministic per sf, so write once per
-    # session/host and read back thereafter (the events_by_day_layout
-    # pattern) — plan-shape tests build every key and would otherwise
-    # pay the global sort + rewrite each time (review finding).
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def writer():
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -1118,13 +1109,18 @@ def range_partition_write(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Window.orderBy("o_totalprice", "o_orderkey")
             ),
         )
-        (
+        return (
             assigned.repartition("range_id")
             .sortWithinPartitions("o_totalprice", "o_orderkey")
-            .write.mode("overwrite")
-            .partitionBy("range_id")
-            .parquet(out)
+            .write.partitionBy("range_id")
         )
+
+    # Layout content is deterministic per sf, so write once per session
+    # and read back thereafter — plan-shape tests build every key and
+    # would otherwise pay the global sort + rewrite each time.
+    out = write_once(
+        derived_layout_path(spark, "orders_by_price", sf_dir, "orders"), writer
+    )
     return (
         read_stable_parquet(spark, out)
         .groupBy("range_id")

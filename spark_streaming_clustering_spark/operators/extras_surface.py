@@ -111,7 +111,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.tables import load_table, read_stable_parquet
+from ..sources.tables import (
+    derived_layout_path,
+    load_table,
+    read_stable_parquet,
+    write_once,
+)
 from .registry import register, register_plan_proxy
 from ._session_cache import session_cached
 
@@ -293,23 +298,15 @@ def _hll_daily_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+sf) per-(event_type, day) HLL sketches
     of user_id as a parquet table of BINARY sketch blobs — the
     materialized daily-rollup table a 100 TB deployment maintains so
-    distinct-count questions never rescan raw events.  Same
-    _SUCCESS-guarded write-once pattern as events_by_day_layout."""
-    import os
-
-    from ..sources.tables import derived_layout_path
-
-    out = derived_layout_path(spark, "hll_daily", sf_dir, "events")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .groupBy("event_type", F.to_date("ts").alias("day"))
-            .agg(F.hll_sketch_agg("user_id").alias("sk"))
-            .coalesce(1)  # metadata-sized output: #types x #days rows
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    return out
+    distinct-count questions never rescan raw events."""
+    return write_once(
+        derived_layout_path(spark, "hll_daily", sf_dir, "events"),
+        lambda: load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.hll_sketch_agg("user_id").alias("sk"))
+        .coalesce(1)  # metadata-sized output: #types x #days rows
+        .write,
+    )
 
 
 def hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -543,31 +540,23 @@ def _quantile_daily_layout(spark: SparkSession, sf_dir: str) -> str:
     quantile analogue of ``_hll_daily_layout``: a 100 TB deployment
     sketches each ingest partition once and answers later percentile
     rollups from stored bins (bounded by price-range/width per group,
-    metadata-sized), never rescanning raw facts.  Same _SUCCESS-guarded
-    write-once pattern."""
-    import os
-
-    from ..sources.tables import derived_layout_path
-
-    out = derived_layout_path(spark, "quantile_daily", sf_dir, "orders")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                F.col("o_orderstatus").alias("status"),
-                F.to_date("o_orderdate").alias("day"),
-                F.expr(
-                    f"cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-                    f" div {_QBIN_CENTS}"
-                ).alias("bin"),
-            )
-            .groupBy("status", "day", "bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .coalesce(1)  # bounded output: #status x #days x #bins rows
-            .write.mode("overwrite")
-            .parquet(out)
+    metadata-sized), never rescanning raw facts."""
+    return write_once(
+        derived_layout_path(spark, "quantile_daily", sf_dir, "orders"),
+        lambda: load_table(spark, sf_dir, "orders")
+        .select(
+            F.col("o_orderstatus").alias("status"),
+            F.to_date("o_orderdate").alias("day"),
+            F.expr(
+                f"cast(floor(o_totalprice * 100 + 0.5) as bigint)"
+                f" div {_QBIN_CENTS}"
+            ).alias("bin"),
         )
-    return out
+        .groupBy("status", "day", "bin")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .coalesce(1)  # bounded output: #status x #days x #bins rows
+        .write,
+    )
 
 
 _quantile_daily_layout.__doc__ = _quantile_daily_layout.__doc__.format(
@@ -1868,29 +1857,21 @@ def _ivm_cents() -> object:
 def _ivm_base_agg_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+sf) the maintained VIEW — per event_type
     (n, sum_cents) over the BASE slice of events — as a parquet table.
-    The _SUCCESS-guarded write-once pattern of ``_hll_daily_layout`` /
-    ``_quantile_daily_layout``: the point of IVM is that later delta
-    batches merge into this STORED state without rescanning the base."""
-    import os
-
-    from ..sources.tables import derived_layout_path
-
-    out = derived_layout_path(spark, "ivm_base_agg", sf_dir, "events")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .filter(F.col("event_id") % _IVM_INS_MOD != 0)
-            .select("event_type", _ivm_cents().alias("cents"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_base"),
-                F.sum("cents").cast("bigint").alias("sum_cents_base"),
-            )
-            .coalesce(1)  # bounded output: one row per event_type
-            .write.mode("overwrite")
-            .parquet(out)
+    The point of IVM is that later delta batches merge into this STORED
+    state without rescanning the base."""
+    return write_once(
+        derived_layout_path(spark, "ivm_base_agg", sf_dir, "events"),
+        lambda: load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") % _IVM_INS_MOD != 0)
+        .select("event_type", _ivm_cents().alias("cents"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_base"),
+            F.sum("cents").cast("bigint").alias("sum_cents_base"),
         )
-    return out
+        .coalesce(1)  # bounded output: one row per event_type
+        .write,
+    )
 
 
 def agg_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6433,21 +6414,15 @@ def _jivm_cents() -> object:
 def _jivm_base_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+sf) the maintained JOIN-AGGREGATE view —
     per (c_mktsegment, order year) (n, sum_cents) over BASE orders ⋈
-    BASE customers — as parquet (the ``_ivm_base_agg_layout``
-    write-once pattern)."""
-    import os
-
-    from ..sources.tables import derived_layout_path
-
-    out = derived_layout_path(spark, "jivm_base", sf_dir, "orders")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    BASE customers — as parquet."""
+    def writer():
         o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderkey") % _JIVM_O_MOD != 0
         )
         c = load_table(spark, sf_dir, "customer").filter(
             F.col("c_custkey") % _JIVM_C_MOD != 0
         )
-        (
+        return (
             o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
             .select(
                 "c_mktsegment",
@@ -6460,10 +6435,12 @@ def _jivm_base_layout(spark: SparkSession, sf_dir: str) -> str:
                 F.sum("cents").cast("bigint").alias("sum_cents_base"),
             )
             .coalesce(1)  # bounded output: #segments x #years rows
-            .write.mode("overwrite")
-            .parquet(out)
+            .write
         )
-    return out
+
+    return write_once(
+        derived_layout_path(spark, "jivm_base", sf_dir, "orders"), writer
+    )
 
 
 def join_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.tables import load_table, read_stable_parquet
+from ..sources.tables import (
+    derived_layout_path,
+    load_table,
+    read_stable_parquet,
+    write_once,
+)
 from .registry import register
 
 # ==========================================================================
@@ -356,20 +361,21 @@ def merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     not table size.  The full-outer join inside the rewrite is
     key-partitioned; nothing driver-side but the ≤8-row bucket list.
     """
-    from ..sources.tables import derived_layout_path
-
     base = derived_layout_path(spark, "merge_tbl", sf_dir, "customer")
     v1, v2 = os.path.join(base, "v1"), os.path.join(base, "v2")
 
-    tgt0 = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("acctbal_cents"),
-        "c_mktsegment",
-        (F.col("c_custkey") % _MERGE_BUCKETS).alias("bkt"),
-    )
     # v1 snapshot: written once per (session, sf, fixture-fingerprint)
-    if not os.path.exists(os.path.join(v1, "_SUCCESS")):
-        tgt0.write.mode("overwrite").partitionBy("bkt").parquet(v1)
+    write_once(
+        v1,
+        lambda: load_table(spark, sf_dir, "customer")
+        .select(
+            "c_custkey",
+            F.round(F.col("c_acctbal") * 100).cast("bigint").alias("acctbal_cents"),
+            "c_mktsegment",
+            (F.col("c_custkey") % _MERGE_BUCKETS).alias("bkt"),
+        )
+        .write.partitionBy("bkt"),
+    )
 
     src_base = (
         load_table(spark, sf_dir, "orders")

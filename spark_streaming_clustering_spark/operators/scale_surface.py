@@ -25,6 +25,7 @@ from ..sources.tables import (
     load_table,
     read_stable_parquet,
     scratch_dir,
+    write_once,
 )
 from .registry import register
 
@@ -177,27 +178,14 @@ register(
 def events_by_day_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per session+sf) and return the path of the
     date-partitioned events layout shared by partitioned_write_prune
-    and dynamic_partition_pruning — single owner of the path scheme
-    and the _SUCCESS freshness check, so the two keys cannot drift
-    onto different layouts (review finding).
-
-    Cache key = (session, sf_dir, source fingerprint): the app id keeps
-    concurrent sessions off each other's directories, and the
-    events.parquet size+mtime fingerprint invalidates the layout if the
-    fixture is regenerated in place (review finding, round 4).
-    Stale siblings from dead sessions are pruned and this session's
-    path is atexit-cleaned (derived_layout_path; review finding r5:
-    the appId keying otherwise leaks one copy per session)."""
-    out = derived_layout_path(spark, "events_by_day", sf_dir, "events")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .withColumn("event_date", F.to_date("ts"))
-            .write.partitionBy("event_date")
-            .mode("overwrite")
-            .parquet(out)
-        )
-    return out
+    and dynamic_partition_pruning — single owner of the layout, so the
+    two keys cannot drift onto different ones."""
+    return write_once(
+        derived_layout_path(spark, "events_by_day", sf_dir, "events"),
+        lambda: load_table(spark, sf_dir, "events")
+        .withColumn("event_date", F.to_date("ts"))
+        .write.partitionBy("event_date"),
+    )
 
 
 def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

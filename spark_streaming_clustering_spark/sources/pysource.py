@@ -41,13 +41,7 @@ class PointsReader(DataSourceReader):
         per = self.n // self.parts
         lo = i * per
         hi = self.n if i == self.parts - 1 else lo + per
-        for k in range(lo, hi):
-            # x_k, y_k in [0, 1): LCG over the even/odd index stream.
-            # Division by 2^31 is exact in binary64, so every engine
-            # computing this formula gets bit-identical doubles.
-            x = ((LCG_A * (2 * k) + LCG_B) % LCG_M) / LCG_M
-            y = ((LCG_A * (2 * k + 1) + LCG_B) % LCG_M) / LCG_M
-            yield (k, x, y)
+        yield from _lcg_rows(lo, hi)
 
 
 class PointsSource(DataSource):
@@ -65,6 +59,9 @@ class PointsSource(DataSource):
 
 
 def _lcg_rows(lo: int, hi: int) -> list[tuple]:
+    # x_k, y_k in [0, 1): LCG over the even/odd index stream.  Division
+    # by 2^31 is exact in binary64, so every engine computing this
+    # formula gets bit-identical doubles.
     return [
         (
             k,

@@ -25,8 +25,9 @@ second type mapper, drifting from Spark on NANOS, INT96 and NTZ.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql.types import StructType
 
 from ..operators._session_cache import session_cached
@@ -218,6 +219,17 @@ def derived_layout_path(
         if sib != out and sib_re.match(name):
             shutil.rmtree(sib, ignore_errors=True)
     return _track_tmp(out)
+
+
+def write_once(path: str, writer: Callable[[], DataFrameWriter]) -> str:
+    """Write a derived parquet layout at ``path`` unless a completed
+    write (its ``_SUCCESS`` marker) is already there; return ``path``.
+    ``writer`` builds the ``DataFrameWriter`` (partitioning, coalescing)
+    and is only called when the layout is missing, so a warm call
+    builds no plan."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        writer().mode("overwrite").parquet(path)
+    return path
 
 
 def scratch_dir(prefix: str) -> str:

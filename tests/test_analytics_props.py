@@ -23,9 +23,7 @@ from spark_streaming_clustering_spark.operators.analytics_surface import (
 from spark_streaming_clustering_spark.operators.pipeline_surface import (
     dedup_ngram_jaccard,
 )
-from spark_streaming_clustering_spark.operators.registry import ORACLES
 from spark_streaming_clustering_spark.sources.tables import load_table
-from tests.util_oracle import compare, duck_con
 
 
 def test_funnel_is_monotone(spark, sf_dir):
@@ -564,20 +562,6 @@ def test_wsp_bellman_ford_converges_within_unroll():
 # --------------------------------------------------------------------------
 
 
-def test_wsp_oracle_compare(spark, sf_dir):
-    """Driver-shaped oracle compare for the weighted-shortest-path key."""
-    from spark_streaming_clustering_spark.operators.analytics_surface import (
-        graph_weighted_shortest_path,
-    )
-
-    compare(
-        graph_weighted_shortest_path(spark, sf_dir),
-        duck_con(sf_dir),
-        ORACLES["graph_weighted_shortest_path"],
-        "graph_weighted_shortest_path",
-    )
-
-
 SFS = ("sf0.001", "sf0.01", "sf0.1")
 
 
@@ -677,16 +661,13 @@ def test_msf_matches_exact_kruskal(spark, sf):
     assert got == _kruskal(_edges(sf)), sf
 
 
-def test_msf_oracle_compare(spark, sf_dir):
-    """Driver-shaped oracle compare (rows + schema + dtypes + values),
-    mirroring CORRECTNESS at the smoke fixture."""
+def test_grouped_map_normalize_singleton_group_is_null(spark, short_docs_dir):
+    """Singleton lang group: sample stddev undefined -> z is NULL (the SQL
+    semantics), not 0.0 (ADVICE r3)."""
     from spark_streaming_clustering_spark.operators.analytics_surface import (
-        boruvka_msf_trade,
+        grouped_map_normalize,
     )
 
-    compare(
-        boruvka_msf_trade(spark, sf_dir),
-        duck_con(sf_dir),
-        ORACLES["boruvka_msf_trade"],
-        "boruvka_msf_trade",
-    )
+    rows = {r.doc_id: r for r in grouped_map_normalize(spark, short_docs_dir).collect()}
+    assert rows[5].z is None
+    assert rows[0].z is not None  # the 5-doc en group normalizes fine

@@ -3,7 +3,6 @@ from __future__ import annotations
 import importlib
 
 import __spark_entry__ as entrymod
-from tests.util_oracle import compare, duck_con
 
 
 def test_entry_smoke(spark):
@@ -11,13 +10,6 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["r_name", "l_returnflag", "revenue", "n_items"]
-
-
-def test_flagship_vs_oracle(spark, sf_dir):
-    q = entrymod.queries()["flagship_revenue"]
-    sql = entrymod.oracle_sql()["flagship_revenue"]
-    con = duck_con(sf_dir)
-    compare(q(spark, sf_dir), con, sql, "flagship_revenue")
 
 
 def test_registry_consistency():

@@ -16,7 +16,7 @@ from spark_streaming_clustering_spark.operators.extras_surface import skyline_pa
 from spark_streaming_clustering_spark.operators.registry import ORACLES
 from spark_streaming_clustering_spark.plans import formatted_plan
 from spark_streaming_clustering_spark.sources.tables import load_table
-from tests.util_oracle import compare, duck_con
+from tests.util_oracle import duck_con
 
 
 def test_skyline_matches_bruteforce(spark, sf_dir):
@@ -3002,19 +3002,17 @@ def test_bitemporal_temporal_join_system_axis_is_load_bearing():
 
 
 def test_join_ivm_delta_self_consistency(spark, sf_dir):
-    """Every row's merged view equals the from-scratch recompute, the
+    """Every row's merged view equals the from-scratch recompute and the
     delta terms are non-empty (both fact- and dim-side inserts really
-    contribute), and the oracle compare mirrors CORRECTNESS."""
+    contribute)."""
     from spark_streaming_clustering_spark.operators.extras_surface import (
         join_ivm_delta,
     )
 
-    df = join_ivm_delta(spark, sf_dir)
-    rows = df.collect()
+    rows = join_ivm_delta(spark, sf_dir).collect()
     assert rows and all(r.ivm_equals_recompute for r in rows)
     assert any(r.n_delta > 0 for r in rows)
     assert all(r.n_after == r.n_base + r.n_delta for r in rows)
-    compare(df, duck_con(sf_dir), ORACLES["join_ivm_delta"], "join_ivm_delta")
 
 
 def test_spearman_matches_pandas_replication(spark, sf_dir):
@@ -3133,21 +3131,6 @@ def test_eqb_probe_naive_model_disproved(spark):
     assert any(ap[f"p{p}"] != exact[p] for p in exact)
 
 
-def test_eqb_oracle_compare(spark, sf_dir):
-    """Driver-shaped oracle compare (rows + schema + dtypes + values),
-    mirroring CORRECTNESS at the smoke fixture."""
-    from spark_streaming_clustering_spark.operators.extras_surface import (
-        exact_quantile_bisect,
-    )
-
-    compare(
-        exact_quantile_bisect(spark, sf_dir),
-        duck_con(sf_dir),
-        ORACLES["exact_quantile_bisect"],
-        "exact_quantile_bisect",
-    )
-
-
 # --------------------------------------------------------------------------
 # ols_normal_equations
 # --------------------------------------------------------------------------
@@ -3246,18 +3229,3 @@ def test_ols_probe_marginal_slope_model_disproved():
         joint_b1 = (1_000_000 * det1) // det  # positive here: // == div
         marginal_b1 = (1_000_000 * (n * s1y - s1 * sy)) // (n * s11 - s1 * s1)
         assert abs(joint_b1 - marginal_b1) > 10_000, sf  # > 0.01/char
-
-
-def test_ols_oracle_compare(spark, sf_dir):
-    """Driver-shaped oracle compare (rows + schema + dtypes + values),
-    mirroring CORRECTNESS at the smoke fixture."""
-    from spark_streaming_clustering_spark.operators.extras_surface import (
-        ols_normal_equations,
-    )
-
-    compare(
-        ols_normal_equations(spark, sf_dir),
-        duck_con(sf_dir),
-        ORACLES["ols_normal_equations"],
-        "ols_normal_equations",
-    )

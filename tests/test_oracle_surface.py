@@ -1,7 +1,7 @@
 """Every registered query key vs its DuckDB oracle at sf0.001.
 
-Local mirror of the driver's CORRECTNESS gate; keys without an oracle
-get the rows-only check.
+Runs ``tests.util_oracle.check_key``, the protocol scripts/selfcheck.py
+runs at sf0.01; keys without an oracle get the rows-only check.
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.util_oracle import compare, duck_con
+from tests.util_oracle import check_key, duck_con, passed
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -24,12 +24,8 @@ def con(sf_dir):
 
 @pytest.mark.parametrize("key", sorted(QUERIES))
 def test_query_vs_oracle(key, spark, sf_dir, con):
-    df = QUERIES[key](spark, sf_dir)
-    sql = ORACLES.get(key)
-    if sql is None:
-        assert len(df.collect()) >= 0  # rows-only contract
-        return
-    compare(df, con, sql, key)
+    rec = check_key(spark, con, QUERIES[key], ORACLES.get(key), sf_dir)
+    assert passed(rec), f"{key}: {rec['err']} ({rec})"
 
 
 @pytest.mark.parametrize("key", sorted(ORACLES))

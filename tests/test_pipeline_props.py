@@ -18,14 +18,14 @@ from spark_streaming_clustering_spark import operators as operators_pkg
 from spark_streaming_clustering_spark.operators.pipeline_surface import (
     SHARD_TOKEN_BUDGET,
     dedup_connected_components,
+    dedup_keep_best,
     dedup_minhash_lsh_capped,
     shard_by_token_budget,
     split_train_test,
+    text_quality_score,
 )
-from spark_streaming_clustering_spark.operators.registry import ORACLES
 from spark_streaming_clustering_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-from tests.util_oracle import compare, duck_con
 
 
 def test_split_partitions_the_corpus_and_is_stable(spark):
@@ -421,16 +421,54 @@ def test_snm_exact_ground_truth_equality(spark, sf):
     assert got == _ground_truth_pairs(sf), sf
 
 
-def test_snm_oracle_compare(spark, sf_dir):
-    """Driver-shaped oracle compare (rows + schema + dtypes + values),
-    mirroring CORRECTNESS at the smoke fixture."""
-    from spark_streaming_clustering_spark.operators.pipeline_surface import (
-        dedup_sorted_neighborhood,
+# --------------------------------------------------------------------------
+# short documents (``sequence(1, 0)`` is DESCENDING in Spark, so unguarded
+# shingle/gram builders emit spurious rows for docs with < k tokens and
+# throw INVALID_ARRAY_INDEX under ANSI mode); dedup_keep_best
+# --------------------------------------------------------------------------
+
+
+def test_shingles_empty_for_short_docs(spark, short_docs_dir):
+    from spark_streaming_clustering_spark.operators._text import _shingles
+
+    rows = _shingles(spark, short_docs_dir).collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append((r.pos, r.sh))
+    # docs 0-2 have < 3 tokens: NO shingles (not spurious [1,0] rows)
+    assert 0 not in by_doc and 1 not in by_doc and 2 not in by_doc, by_doc
+    assert by_doc[3] == [(1, "one two three")]
+    assert len(by_doc[4]) == 4  # 6 tokens -> 4 shingles
+
+
+def test_quality_repetition_short_docs_no_crash(spark, short_docs_dir):
+    """<2-token docs produce no grams and are excluded by the inner-join
+    semantics; nothing throws under ANSI mode."""
+    from spark_streaming_clustering_spark.operators.quality_surface import (
+        quality_repetition,
     )
 
-    compare(
-        dedup_sorted_neighborhood(spark, sf_dir),
-        duck_con(sf_dir),
-        ORACLES["dedup_sorted_neighborhood"],
-        "dedup_sorted_neighborhood",
-    )
+    out = {r.doc_id: r for r in quality_repetition(spark, short_docs_dir).collect()}
+    # only docs with BOTH 2-grams and 3-grams survive (oracle inner join)
+    assert set(out) == {3, 4}, out
+    assert out[3].n2 == 2 and out[4].n2 == 5
+
+
+def test_dedup_keep_best_picks_max_quality_member(spark):
+    """The kept doc is a real member of its component with the maximal
+    (integer-micro) quality; component membership totals agree with CC."""
+    comp = {
+        r.doc_id: r.component
+        for r in dedup_connected_components(spark, SF_SMOKE).collect()
+    }
+    qual = {
+        r.doc_id: r.quality_micro
+        for r in text_quality_score(spark, SF_SMOKE).collect()
+    }
+    kept = dedup_keep_best(spark, SF_SMOKE).collect()
+    assert sum(r.n_members for r in kept) == len(comp)
+    for r in kept:
+        assert comp[r.kept_doc] == r.component
+        members = [d for d, c in comp.items() if c == r.component]
+        assert len(members) == r.n_members
+        assert r.kept_quality_micro == max(qual[d] for d in members)

@@ -1,28 +1,24 @@
-"""Meta-tests for the correctness checker itself (scripts/selfcheck.py).
+"""Meta-tests for the one oracle check (tests.util_oracle.check_key).
 
 A checker that silently passes on wrong results is worse than no
 checker; these tests feed check_key deliberately-broken pairs and
-assert each gate trips.  (Motivated by the round-3 incident where 12
+assert each gate trips, and deliberately-equivalent pairs and assert
+each tolerance holds.  (Motivated by the round-3 incident where 12
 dtype-drifted keys shipped as 'self-green' because the then-checker
 compared at the Python-value layer.)"""
 
 from __future__ import annotations
 
-import importlib.util
+import ast
+import glob
 import os
-import sys
 
 import pytest
 
-_SC = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "scripts", "selfcheck.py")
-spec = importlib.util.spec_from_file_location("selfcheck_mod", _SC)
-sc = importlib.util.module_from_spec(spec)
-sys.modules["selfcheck_mod"] = sc
-spec.loader.exec_module(sc)
+from tests.conftest import SF_ORACLE
+from tests.util_oracle import check_key, duck_con
 
-from tests.conftest import SF_ORACLE  # noqa: E402
-from tests.util_oracle import duck_con  # noqa: E402
+_HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -31,8 +27,7 @@ def con():
 
 
 def _run(spark, con, fn, sql):
-    os.environ["SELFCHECK_SF_DIR"] = SF_ORACLE
-    return sc.check_key(spark, con, fn, sql, "meta")
+    return check_key(spark, con, fn, sql, SF_ORACLE)
 
 
 def test_checker_passes_on_identical(spark, con):
@@ -74,6 +69,32 @@ def test_checker_trips_on_value_drift(spark, con):
     assert "mismatch" in (rec["err"] or "")
 
 
+@pytest.mark.parametrize(
+    "spark_sql, duck_sql, type_match, hash_match",
+    [
+        # Floats compare unrounded: both print 0.123456789 under ".9g".
+        pytest.param("SELECT CAST(0.1234567891 AS DOUBLE) AS a",
+                     "SELECT 0.1234567892::DOUBLE AS a", True, False,
+                     id="tenth_significant_digit"),
+        # Uncast SUM(<integer>) is HUGEINT -> pandas float64 vs Spark
+        # int64: identical values, the drift round 3 shipped 12 times.
+        pytest.param("SELECT CAST(5 AS BIGINT) AS s",
+                     "SELECT SUM(1) AS s FROM region", False, False,
+                     id="uncast_hugeint_oracle"),
+        pytest.param("SELECT CAST(5 AS BIGINT) AS s",
+                     "SELECT CAST(SUM(1) AS BIGINT) AS s FROM region", True, True,
+                     id="cast_bigint_oracle"),
+        # DATE vs TIMESTAMP midnight hash-PASSED in CORRECTNESS_r03.
+        pytest.param("SELECT DATE '2024-01-03' AS d",
+                     "SELECT TIMESTAMP '2024-01-03 00:00:00' AS d", True, True,
+                     id="date_vs_timestamp"),
+    ],
+)
+def test_checker_gate(spark, con, spark_sql, duck_sql, type_match, hash_match):
+    rec = _run(spark, con, lambda s, d: s.sql(spark_sql), duck_sql)
+    assert (rec["type_match"], rec["hash_match"]) == (type_match, hash_match), rec
+
+
 def test_checker_tolerates_int_width_drift(spark, con):
     """int32 vs int64 PASSES (driver-calibrated equivalence; r3
     evidence: ntile/ann rank keys hash-passed with width drift)."""
@@ -92,3 +113,23 @@ def test_checker_rejects_list_cells(spark, con):
         _run(spark, con,
              lambda s, d: s.sql("SELECT array(1, 2) AS a"),
              "SELECT [1, 2] AS a")
+
+
+def test_one_oracle_comparator():
+    """selfcheck runs the very function the test suite runs, and no
+    other module under tests/ defines an oracle comparator beside
+    util_oracle's."""
+    import scripts.selfcheck as selfcheck
+    import tests.util_oracle as util_oracle
+
+    assert selfcheck.check_key is util_oracle.check_key
+    comparator = {"check_key", "compare", "_norm", "_cell", "_frame_rows",
+                  "_dtype_canon"}
+    assert not {"compare", "_norm"} & set(vars(util_oracle))
+    for path in glob.glob(os.path.join(_HERE, "tests", "*.py")):
+        if os.path.basename(path) == "util_oracle.py":
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        defs = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+        assert not defs & comparator, f"{path} defines an oracle comparator"
